@@ -14,8 +14,18 @@ import org.apache.spark.sql.SparkSession
   * stand — every query still gets a timing row, and the artifact always
   * lands inside the driver's window. */
 object Bench {
+  /** SPARK_GRAFT_ONLY=q1,x29,... restricts a run to those SparkEntry names
+    * (local iteration on a regression); unset = every query, the full
+    * battery. [[Verify]] reads the same variable. */
+  def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .forall(_.split(",").map(_.trim).contains(name))
+
+  /** The session [[Verify]] checks and the battery times: local[cpus],
+    * SPARK_GRAFT_CPUS if set, else every core of this host. */
   def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // Scale-aware shuffle sizing (the partitions-∝-input rule): a fixed
     // shuffle.partitions is right only at one data scale — the round-7
     // 10× runs measured ~10% excess on the corpus-linear tail (x45) from
@@ -51,12 +61,7 @@ object Bench {
     val deadlineS = sys.env.get("SPARK_GRAFT_DEADLINE_S")
       .flatMap(_.toDoubleOption).getOrElse(2400.0)
     def elapsedS: Double = (System.nanoTime() - started) / 1e9
-    // SPARK_GRAFT_ONLY=q1,x29,... times a subset (local iteration on a
-    // regression); unset = the full battery the driver records
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(selected)
     // The dedup pipelines localCheckpoint intermediate frames; their RDD
     // blocks outlive the query's action and would accumulate in executor
     // storage memory across a 50+-query battery (measured: a 2.6× battery

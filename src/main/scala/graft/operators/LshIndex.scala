@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** PERSISTED MinHash-LSH band/signature index — the stored-form twin of
-  * [[TextDedup.minhashNearDupsIncrementalUnbounded]], and the text-dedup
-  * analog of [[Similarity.buildIvfIndex]]'s cell-partitioned ANN index: a
+/** PERSISTED MinHash-LSH band/signature index — the stored-index column
+  * of [[TextDedup]]'s one MinHash pipeline (the matrix at the head of its
+  * MinHash section), and the text-dedup analog of
+  * [[Similarity.buildIvfIndex]]'s cell-partitioned ANN index: a
   * continuous dedup-mining service builds the index once, and every later
   * ingest batch PROBES it — the corpus's signatures and band keys are
   * computed at build/append time and never again, and a probe reads only
@@ -179,7 +180,8 @@ object LshIndex {
     * index state). Per-batch signature work is the batch's reps only;
     * the stored band read prunes to the probe's collided buckets (the
     * `bucket IN` filter binds to the directory key; the bucket-id collect
-    * is bounded by n_buckets, never by data). Equals fresh from-docs
+    * is bounded by n_buckets, never by data). Verification and expansion
+    * are the pipeline's own stages, so this equals fresh from-docs
     * incremental mining exactly (law in TextDedupSpec). */
   def probe(spark: SparkSession, indexPath: String, newDocs: DataFrame,
             threshold: Double): DataFrame = {
@@ -209,57 +211,14 @@ object LshIndex {
       .collect().map(_.getLong(0)) // ≤ n_buckets by construction
     val stored = spark.read.parquet(bandsP(indexPath))
       .filter(col("bucket").isin(wanted: _*)) // binds to the directory key
-    val cand = probeBands.select(col("key"), col("rep").as("ra"), col("n").as("na"))
-      .join(stored.select(col("key"), col("rep").as("rb"), col("n").as("nb")), Seq("key"))
-      .filter(col("ra") =!= col("rb"))
-      .filter(least(col("na"), col("nb")).cast(DoubleType) >=
-        lit(threshold) * greatest(col("na"), col("nb")).cast(DoubleType))
-      .select(least(col("ra"), col("rb")).as("ra"),
-              greatest(col("ra"), col("rb")).as("rb")).distinct()
-    // exact verification once per distinct candidate pair, from the
-    // STORED canonical token arrays
-    val repToks = reps.select(col("rep"), col("toks"))
-    val verified = cand
-      .join(repToks.select(col("rep").as("ra"), col("toks").as("a_toks")), "ra")
-      .join(repToks.select(col("rep").as("rb"), col("toks").as("b_toks")), "rb")
-      .withColumn("inter", size(array_intersect(col("a_toks"), col("b_toks"))).cast(DoubleType))
-      .withColumn("jacc", col("inter") /
-        (size(col("a_toks")) + size(col("b_toks")) - col("inter")))
-      .filter(col("jacc") >= threshold)
-      .select(col("ra"), col("rb"), col("jacc"))
-    // doc-level expansion over the STORED members (which include the
-    // batch — append ran first), then the new-touching filter: the same
-    // shape as the from-docs incremental form
-    val m = spark.read.parquet(membersP(indexPath))
-    val g = reps.select(col("rep"), col("setid"))
-    val repPairs = verified
-      .join(g.select(col("rep").as("ra"), col("setid").as("a_set")), "ra")
-      .join(g.select(col("rep").as("rb"), col("setid").as("b_set")), "rb")
-      .select(col("a_set"), col("b_set"), col("jacc"))
-    val cross = m.select(col("doc_id").as("da"), col("setid").as("a_set"))
-      .join(repPairs, "a_set")
-      .join(m.select(col("doc_id").as("db"), col("setid").as("b_set")), "b_set")
-      .select(least(col("da"), col("db")).as("a_id"),
-              greatest(col("da"), col("db")).as("b_id"), col("jacc"))
-    // intra exactly-once (both-new pairs keep only their a<b orientation;
-    // old-new pairs appear once) — removes the full-pair-set distinct()
-    // the union used to pay (same restructure as the from-docs miners,
-    // r11); newMembers is batch-bounded, so the broadcasts are hints the
-    // incremental contract licenses
-    val intra = m.select(col("doc_id").as("a_id"), col("setid"))
-      .join(broadcast(newIds.select(col("doc_id").as("a_id"), lit(1).as("a_new"))),
-        Seq("a_id"), "left")
-      .join(broadcast(newMembers.select(col("doc_id").as("b_id"), col("setid"))), "setid")
-      .filter(col("a_id") =!= col("b_id") &&
-        (col("a_new").isNull || col("a_id") < col("b_id")))
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-              greatest(col("a_id"), col("b_id")).as("b_id"), lit(1.0).as("jacc"))
-    val pairs = cross.unionByName(intra)
-    val aNew = broadcast(newIds.select(col("doc_id").as("a_id"), lit(1).as("a_new")))
-    val bNew = broadcast(newIds.select(col("doc_id").as("b_id"), lit(1).as("b_new")))
-    pairs.join(aNew, Seq("a_id"), "left").join(bNew, Seq("b_id"), "left")
-      .filter(col("a_new").isNotNull || col("b_new").isNotNull)
-      .select(col("a_id"), col("b_id"), col("jacc"))
+    // verification reads the STORED canonical token arrays; expansion
+    // runs over the STORED members, which include the batch (append ran
+    // first)
+    val verified = TextDedup.verifyBandPairs(probeBands, stored, reps, "rep", threshold,
+      probe = true)
+    TextDedup.expandPairs(spark.read.parquet(membersP(indexPath)), "setid",
+      TextDedup.relabel(verified, reps, "rep", "setid"),
+      Some(TextDedup.Batch(newIds, newMembers)))
   }
 
   /** Compact the index's three tables in place — the maintenance pass a

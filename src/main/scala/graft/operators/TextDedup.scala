@@ -107,7 +107,8 @@ object TextDedup {
     val hashed = docs.select(col("doc_id"), col("text"), sha2(col("text"), 256).as("h"))
     val reps = hashed.groupBy(col("h")).agg(min(col("doc_id")).as("rep_id"))
     // read by both expansion sides + intra: materialize once (same
-    // reasoning as minhashNearDups.members / the shingle table below).
+    // reasoning as the MinHash members in [[identities]] / the shingle
+    // table below).
     // reps is O(distinct content) — never hint-broadcast; AQE converts the
     // shuffle join to a broadcast at runtime when the frame is actually
     // small, and degrades to a plain shuffle join at corpus scale.
@@ -117,7 +118,7 @@ object TextDedup {
     val repDocs = hashed.join(reps, hashed("doc_id") === reps("rep_id"))
       .select(col("doc_id"), col("text"))
     // the distinct shingle table feeds three consumers (sizes + both join
-    // sides): materialize once, same reasoning as minhashNearDups.members
+    // sides): materialize once, same reasoning as [[identities]]
     val sh = shingles(repDocs, n).localCheckpoint(true)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     val inter = maxShingleDf match {
@@ -152,17 +153,10 @@ object TextDedup {
       .join(sizes.select(col("doc_id").as("rb"), col("nsh").as("nb")), "rb")
       .withColumn("jacc", col("c").cast(DoubleType) / (col("na") + col("nb") - col("c")))
       .filter(col("jacc") >= threshold)
-      .select(col("ra"), col("rb"), col("jacc"))
-    val cross = members.select(col("doc_id").as("da"), col("rep_id").as("ra"))
-      .join(repPairs, "ra")
-      .join(members.select(col("doc_id").as("db"), col("rep_id").as("rb")), "rb")
-      .select(least(col("da"), col("db")).as("a_id"),
-              greatest(col("da"), col("db")).as("b_id"), col("jacc"))
-    val intra = members.select(col("doc_id").as("a_id"), col("rep_id"))
-      .join(members.select(col("doc_id").as("b_id"), col("rep_id")), "rep_id")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(1.0).as("jacc"))
-    cross.unionByName(intra) // identical texts are Jaccard-1 by definition
+      .select(col("ra").as("a_rep_id"), col("rb").as("b_rep_id"), col("jacc"))
+    // identical texts are Jaccard-1 by definition: the MinHash expander's
+    // intra pairs
+    expandPairs(members, "rep_id", repPairs, batch = None)
   }
 
   // ---- asymmetric containment (sub-document duplication) ---------------
@@ -234,7 +228,68 @@ object TextDedup {
     cross.unionByName(intra) // identical texts contain each other fully
   }
 
-  // ---- MinHash + banded LSH -------------------------------------------
+  // ---- MinHash + banded LSH near-dup pipeline --------------------------
+
+  /** Every MinHash near-dup entry point runs ONE pipeline, [[pipeline]],
+    * over a matrix of set identity × call form:
+    *
+    * {{{
+    *           | batch                     | incremental (newIds)                | stored index
+    *   mask    | minhashNearDups           | minhashNearDupsIncremental          | —
+    *           | nearDupClusters           | nearDupClustersIncremental          |
+    *   setid   | minhashNearDupsUnbounded  | minhashNearDupsIncrementalUnbounded | LshIndex.probe
+    *           | nearDupClustersUnbounded  | nearDupClustersIncrementalUnbounded |
+    * }}}
+    *
+    * Set identity (the `key` column):
+    *   - `mask`: the [[tokenMasks]] bitmask, so |vocab| <= 63. Each banded
+    *     row carries its mask, so verification (two popcounts) runs INSIDE
+    *     the band self-join's stage and sub-threshold candidates (the bulk:
+    *     the 32×8 S-curve admits pairs from ~0.65 up) die before any
+    *     shuffle — measured 3.4× faster than verify-after-dedup at sf0.1.
+    *     The faster form wherever it applies.
+    *   - `setid`: sha256 of the sorted distinct-token list ([[setMembers]]),
+    *     no vocabulary bound (every real corpus). Token arrays cannot ride
+    *     the ×NumBands explode, so band rows carry only (key, rep, set
+    *     size): the band join applies the sound size-ratio prefilter, and
+    *     `array_intersect` verifies each DISTINCT candidate pair once.
+    *     The oracle cross-checks both identities equal where both apply.
+    *
+    * Call form:
+    *   - batch: every pair of `docs`;
+    *   - incremental: only pairs touching a NEW doc, mined over existing ∪
+    *     new. The band self-join degenerates to a PROBE — only bands of
+    *     groups holding a new doc sit on the left, so join work ∝ the
+    *     batch's collisions — and pairs are emitted exactly once. Folding a
+    *     corpus through it in arrival order yields the batch answer, each
+    *     pair surfacing when its later member arrives (law in
+    *     TextDedupSpec). Masks are recomputed over the union vocabulary per
+    *     call; Jaccard is set-based, so vocabulary growth changes nothing;
+    *   - stored index ([[LshIndex]], setid only): the incremental form
+    *     whose corpus side (members, rep token arrays, band keys) is read
+    *     from the persisted index instead of re-derived from docs.
+    *
+    * Stages, each defined once:
+    *   1. [[identities]]: members keyed by identity, one group (rep = min
+    *      doc_id) per distinct set. Heavily duplicated corpora put
+    *      thousands of identical sets in one LSH bucket, making the band
+    *      self-join quadratic in cluster size (observed: 450 s at sf0.1),
+    *      so everything after runs over reps — LSH cost is linear in
+    *      DISTINCT content;
+    *   2. verified identity pairs: [[minhashVerifiedRepPairs]] (mask) or
+    *      [[unboundedRepPairs]] → [[verifyBandPairs]] (setid; the stored
+    *      index calls the latter directly);
+    *   3. [[expandPairs]]: identity pairs → doc pairs, plus the jacc-1
+    *      pairs inside each group;
+    *   4. [[labelClusters]]: components over the REP graph, expanded to
+    *      members; [[foldLabels]] is the incremental fold.
+    *
+    * Broadcast discipline: groups, members and verified pairs are
+    * O(distinct corpus) or O(near-dup pairs) — a 100 TB crawl has 1e8–1e9
+    * true near-dup pairs — so their joins carry no hint (AQE broadcasts
+    * at runtime when they measure small). `newIds` is batch-bounded by the
+    * incremental contract (one ingest batch, never corpus-sized), so its
+    * broadcasts are the only hinted ones. */
 
   /** Fixed permutation family (a_i*h + b_i) mod P31, deterministically
     * generated (LCG, seed 42) so signatures are reproducible run-to-run.
@@ -287,36 +342,106 @@ object TextDedup {
         expr(s"xxhash64(band, cast(slice(sig, band * $rows + 1, $rows) as string))").as("key"): _*)
   }
 
-  /** LSH candidate pairs, deduplicated (inspection API — the mining path
-    * below verifies inside the band join instead of materializing these). */
-  def minhashCandidates(docs: DataFrame): DataFrame = {
-    val bands = bandKeys(minhashSignatures(docs), Nil)
-    val l = bands.select(col("key"), col("doc_id").as("a_id"))
-    val r = bands.select(col("key"), col("doc_id").as("b_id"))
-    l.join(r, Seq("key")).filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
+  /** Near-dup doc pairs (a_id < b_id, jacc) with set-Jaccard >= threshold,
+    * mask identity; the matrix above places each entry point. */
+  def minhashNearDups(docs: DataFrame, threshold: Double): DataFrame =
+    pipeline(docs, threshold, masked = true, newIds = None, clusters = false)
+
+  def minhashNearDupsUnbounded(docs: DataFrame, threshold: Double): DataFrame =
+    pipeline(docs, threshold, masked = false, newIds = None, clusters = false)
+
+  /** The pairs of existing ∪ new that involve at least one doc of `newDocs`. */
+  def minhashNearDupsIncremental(existingDocs: DataFrame, newDocs: DataFrame,
+                                 threshold: Double): DataFrame =
+    pipeline(arrivals(existingDocs, newDocs), threshold, masked = true,
+      newIds = Some(newDocs.select(col("doc_id"))), clusters = false)
+
+  def minhashNearDupsIncrementalUnbounded(existingDocs: DataFrame, newDocs: DataFrame,
+                                          threshold: Double): DataFrame =
+    pipeline(arrivals(existingDocs, newDocs), threshold, masked = false,
+      newIds = Some(newDocs.select(col("doc_id"))), clusters = false)
+
+  /** Near-dup clusters: (doc_id, cluster_id) for every doc in some near-dup
+    * pair; cluster_id is the cluster's minimum doc_id (the survivor).
+    * Equals dedupClusters(jaccardPairs(docs, t)) — asserted in
+    * TextDedupSpec, where the all-pairs [[jaccardPairs]] is the oracle. */
+  def nearDupClusters(docs: DataFrame, threshold: Double): DataFrame =
+    pipeline(docs, threshold, masked = true, newIds = None, clusters = true)
+
+  def nearDupClustersUnbounded(docs: DataFrame, threshold: Double): DataFrame =
+    pipeline(docs, threshold, masked = false, newIds = None, clusters = true)
+
+  /** Fold a new batch into existing (doc_id, cluster_id) labels WITHOUT
+    * recomputing old components: new pairs come from the incremental
+    * miner, then [[foldLabels]]. Folding batches in arrival order
+    * reproduces [[nearDupClusters]]' batch answer exactly (law in
+    * TextDedupSpec) — a corpus appends a batch, reprices only the touched
+    * clusters, and never re-mines history. */
+  def nearDupClustersIncremental(existingLabels: DataFrame, existingDocs: DataFrame,
+                                 newDocs: DataFrame, threshold: Double): DataFrame =
+    foldLabels(existingLabels, minhashNearDupsIncremental(existingDocs, newDocs, threshold))
+
+  def nearDupClustersIncrementalUnbounded(existingLabels: DataFrame,
+                                          existingDocs: DataFrame,
+                                          newDocs: DataFrame,
+                                          threshold: Double): DataFrame =
+    foldLabels(existingLabels,
+      minhashNearDupsIncrementalUnbounded(existingDocs, newDocs, threshold))
+
+  private def arrivals(existingDocs: DataFrame, newDocs: DataFrame): DataFrame =
+    existingDocs.select(col("doc_id"), col("text"))
+      .unionByName(newDocs.select(col("doc_id"), col("text")))
+
+  /** An incremental call's new side: its ids and its (doc_id, key)
+    * members, both batch-bounded. */
+  private[operators] case class Batch(ids: DataFrame, members: DataFrame)
+
+  /** The pipeline (see the head of this section). `clusters` swaps stage 3
+    * for stage 4; incremental clusters fold mined pairs instead. */
+  private def pipeline(docs: DataFrame, threshold: Double, masked: Boolean,
+                       newIds: Option[DataFrame], clusters: Boolean): DataFrame = {
+    val key = if (masked) "mask" else "setid"
+    val (members, groups) = identities(docs, key, counted = clusters || !masked)
+    val keyed = members.select(col("doc_id"), col(key))
+    val batch = newIds.map(ids => Batch(ids, keyed.join(broadcast(ids), "doc_id")))
+    val probeKeys = batch.map(_.members.select(col(key)).distinct())
+    // stage 2 yields pairs in each form's native endpoint: identity pairs
+    // for mask (verified in-join on masks), rep pairs for setid
+    val (native, pairs) =
+      if (masked) (key, minhashVerifiedRepPairs(repSignatures(docs, groups), threshold, probeKeys))
+      else ("rep", unboundedRepPairs(docs, members, groups, threshold, probeKeys))
+    def endpoints(to: String) = if (to == native) pairs else relabel(pairs, groups, native, to)
+    if (clusters) labelClusters(keyed, groups, key, endpoints("rep"))
+    else expandPairs(keyed, key, endpoints(key), batch)
   }
 
-  /** MinHash-LSH near-dup mining with exact verification.
-    *
-    * Corpora with heavy duplication put thousands of docs with IDENTICAL
-    * token sets into the same LSH bucket, making the band self-join
-    * quadratic in cluster size (observed: 450s at sf0.1). So the pipeline
-    * collapses identical sets first — the production shape at any scale:
-    *   1. group docs by token set (one representative per distinct set);
-    *   2. signatures + banding + verification over distinct sets only;
-    *   3. expand set-level pairs back to doc pairs (cross-group via the
-    *      verified pairs, intra-group pairs are Jaccard-1 by construction).
-    * LSH cost becomes linear in DISTINCT content, and the quadratic part
-    * only materializes the true answer (the near-dup pairs themselves).
-    *
-    * Verification happens INSIDE the band self-join's stage: each banded
-    * row carries its set bitmask, so the jacc filter (two popcounts) runs
-    * in the join's codegen and sub-threshold candidates — the bulk, since
-    * the 32×8 S-curve admits pairs from ~0.65 similarity up — die before
-    * any shuffle, dedup, or follow-up join. Only true pairs reach the
-    * distinct() (at band multiplicity), measured 3.4× faster than
-    * verify-after-dedup at sf0.1. */
+  /** Stage 1: members (doc_id, key[, toks]), checkpointed because grouping,
+    * both expansion sides and the intra pairs read it (localCheckpoint =
+    * executor-local blocks + truncated lineage, right for single-job
+    * mining), and groups (key, rep[, grp_n]). `counted` groups carry the
+    * group size and are checkpointed too: the labeller and the setid
+    * form's rep joins read them several times; mask mining reads them once. */
+  private def identities(docs: DataFrame, key: String,
+                         counted: Boolean): (DataFrame, DataFrame) = {
+    val members = (if (key == "mask") tokenMasks(docs).select(col("doc_id"), col("mask"))
+      else setMembers(docs)).localCheckpoint(true)
+    val byKey = members.groupBy(col(key))
+    val groups =
+      if (!counted) byKey.agg(min(col("doc_id")).as("rep"))
+      else byKey.agg(min(col("doc_id")).as("rep"), count(lit(1)).as("grp_n"))
+        .localCheckpoint(true)
+    (members, groups)
+  }
+
+  /** The setid identity: (doc_id, setid = sha256 of the sorted distinct-
+    * token list, toks = that list). Shared with the persisted [[LshIndex]],
+    * so both sides of the stored-index-equals-fresh-mining law derive
+    * identity from this one definition. */
+  private[operators] def setMembers(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), array_sort(tokenSet(col("text"))).as("toks"))
+      .withColumn("setid", sha2(concat_ws(" ", col("toks")), 256))
+      .select(col("doc_id"), col("setid"), col("toks"))
+
   /** One representative signature (+ bitmask) per distinct token set. */
   private def repSignatures(docs: DataFrame, groups: DataFrame): DataFrame = {
     // repDocs is O(distinct content) — plain join, AQE decides broadcast
@@ -326,18 +451,16 @@ object TextDedup {
       .join(repDocs.select(col("doc_id"), col("mask")), "doc_id")
   }
 
-  /** Band self-join + in-join exact verification over rep signatures that
-    * carry their set bitmask; returns distinct (a_mask, b_mask, jacc).
-    * With `probeMasks` set, only bands of those masks sit on the LEFT side
-    * (the incremental probe); pairs are then mask-normalized because a
-    * probe-probe pair collides in both directions. */
-  private[graft] def minhashVerifiedRepPairs(sigsWithMask: DataFrame, threshold: Double,
-                                             probeMasks: Option[DataFrame] = None): DataFrame = {
+  /** Stage 2, mask form: band self-join + in-join exact verification over
+    * rep signatures carrying their bitmask; returns distinct (a_mask,
+    * b_mask, jacc). With `probeMasks`, only bands of those masks sit on the
+    * left, and pairs are mask-normalized because a probe-probe pair
+    * collides in both directions. */
+  private def minhashVerifiedRepPairs(sigsWithMask: DataFrame, threshold: Double,
+                                      probeMasks: Option[DataFrame]): DataFrame = {
     // both sides of the self-join read the banded table: materialize once,
     // or the signature pipeline upstream executes once per side
     val bands = bandKeys(sigsWithMask, Seq("mask")).localCheckpoint(true)
-    // probeMasks is bounded by the incremental contract (distinct masks of
-    // ONE new batch, never corpus-sized) — the only hinted broadcast here
     val lBands = probeMasks.fold(bands)(pm => bands.join(broadcast(pm), "mask"))
     val l = lBands.select(col("key"), col("doc_id").as("a_id"), col("mask").as("a_mask"))
     val r = bands.select(col("key"), col("doc_id").as("b_id"), col("mask").as("b_mask"))
@@ -351,118 +474,13 @@ object TextDedup {
       .distinct() // only true pairs left, at band multiplicity
   }
 
-  /** Expand verified rep-level pairs back to doc-level pairs via the
-    * member table (doc_id, mask). repPairs is O(near-dup pairs) — the
-    * answer itself — so it never carries a broadcast hint: at crawl scale
-    * it is 1e8+ rows, far past executor broadcast limits. AQE broadcasts
-    * it at runtime when it measures small. */
-  private def expandCross(members: DataFrame, repPairs: DataFrame): DataFrame =
-    members.select(col("doc_id").as("da"), col("mask").as("a_mask"))
-      .join(repPairs, "a_mask")
-      .join(members.select(col("doc_id").as("db"), col("mask").as("b_mask")), "b_mask")
-      .select(least(col("da"), col("db")).as("a_id"),
-              greatest(col("da"), col("db")).as("b_id"), col("jacc"))
-
-  def minhashNearDups(docs: DataFrame, threshold: Double): DataFrame = {
-    // members is read by 4 downstream branches (grouping, both sides of the
-    // expansion, intra pairs): materialize once. localCheckpoint = executor-
-    // local blocks + truncated lineage — right for single-job mining; a
-    // long-lived cluster pipeline would persist/checkpoint durably instead.
-    val members = tokenMasks(docs).select(col("doc_id"), col("mask"))
-      .localCheckpoint(true)
-    val groups = members.groupBy(col("mask")).agg(min(col("doc_id")).as("rep"))
-    val repPairs = minhashVerifiedRepPairs(repSignatures(docs, groups), threshold)
-    val intra = members.select(col("doc_id").as("a_id"), col("mask"))
-      .join(members.select(col("doc_id").as("b_id"), col("mask")), "mask")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(1.0).as("jacc"))
-    // intra pairs are jacc=1.0 ≥ any valid threshold
-    expandCross(members, repPairs).unionByName(intra)
-  }
-
-  /** MinHash-LSH near-dup mining with NO vocabulary bound — the form that
-    * runs when the dictionary outgrows [[tokenMasks]]' 63-bit bitmask
-    * (i.e., every real corpus; the mask form stays the test-scale fast
-    * path whose in-join popcount verify is cheapest, and the oracle
-    * cross-checks them equal on corpora where both apply).
-    *
-    * Differences from [[minhashNearDups]]:
-    *   - set identity = sha256 of the sorted distinct-token list
-    *     (unbounded, collision-free for practical purposes) instead of the
-    *     vocab bitmask;
-    *   - verification happens AFTER candidate dedup, by fetching the two
-    *     reps' token arrays and intersecting (`array_intersect` in
-    *     codegen) — candidates can't be verified in-join without carrying
-    *     token arrays through the ×NumBands explode, so the trade is: the
-    *     band join shuffles only (key, id) pairs, and exact verification
-    *     touches each DISTINCT candidate pair once. Same
-    *     candidates-then-verify shape, linear in distinct content.
-    */
-  def minhashNearDupsUnbounded(docs: DataFrame, threshold: Double): DataFrame = {
-    val (members, groups, verified) = unboundedRepPairs(docs, threshold)
-    // rep pair -> setid pair -> doc-level expansion (+ intra jacc=1 pairs).
-    // EVERY join here is a plain (shuffle) join: groups/members are
-    // O(distinct corpus) and the verified pair set is O(near-dup pairs) —
-    // at the 100 TB scale this operator exists for, NONE of them is
-    // broadcast-small (a crawl's true near-dup pair set alone is 1e8–1e9
-    // rows). AQE converts any of these joins to a broadcast at runtime
-    // when the measured side is small, so test scale loses nothing.
-    val m = members.select(col("doc_id"), col("setid"))
-    val g = groups.select(col("rep"), col("setid"))
-    val repPairs = verified
-      .join(g.select(col("rep").as("ra"), col("setid").as("a_set")), "ra")
-      .join(g.select(col("rep").as("rb"), col("setid").as("b_set")), "rb")
-      .select(col("a_set"), col("b_set"), col("jacc"))
-    val cross = m.select(col("doc_id").as("da"), col("setid").as("a_set"))
-      .join(repPairs, "a_set")
-      .join(m.select(col("doc_id").as("db"), col("setid").as("b_set")), "b_set")
-      .select(least(col("da"), col("db")).as("a_id"),
-              greatest(col("da"), col("db")).as("b_id"), col("jacc"))
-    val intra = m.select(col("doc_id").as("a_id"), col("setid"))
-      .join(m.select(col("doc_id").as("b_id"), col("setid")), "setid")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(1.0).as("jacc"))
-    cross.unionByName(intra)
-  }
-
-  /** The unbounded set identity: (doc_id, setid = sha256 of the sorted
-    * distinct-token list, toks = that list). Shared by the in-memory
-    * unbounded family and the persisted [[LshIndex]] — both sides of the
-    * stored-index-equals-fresh-mining law derive identity from this one
-    * definition. */
-  private[operators] def setMembers(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), array_sort(tokenSet(col("text"))).as("toks"))
-      .withColumn("setid", sha2(concat_ws(" ", col("toks")), 256))
-      .select(col("doc_id"), col("setid"), col("toks"))
-
-  /** Shared machinery of the unbounded-vocab family: identical-set collapse
-    * (sha256 set identity), signatures + banding over reps only, and the
-    * band join with the sound in-join size-ratio prefilter, then exact
-    * verification once per distinct candidate pair.
-    *
-    * With `probeIds` set (the incremental form), only bands of setid
-    * groups CONTAINING a probe doc sit on the left side of the band join
-    * — join work ∝ the probe batch's collisions, never the corpus's —
-    * and pairs are rep-normalized because a probe-probe pair collides in
-    * both directions (the same probe restriction as
-    * [[minhashVerifiedRepPairs]], on set identity instead of masks).
-    * probeIds is batch-bounded by the incremental contract (one ingest
-    * batch, never corpus-sized), so its broadcasts are legitimate hints.
-    *
-    * Returns (members(doc_id, setid, toks) — checkpointed,
-    *          groups(setid, rep, grp_n) — checkpointed,
-    *          verified(ra, rb, jacc) rep-level pairs with ra < rb).
-    * The size lookup joined into the signatures is a plain (shuffle) join:
-    * it is O(distinct corpus), deliberately never broadcast. */
-  private def unboundedRepPairs(docs: DataFrame, threshold: Double,
-                                probeIds: Option[DataFrame] = None
-                               ): (DataFrame, DataFrame, DataFrame) = {
-    val members = setMembers(docs).localCheckpoint(true)
-    // read by the rep-doc join, the rep→setid mapping, and (clusters path)
-    // the label expansion: materialize once
-    val groups = members.groupBy(col("setid"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("grp_n"))
-      .localCheckpoint(true)
+  /** Stage 2, setid form from docs: signatures and bands over reps only
+    * (each band row carries its set size n), then [[verifyBandPairs]].
+    * With `probeSetids`, only bands of reps whose group holds a new doc sit
+    * on the left. Returns (a_rep, b_rep, jacc). */
+  private def unboundedRepPairs(docs: DataFrame, members: DataFrame, groups: DataFrame,
+                                threshold: Double,
+                                probeSetids: Option[DataFrame]): DataFrame = {
     val repToks = members.join(
       groups.select(col("rep")), members("doc_id") === col("rep"))
       .select(col("doc_id"), col("toks"))
@@ -471,38 +489,113 @@ object TextDedup {
         .select(col("doc_id"), col("text")))
       .join(repToks.select(col("doc_id"),
         size(col("toks")).cast(LongType).as("n")), "doc_id")
-    // set SIZE rides each band row: jacc >= t forces |A|/|B| >= t
-    // (|A∩B| <= min <= jacc·union <= ... ⇒ min/max >= t), so the in-join
-    // size-ratio filter is SOUND — it kills mid-similarity candidates
-    // before they reach the distinct/fetch shuffle, recovering part of
-    // the mask form's verify-in-join economics without any vocab bound.
     val bands = bandKeys(sigs, Seq("n")).localCheckpoint(true)
-    // probe restriction: reps of probe-containing groups only on the left
-    val lBands = probeIds.fold(bands) { ids =>
-      val probeReps = groups
-        .join(broadcast(members.join(broadcast(ids.select(col("doc_id"))), "doc_id")
-          .select(col("setid")).distinct()), "setid")
-        .select(col("rep").as("doc_id"))
-      bands.join(broadcast(probeReps), "doc_id")
+    val lBands = probeSetids.fold(bands) { ids =>
+      bands.join(broadcast(groups.join(broadcast(ids), "setid")
+        .select(col("rep").as("doc_id"))), "doc_id")
     }
+    verifyBandPairs(lBands, bands, repToks, "doc_id", threshold, probe = probeSetids.isDefined)
+  }
+
+  /** Stage 2's setid verifier, shared by the from-docs form and
+    * [[LshIndex.probe]]: the band join over (key, `id`, n) rows, the
+    * in-join size-ratio prefilter, then exact Jaccard once per distinct
+    * candidate pair from `toks` (`id`, toks). The prefilter is SOUND:
+    * jacc >= t forces min(|A|,|B|)/max(|A|,|B|) >= t, so it only kills
+    * mid-similarity candidates before the distinct/fetch shuffle. `probe`
+    * (left = the batch's bands only) normalizes pairs, because a
+    * probe-probe pair collides in both directions. Returns (a_rep, b_rep,
+    * jacc) with a_rep < b_rep. */
+  private[operators] def verifyBandPairs(lBands: DataFrame, rBands: DataFrame,
+                                         toks: DataFrame, id: String, threshold: Double,
+                                         probe: Boolean): DataFrame = {
     val pairFilter =
-      if (probeIds.isDefined) col("ra") =!= col("rb") else col("ra") < col("rb")
-    val cand = lBands.select(col("key"), col("doc_id").as("ra"), col("n").as("na"))
-      .join(bands.select(col("key"), col("doc_id").as("rb"), col("n").as("nb")), Seq("key"))
+      if (probe) col("a_rep") =!= col("b_rep") else col("a_rep") < col("b_rep")
+    lBands.select(col("key"), col(id).as("a_rep"), col("n").as("na"))
+      .join(rBands.select(col("key"), col(id).as("b_rep"), col("n").as("nb")), Seq("key"))
       .filter(pairFilter)
       .filter(least(col("na"), col("nb")).cast(DoubleType) >=
         lit(threshold) * greatest(col("na"), col("nb")).cast(DoubleType))
-      .select(least(col("ra"), col("rb")).as("ra"),
-              greatest(col("ra"), col("rb")).as("rb")).distinct()
-    val verified = cand
-      .join(repToks.select(col("doc_id").as("ra"), col("toks").as("a_toks")), "ra")
-      .join(repToks.select(col("doc_id").as("rb"), col("toks").as("b_toks")), "rb")
+      .select(least(col("a_rep"), col("b_rep")).as("a_rep"),
+              greatest(col("a_rep"), col("b_rep")).as("b_rep")).distinct()
+      .join(toks.select(col(id).as("a_rep"), col("toks").as("a_toks")), "a_rep")
+      .join(toks.select(col(id).as("b_rep"), col("toks").as("b_toks")), "b_rep")
       .withColumn("inter", size(array_intersect(col("a_toks"), col("b_toks"))).cast(DoubleType))
       .withColumn("jacc", col("inter") /
         (size(col("a_toks")) + size(col("b_toks")) - col("inter")))
       .filter(col("jacc") >= threshold)
-      .select(col("ra"), col("rb"), col("jacc"))
-    (members, groups, verified)
+      .select(col("a_rep"), col("b_rep"), col("jacc"))
+  }
+
+  /** Map both endpoints of an (a_`from`, b_`from`, jacc) pair frame
+    * through `lookup`'s (`from`, `to`) columns: rep → setid ahead of the
+    * doc expansion, mask → rep ahead of the labeller. */
+  private[operators] def relabel(pairs: DataFrame, lookup: DataFrame,
+                                 from: String, to: String): DataFrame =
+    pairs.join(lookup.select(col(from).as(s"a_$from"), col(to).as(s"a_$to")), s"a_$from")
+      .join(lookup.select(col(from).as(s"b_$from"), col(to).as(s"b_$to")), s"b_$from")
+      .select(col(s"a_$to"), col(s"b_$to"), col("jacc"))
+
+  /** Stage 3: identity pairs (a_`key`, b_`key`, jacc) → doc pairs (a_id <
+    * b_id, jacc) via `members` (doc_id, `key`), plus the pairs inside each
+    * group — Jaccard 1 by construction, so >= any valid threshold. Cross
+    * and intra pairs are disjoint (a cross pair never shares a key) and
+    * each is unique, so no distinct() is paid over the pair set.
+    *
+    * With a `batch`, intra pairs join every member against the batch's
+    * members: a both-new pair appears in both orientations and keeps only
+    * a<b, an old-new pair appears once. Then old-old doc pairs (reported
+    * when their later member arrived) drop in one flagged pass — two
+    * semi-join branches would execute the whole expand+verify chain once
+    * per branch. */
+  private[operators] def expandPairs(members: DataFrame, key: String, setPairs: DataFrame,
+                                     batch: Option[Batch]): DataFrame = {
+    val (aKey, bKey) = (s"a_$key", s"b_$key")
+    val cross = members.select(col("doc_id").as("da"), col(key).as(aKey))
+      .join(setPairs, aKey)
+      .join(members.select(col("doc_id").as("db"), col(key).as(bKey)), bKey)
+      .select(least(col("da"), col("db")).as("a_id"),
+              greatest(col("da"), col("db")).as("b_id"), col("jacc"))
+    val left = members.select(col("doc_id").as("a_id"), col(key))
+    batch match {
+      case None =>
+        cross.unionByName(left
+          .join(members.select(col("doc_id").as("b_id"), col(key)), key)
+          .filter(col("a_id") < col("b_id"))
+          .select(col("a_id"), col("b_id"), lit(1.0).as("jacc")))
+      case Some(Batch(ids, newMembers)) =>
+        def isNew(side: String) =
+          broadcast(ids.select(col("doc_id").as(s"${side}_id"), lit(1).as(s"${side}_new")))
+        val intra = left.join(isNew("a"), Seq("a_id"), "left")
+          .join(broadcast(newMembers.select(col("doc_id").as("b_id"), col(key))), key)
+          .filter(col("a_id") =!= col("b_id") &&
+            (col("a_new").isNull || col("a_id") < col("b_id")))
+          .select(least(col("a_id"), col("b_id")).as("a_id"),
+                  greatest(col("a_id"), col("b_id")).as("b_id"), lit(1.0).as("jacc"))
+        cross.unionByName(intra)
+          .join(isNew("a"), Seq("a_id"), "left").join(isNew("b"), Seq("b_id"), "left")
+          .filter(col("a_new").isNotNull || col("b_new").isNotNull)
+          .select(col("a_id"), col("b_id"), col("jacc"))
+    }
+  }
+
+  /** Stage 4: connected components over the REP graph (one node per
+    * distinct set, edges = verified rep pairs), expanded to members — the
+    * union-find iterates over ~|distinct sets| edges, never the doc-pair
+    * blowup. Reps with edges carry their propagated label; edge-less
+    * groups of size >= 2 are their own cluster (their intra pairs), labelled
+    * by the rep = the group's min doc_id. The edges are not checkpointed
+    * here: dedupClusters checkpoints them as its edge set, and an extra
+    * eager checkpoint cost one whole Spark job of pure overhead. */
+  private def labelClusters(members: DataFrame, groups: DataFrame, key: String,
+                            repPairs: DataFrame): DataFrame = {
+    val repLabels =
+      dedupClusters(repPairs.select(col("a_rep").as("a_id"), col("b_rep").as("b_id")))
+    val labeled = groups
+      .join(repLabels.select(col("doc_id").as("rep"), col("cluster_id")), Seq("rep"), "left")
+      .filter(col("cluster_id").isNotNull || col("grp_n") >= 2)
+      .select(col(key), coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
+    members.join(labeled, key).select(col("doc_id"), col("cluster_id"))
   }
 
   // ---- dedup clusters (connected components) ---------------------------
@@ -609,159 +702,6 @@ object TextDedup {
     }
   }
 
-  /** Near-dup clusters over a corpus, collapse-first: components are
-    * computed on the REP graph (one node per distinct token set, edges =
-    * verified rep pairs) and expanded to members afterward — the label
-    * propagation iterates over ~|distinct sets| edges instead of the full
-    * doc-pair blowup (docs in an identical-set group are one component by
-    * construction, label = the group's rep = its min doc_id). Output:
-    * (doc_id, cluster_id) for every doc belonging to some near-dup pair;
-    * cluster_id is the cluster's minimum doc_id (the survivor). Equals
-    * dedupClusters(jaccardPairs(docs, t)) — asserted in TextDedupSpec.
-    *
-    * Pair generation is the LSH path ([[minhashVerifiedRepPairs]]): band-
-    * bucket shuffle over rep signatures with in-join verification — linear
-    * in distinct content, the same machinery [[minhashNearDups]] mines
-    * with. The all-pairs bitmask join this replaced survives only as the
-    * spec's oracle ([[jaccardPairs]]). */
-  def nearDupClusters(docs: DataFrame, threshold: Double): DataFrame = {
-    val members = tokenMasks(docs).select(col("doc_id"), col("mask")).localCheckpoint(true)
-    val groups = members.groupBy(col("mask"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("grp_n"))
-      .localCheckpoint(true)
-    // verified (a_mask, b_mask) pairs are the TRUE near-dup rep pairs —
-    // O(near-dup pairs), unbounded at corpus scale, so no broadcast hint
-    // (AQE decides at runtime). NOT materialized here: its single consumer
-    // is repPairs, whose plan dedupClusters checkpoints as the edge set —
-    // an extra eager checkpoint was one whole Spark job of pure overhead
-    // (r11; the banded table inside minhashVerifiedRepPairs is already
-    // checkpointed, so nothing re-runs the signature pipeline)
-    val verified = minhashVerifiedRepPairs(repSignatures(docs, groups), threshold)
-    val m = groups.select(col("rep"), col("mask"))
-    val repPairs = m.select(col("mask").as("a_mask"), col("rep").as("ra"))
-      .join(verified, "a_mask")
-      .join(m.select(col("mask").as("b_mask"), col("rep").as("rb")), "b_mask")
-      .select(least(col("ra"), col("rb")).as("a_id"),
-              greatest(col("ra"), col("rb")).as("b_id"))
-    val repLabels = dedupClusters(repPairs) // doc_id (= rep), cluster_id
-    // reps with edges carry their propagated label; edge-less groups of
-    // size >= 2 are their own cluster (intra jacc=1 pairs at doc level)
-    val labeled = groups
-      .join(repLabels.select(col("doc_id").as("rep"), col("cluster_id")), Seq("rep"), "left")
-      .filter(col("cluster_id").isNotNull || col("grp_n") >= 2)
-      .select(col("mask"), coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
-    members.join(labeled, "mask")
-      .select(col("doc_id"), col("cluster_id"))
-  }
-
-  /** Vocabulary-unbounded dedup clusters: connected components over the
-    * REP graph — one node per distinct token set (sha256 identity, no
-    * dictionary bound), edges = the unbounded miner's verified rep pairs —
-    * expanded to members afterward, exactly mirroring [[nearDupClusters]]
-    * with setid in place of mask. The union-find input is ~|distinct sets|
-    * edges, never the doc-pair blowup: on a heavily-duplicated corpus the
-    * doc-level pair set is quadratic in cluster sizes while the rep graph
-    * stays linear in distinct content (identical-set groups are one
-    * component by construction — label = the group's rep = its min
-    * doc_id). Laws: ≡ [[nearDupClusters]] where both apply, and ≡
-    * dedupClusters over the doc-level pairs (TextDedupSpec). */
-  def nearDupClustersUnbounded(docs: DataFrame, threshold: Double): DataFrame = {
-    val (members, groups, verified) = unboundedRepPairs(docs, threshold)
-    // verified pairs already carry rep doc_ids (sigs run over reps), so
-    // they ARE the rep-graph edges; checkpointed inside dedupClusters
-    val repLabels = dedupClusters(verified.select(col("ra").as("a_id"), col("rb").as("b_id")))
-    // reps with edges carry their propagated label; edge-less groups of
-    // size >= 2 are their own cluster (intra jacc=1 pairs at doc level)
-    val labeled = groups
-      .join(repLabels.select(col("doc_id").as("rep"), col("cluster_id")), Seq("rep"), "left")
-      .filter(col("cluster_id").isNotNull || col("grp_n") >= 2)
-      .select(col("setid"), coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
-    members.select(col("doc_id"), col("setid")).join(labeled, "setid")
-      .select(col("doc_id"), col("cluster_id"))
-  }
-
-  // ---- incremental near-dup mining ------------------------------------
-
-  /** Incremental MinHash near-dup mining: emit only the pairs that involve
-    * at least one NEW document, against an existing corpus plus the new
-    * batch itself. Processing a corpus in arrival order through this
-    * function yields exactly the batch answer — each pair surfaces when
-    * its later member arrives (asserted as a law in TextDedupSpec).
-    *
-    * This is the production dedup-append shape (the LSH analogue of
-    * [[graft.operators.DedupAppend]]): the band self-join degenerates to a
-    * PROBE — only bands of groups containing a new doc sit on the left
-    * side, so join work is proportional to the new batch's collisions, not
-    * the corpus's. The stored-index form of this shape is [[LshIndex]]
-    * (on the unbounded set identity — the vocab this mask path is bounded
-    * to never needs a store); this from-docs form recomputes the right
-    * side per call and is the test-scale fast path.
-    *
-    * Masks are vocab-dependent, so bitmasks are computed over the union
-    * vocabulary per call; Jaccard is set-based, so values are unaffected
-    * by vocabulary growth across calls. */
-  def minhashNearDupsIncremental(existingDocs: DataFrame, newDocs: DataFrame,
-                                 threshold: Double): DataFrame = {
-    val all = existingDocs.select(col("doc_id"), col("text"))
-      .unionByName(newDocs.select(col("doc_id"), col("text")))
-    // newIds is batch-bounded (the incremental contract: one ingest batch,
-    // never corpus-sized), so its broadcasts below are legitimate hints
-    val newIds = newDocs.select(col("doc_id"))
-    val members = tokenMasks(all).select(col("doc_id"), col("mask")).localCheckpoint(true)
-    val newMembers = members.join(broadcast(newIds), "doc_id")
-    val groups = members.groupBy(col("mask")).agg(min(col("doc_id")).as("rep"))
-    // probe: only new-containing groups on the left; full corpus on the right
-    val repPairs = minhashVerifiedRepPairs(repSignatures(all, groups), threshold,
-      probeMasks = Some(newMembers.select(col("mask")).distinct()))
-    // intra pairs, each UNORDERED pair exactly once: the (members ⋈
-    // newMembers) product lists a both-new pair twice (once per
-    // orientation) — keep only its a<b orientation; an old-new pair
-    // appears once (the old side is never in newMembers). newMembers is
-    // batch-bounded (the incremental contract), so the broadcast is a
-    // legitimate hint — without it the corpus-sized members frame
-    // shuffles on mask. Emitting exactly-once here removes the
-    // full-pair-set distinct() the union used to pay: expandCross output
-    // is already unique (one row per (a_mask,b_mask) × member pair), and
-    // cross/intra are disjoint (jacc-1 pairs share a mask, cross pairs
-    // never do). [r11: one Exchange fewer per incremental mining call]
-    val intra = members.select(col("doc_id").as("a_id"), col("mask"))
-      .join(broadcast(newIds.select(col("doc_id").as("a_id"), lit(1).as("a_new"))),
-        Seq("a_id"), "left")
-      .join(broadcast(newMembers.select(col("doc_id").as("b_id"), col("mask"))), "mask")
-      .filter(col("a_id") =!= col("b_id") &&
-        (col("a_new").isNull || col("a_id") < col("b_id")))
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-              greatest(col("a_id"), col("b_id")).as("b_id"), lit(1.0).as("jacc"))
-    // drop old-old doc pairs (reported when their later member arrived):
-    // one flagged pass — two semi-join branches would execute the whole
-    // expand+verify chain once per branch
-    val pairs = expandCross(members, repPairs).unionByName(intra)
-    val aNew = broadcast(newIds.select(col("doc_id").as("a_id"), lit(1).as("a_new")))
-    val bNew = broadcast(newIds.select(col("doc_id").as("b_id"), lit(1).as("b_new")))
-    pairs.join(aNew, Seq("a_id"), "left").join(bNew, Seq("b_id"), "left")
-      .filter(col("a_new").isNotNull || col("b_new").isNotNull)
-      .select(col("a_id"), col("b_id"), col("jacc"))
-  }
-
-  /** Incremental dedup-cluster maintenance: fold a new batch into existing
-    * (doc_id, cluster_id) labels WITHOUT recomputing old components. New
-    * pairs come from the probe-side-restricted incremental miner (join
-    * work ∝ the batch's collisions); old clusters enter the component
-    * computation as STAR edges (doc → its label), so the contraction input
-    * is O(labeled docs + new pairs), not the historical pair set. Folding
-    * batches in arrival order reproduces the batch answer exactly —
-    * components of star(labels) ∪ newPairs equal components of the full
-    * pair union, and labels stay cluster minima (law in TextDedupSpec).
-    *
-    * This completes the production story next to [[minhashNearDupsIncremental]]:
-    * mining was incremental, now the dedup ACTION is too — a 100 TB corpus
-    * appends a batch, reprices only the touched clusters, and never
-    * re-mines history. */
-  def nearDupClustersIncremental(existingLabels: DataFrame, existingDocs: DataFrame,
-                                 newDocs: DataFrame, threshold: Double): DataFrame =
-    foldLabels(existingLabels,
-      minhashNearDupsIncremental(existingDocs, newDocs, threshold))
-
   /** Star-edge label fold shared by both incremental cluster maintainers:
     * old clusters enter the component computation as STAR edges (doc →
     * its label) so the contraction input is O(labeled docs + new pairs),
@@ -782,83 +722,6 @@ object TextDedup {
       .join(propagated.select(col("doc_id")), Seq("doc_id"), "left_anti")
     propagated.unionByName(untouchedHeads)
   }
-
-  /** [[minhashNearDupsIncremental]] with NO vocabulary bound — the form a
-    * real-vocabulary ingest runs (the mask twin refuses past 63 distinct
-    * tokens; this one never refuses). Set identity is the sha256 of the
-    * sorted distinct-token list ([[minhashNearDupsUnbounded]]'s algebra),
-    * and the band self-join degenerates to the same PROBE: only bands of
-    * setid groups containing a new doc sit on the left side, so join work
-    * is proportional to the new batch's collisions, not the corpus's.
-    * Verification fetches the two reps' token arrays once per distinct
-    * candidate pair (`array_intersect` in codegen) — the unbounded
-    * family's candidates-then-verify trade.
-    *
-    * Emits only pairs involving at least one NEW document; folding a
-    * corpus through this function in arrival order yields exactly
-    * [[minhashNearDupsUnbounded]]'s batch answer — each pair surfaces
-    * when its later member arrives (law in TextDedupSpec, streamed form
-    * in StreamingIngestSpec; the scored gate runs at vocab > 63 where the
-    * mask family refuses). At scale the right side (members, rep token
-    * arrays, band keys of the existing corpus) lives in the PERSISTED
-    * index of [[LshIndex]] and is probed, not recomputed —
-    * signatures are deterministic, so the stored form equals what this
-    * from-docs form derives. */
-  def minhashNearDupsIncrementalUnbounded(existingDocs: DataFrame, newDocs: DataFrame,
-                                          threshold: Double): DataFrame = {
-    val all = existingDocs.select(col("doc_id"), col("text"))
-      .unionByName(newDocs.select(col("doc_id"), col("text")))
-    // newIds is batch-bounded (the incremental contract), so the
-    // broadcasts below are legitimate hints — same as the mask twin
-    val newIds = newDocs.select(col("doc_id"))
-    val (members, groups, verified) =
-      unboundedRepPairs(all, threshold, probeIds = Some(newIds))
-    val m = members.select(col("doc_id"), col("setid"))
-    val g = groups.select(col("rep"), col("setid"))
-    val newMembers = m.join(broadcast(newIds), "doc_id")
-    val repPairs = verified
-      .join(g.select(col("rep").as("ra"), col("setid").as("a_set")), "ra")
-      .join(g.select(col("rep").as("rb"), col("setid").as("b_set")), "rb")
-      .select(col("a_set"), col("b_set"), col("jacc"))
-    val cross = m.select(col("doc_id").as("da"), col("setid").as("a_set"))
-      .join(repPairs, "a_set")
-      .join(m.select(col("doc_id").as("db"), col("setid").as("b_set")), "b_set")
-      .select(least(col("da"), col("db")).as("a_id"),
-              greatest(col("da"), col("db")).as("b_id"), col("jacc"))
-    // intra exactly-once (both-new pairs keep only their a<b orientation;
-    // old-new pairs appear once) — removes the full-pair-set distinct()
-    // the union used to pay; newMembers is batch-bounded, so the
-    // broadcasts are legitimate hints. Same shape as the mask twin.
-    val intra = m.select(col("doc_id").as("a_id"), col("setid"))
-      .join(broadcast(newIds.select(col("doc_id").as("a_id"), lit(1).as("a_new"))),
-        Seq("a_id"), "left")
-      .join(broadcast(newMembers.select(col("doc_id").as("b_id"), col("setid"))), "setid")
-      .filter(col("a_id") =!= col("b_id") &&
-        (col("a_new").isNull || col("a_id") < col("b_id")))
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-              greatest(col("a_id"), col("b_id")).as("b_id"), lit(1.0).as("jacc"))
-    // drop old-old doc pairs (reported when their later member arrived):
-    // one flagged pass, same shape as the mask twin
-    val pairs = cross.unionByName(intra)
-    val aNew = broadcast(newIds.select(col("doc_id").as("a_id"), lit(1).as("a_new")))
-    val bNew = broadcast(newIds.select(col("doc_id").as("b_id"), lit(1).as("b_new")))
-    pairs.join(aNew, Seq("a_id"), "left").join(bNew, Seq("b_id"), "left")
-      .filter(col("a_new").isNotNull || col("b_new").isNotNull)
-      .select(col("a_id"), col("b_id"), col("jacc"))
-  }
-
-  /** [[nearDupClustersIncremental]] with NO vocabulary bound: fold a new
-    * batch into existing (doc_id, cluster_id) labels via the unbounded
-    * probe miner plus the same star-edge propagation — the incremental
-    * dedup ACTION at real vocabulary. Folding batches in arrival order
-    * reproduces [[nearDupClustersUnbounded]]'s batch answer exactly
-    * (law in TextDedupSpec; the scored gate runs at vocab > 63). */
-  def nearDupClustersIncrementalUnbounded(existingLabels: DataFrame,
-                                          existingDocs: DataFrame,
-                                          newDocs: DataFrame,
-                                          threshold: Double): DataFrame =
-    foldLabels(existingLabels,
-      minhashNearDupsIncrementalUnbounded(existingDocs, newDocs, threshold))
 
   // ---- SimHash + banded LSH -------------------------------------------
 
@@ -890,7 +753,7 @@ object TextDedup {
   def simhashNearDups(docs: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist < SimBands, "pigeonhole guarantee needs maxDist < SimBands")
     // consumed by 4 branches (banding, both expansion sides, intra pairs):
-    // materialize once — same reasoning as minhashNearDups.members
+    // materialize once — same reasoning as [[identities]]
     val sig = simhashSignatures(docs).localCheckpoint(true) // doc_id, simhash
     val distinctSigs = sig.select(col("simhash")).distinct()
     val bandBits = SimBits / SimBands

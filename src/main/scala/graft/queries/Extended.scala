@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.Tables._
 import graft.functions.Aggregators
 import graft.operators.TableLayout
+import graft.util.ScanPaths
 
 /** Coverage for the remaining SURVEY.md §2.2 categories: semi join, as-of
   * (non-equi) join, cube, and a typed custom Aggregator (UDAF). */
@@ -817,9 +818,9 @@ object Extended {
           .agg(sum(qtyCents).as("sum_qty_cents"),
                count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv"),
+        require(ScanPaths.reads(res, "lineitem_mv"),
           s"q89 must be answered from the materialized view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q89 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
@@ -852,9 +853,9 @@ object Extended {
           .agg(sum(qtyCents).as("sum_qty_cents"),
                count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv"),
+        require(ScanPaths.reads(res, "lineitem_mv"),
           s"q91 must be answered from the materialized view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q91 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
@@ -915,9 +916,9 @@ object Extended {
           .agg(sum(qtyCents).as("sum_qty_cents"),
                count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv"),
+        require(ScanPaths.reads(res, "lineitem_mv"),
           s"q92 must be answered from the STREAM-MAINTAINED view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q92 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
@@ -1001,9 +1002,9 @@ object Extended {
                   coalesce(col("l_linestatus"), lit("ALL")).as("status"),
                   col("sum_qty_cents"), col("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv"),
+        require(ScanPaths.reads(res, "lineitem_mv"),
           s"q100 must be answered from the materialized view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q100 must not touch the base table:\n$plan")
         require(plan.contains("Expand"),
           s"q100's grouping-set replication must survive the rewrite:\n$plan")
@@ -1056,11 +1057,11 @@ object Extended {
         val res = li.groupBy(col("l_returnflag"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_flag"),
+        require(ScanPaths.reads(res, "lineitem_mv_flag"),
           s"q101 must choose the coarser sufficient view:\n$plan")
-        require(!plan.contains("lineitem_mv/") && !plan.contains("lineitem_mv]"),
+        require(!ScanPaths.reads(res, "lineitem_mv"),
           s"q101 must not scan the finer view when a coarser one suffices:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q101 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
@@ -1115,11 +1116,11 @@ object Extended {
             (col("qty_cents").cast(DoubleType) / col("flag_cents").cast(DoubleType))
               .as("share"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_flag"),
+        require(ScanPaths.reads(res, "lineitem_mv_flag"),
           s"q124's totals subtree must be served from the flag view:\n$plan")
-        require(plan.contains("lineitem_mv/") || plan.contains("lineitem_mv]"),
+        require(ScanPaths.reads(res, "lineitem_mv"),
           s"q124's detail subtree must be served from the fine view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q124 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("flag"), col("status"))
       } finally graft.plans.MvCatalog.clear()
@@ -1177,9 +1178,9 @@ object Extended {
                min(qtyCents).as("min_qty_cents"), max(qtyCents).as("max_qty_cents"),
                min(col("l_quantity")).as("min_qty"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_stats"),
+        require(ScanPaths.reads(res, "lineitem_mv_stats"),
           s"q103 must be answered from the materialized view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q103 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
@@ -1246,9 +1247,9 @@ object Extended {
           (col("avg_price") * lit(1000000)).cast(LongType).as("avg_price_micros"),
           col("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_avg"),
+        require(ScanPaths.reads(res, "lineitem_mv_avg"),
           s"q104 must be answered from the materialized view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q104 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
@@ -1280,9 +1281,9 @@ object Extended {
                sum(qtyCents).as("sum_qty_cents"),
                count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv"),
+        require(ScanPaths.reads(res, "lineitem_mv"),
           s"q105 must be answered from the materialized view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q105 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
@@ -1321,9 +1322,9 @@ object Extended {
         val res = t(spark, dir, "lineitem").groupBy(bucket.as("flag_bucket"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv"),
+        require(ScanPaths.reads(res, "lineitem_mv"),
           s"q106 must be answered from the materialized view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q106 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("flag_bucket"))
       } finally graft.plans.MvCatalog.clear()
@@ -1391,11 +1392,11 @@ object Extended {
       .groupBy(col("l_returnflag"))
       .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
     val plan = res.queryExecution.executedPlan.toString
-    require(plan.contains("lineitem_orders_mv"),
+    require(ScanPaths.reads(res, "lineitem_orders_mv"),
       s"$qname must be answered from the join view:\n$plan")
-    require(!plan.contains("lineitem.parquet"),
+    require(!ScanPaths.reads(res, "lineitem.parquet"),
       s"$qname must not touch the lineitem base table:\n$plan")
-    require(!plan.contains("orders.parquet"),
+    require(!ScanPaths.reads(res, "orders.parquet"),
       s"$qname must not touch the orders base table:\n$plan")
     graft.util.Materialize.sorted(res, col("l_returnflag"))
   }
@@ -1487,9 +1488,9 @@ object Extended {
           .groupBy(col("l_linestatus"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_disc"),
+        require(ScanPaths.reads(res, "lineitem_mv_disc"),
           s"q108 must be answered from the filtered view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q108 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
@@ -1555,9 +1556,9 @@ object Extended {
           .groupBy(col("l_linestatus"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_range"),
+        require(ScanPaths.reads(res, "lineitem_mv_range"),
           s"q114 must be answered from the filtered view by range subsumption:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q114 must not touch the base table:\n$plan")
         // the replayed (tighter) conjunct must reach the VIEW's scan as a
         // pushed filter — the rewrite emits a plain Filter over the MV
@@ -1668,10 +1669,10 @@ object Extended {
           .groupBy(col("l_linestatus"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("union_ivm_state"),
+        require(ScanPaths.reads(res, "union_ivm_state"),
           s"q115 must be answered from the maintained union view:\n$plan")
         Seq("li_cold.parquet", "li_hot.parquet").foreach(b =>
-          require(!plan.contains(b),
+          require(!ScanPaths.reads(res, b),
             s"q115 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
@@ -1728,9 +1729,9 @@ object Extended {
           .groupBy(col("l_linestatus"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_disc"),
+        require(ScanPaths.reads(res, "lineitem_mv_disc"),
           s"q120 must be answered from the stream-maintained filtered view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q120 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
@@ -1813,10 +1814,10 @@ object Extended {
           .groupBy(col("o_orderpriority"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_outer_mv"),
+        require(ScanPaths.reads(res, "lineitem_outer_mv"),
           s"q121 must be answered from the stream-maintained outer view:\n$plan")
         Seq("lineitem.parquet", "orders_dim.parquet").foreach(b =>
-          require(!plan.contains(b),
+          require(!ScanPaths.reads(res, b),
             s"q121 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("o_orderpriority"))
       } finally graft.plans.MvCatalog.clear()
@@ -1893,10 +1894,10 @@ object Extended {
           .groupBy(col("o_orderpriority"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_outer_mv"),
+        require(ScanPaths.reads(res, "lineitem_outer_mv"),
           s"q116 must be answered from the outer-join view:\n$plan")
         Seq("lineitem.parquet", "orders_dim.parquet").foreach(b =>
-          require(!plan.contains(b),
+          require(!ScanPaths.reads(res, b),
             s"q116 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("o_orderpriority"))
       } finally graft.plans.MvCatalog.clear()
@@ -2017,10 +2018,10 @@ object Extended {
           .groupBy(col("o_orderpriority"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("star_mv"),
+        require(ScanPaths.reads(res, "star_mv"),
           s"q110 must be answered from the star view:\n$plan")
         Seq("lineitem.parquet", "orders.parquet", "customer.parquet").foreach(b =>
-          require(!plan.contains(b),
+          require(!ScanPaths.reads(res, b),
             s"q110 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("o_orderpriority"))
       } finally graft.plans.MvCatalog.clear()
@@ -2111,10 +2112,10 @@ object Extended {
           .groupBy(col("l_linestatus"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("union_mv"),
+        require(ScanPaths.reads(res, "union_mv"),
           s"q111 must be answered from the union view:\n$plan")
         Seq("li_cold.parquet", "li_hot.parquet").foreach(b =>
-          require(!plan.contains(b),
+          require(!ScanPaths.reads(res, b),
             s"q111 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
@@ -2172,9 +2173,9 @@ object Extended {
           .agg(expr("hll_sketch_estimate(hll_sketch_agg(l_partkey, 12))").as("est"),
                count(lit(1)).as("n_items"))
         val plan = est.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_mv_sk"),
+        require(ScanPaths.reads(est, "lineitem_mv_sk"),
           s"q112's estimate must be answered from the sketch view:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(est, "lineitem.parquet"),
           s"q112's estimate subplan must not touch the base table:\n$plan")
         // the MV-answered rows become a FACT before the registry is
         // cleared — composing lazily would re-optimize the estimate
@@ -2250,9 +2251,9 @@ object Extended {
           .groupBy(col("l_returnflag"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("lineitem_proj"),
+        require(ScanPaths.reads(res, "lineitem_proj"),
           s"q113 must be served from the covering projection:\n$plan")
-        require(!plan.contains("lineitem.parquet"),
+        require(!ScanPaths.reads(res, "lineitem.parquet"),
           s"q113 must not touch the base table:\n$plan")
         require(plan.contains("GreaterThanOrEqual(l_shipdate"),
           s"q113's date range must be pushed into the projection scan:\n$plan")
@@ -2316,9 +2317,9 @@ object Extended {
           .groupBy(col("l_returnflag"))
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("n_items"))
         val plan = res.queryExecution.executedPlan.toString
-        require(plan.contains("li_main_proj"),
+        require(ScanPaths.reads(res, "li_main_proj"),
           s"q117 must be served from the maintained projection:\n$plan")
-        require(!plan.contains("li_main.parquet"),
+        require(!ScanPaths.reads(res, "li_main.parquet"),
           s"q117 must not touch the base table:\n$plan")
         require(plan.contains("GreaterThanOrEqual(l_shipdate"),
           s"q117's date range must be pushed into the projection scan:\n$plan")

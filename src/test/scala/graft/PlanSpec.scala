@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
 import graft.queries.{Extended, Relational}
+import graft.util.ScanPaths
 
 /** Physical-plan assertions (SURVEY.md: "the plan you'd want, not the first
   * one that passed"). These lock in the scale-critical plan properties so a
@@ -399,5 +400,29 @@ class PlanSpec extends AnyFunSuite {
     assert(windows.nonEmpty && windows.forall(w =>
       w.contains("event_type") && !w.contains("user_id")),
       s"the cumulative window must run on the aggregated frame only:\n$windows")
+  }
+
+  test("ScanPaths sees scan roots past the plan string's truncation width") {
+    // Spark abbreviates a scan's Location to spark.sql.maxMetadataStringLength
+    // (100) characters; nest both tables under a longer directory so plan
+    // text loses them, and the "served from the view" gates must not.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_scanpaths_").toFile
+    try {
+      val deep = new java.io.File(tmp, "d" * 120)
+      val base = new java.io.File(deep, "base.parquet").getAbsolutePath
+      val view = new java.io.File(deep, "base_view").getAbsolutePath
+      spark.range(5).write.parquet(base)
+      spark.range(3).write.parquet(view)
+      val both = spark.read.parquet(view).union(spark.read.parquet(base))
+      val plan = planOf(both)
+      assert(!plan.contains("base_view") && !plan.contains("base.parquet"),
+        s"the plan text was expected to truncate both paths:\n$plan")
+      assert(ScanPaths.reads(both, "base_view"), "positive path must be seen")
+      assert(ScanPaths.reads(both, "base.parquet"), "negative path must be seen")
+      val viewOnly = spark.read.parquet(view)
+      assert(ScanPaths.reads(viewOnly, "base_view"))
+      assert(!ScanPaths.reads(viewOnly, "base.parquet"))
+      assert(!ScanPaths.reads(viewOnly, "base"), "a name matches whole path components only")
+    } finally graft.util.Fs.deleteTree(tmp)
   }
 }

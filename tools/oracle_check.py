@@ -3,10 +3,13 @@
 
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 
-Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
-matching SQL from oracle_sql.json in DuckDB (tables = <sfDir>/*.parquet
-registered as views by bare name), canonicalizes both sides (columns sorted
-by name, rows sorted, doubles compared bitwise) and reports match/mismatch.
+For every name in <verifyOutDir>/oracle_sql.json (written by graft.Verify),
+reads the <verifyOutDir>/<name> parquet, runs the name's SQL in DuckDB
+(tables = <sfDir>/*.parquet registered as views by bare name),
+canonicalizes both sides (columns sorted by name, rows sorted, doubles
+compared bitwise) and reports match/mismatch.
+The count is over the declared names, so a query whose output is missing
+(it threw in Verify) counts as a failure instead of dropping out.
 Dev-only tooling — not part of the shipped library.
 """
 import sys, os, json, glob
@@ -28,18 +31,15 @@ def main(sf_dir, out_dir):
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
     n_ok = 0
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
+    names = sorted(oracle)
     for name in names:
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"[FAIL] {name}: no engine output"); continue
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         if not files:
             print(f"[FAIL] {name}: no engine output parquet"); continue
         got = pd.concat([pd.read_parquet(f) for f in sorted(files)],
                         ignore_index=True)
-        if name not in oracle:
-            print(f"[skip] {name}: no oracle sql (rows-only: {len(got)})")
-            n_ok += 1
-            continue
         try:
             exp = con.execute(oracle[name]).df()
         except Exception as e:

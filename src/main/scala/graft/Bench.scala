@@ -120,11 +120,15 @@ object Bench {
     results.toMap
   }
 
+  /** Exits 1 when any query failed (after its JSON line is printed):
+    * `total` sums only the queries that ran, so a failure must not read
+    * as a faster battery. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session()
-    runBattery(spark, sfDir)
+    val results = runBattery(spark, sfDir)
     spark.stop()
+    if (results.values.exists(_ < 0)) sys.exit(1)
   }
 }
 

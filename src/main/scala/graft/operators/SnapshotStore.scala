@@ -46,10 +46,15 @@ import org.apache.spark.sql.types._
   * predicate with each file's [min, max] driver-side (manifest-sized
   * work, no I/O) and returns only the overlapping files, which is what
   * makes range scans on a range-clustered table open a few files instead
-  * of all of them. Stats are computed from one column-pruned read of the
-  * newly written files only (never the whole table), and a file whose
+  * of all of them. Stats come from the newly written files' parquet
+  * footers (never the whole table); only a column a footer cannot answer
+  * exactly is aggregated over those files ([[newEntries]]). A file whose
   * stats column is all-null simply carries no interval — it is always
   * kept, never wrongly pruned.
+  *
+  * Manifest metadata never runs a Spark job: the driver writes every
+  * delta segment and checkpoint and folds them back ([[ManifestCodec]]),
+  * so a commit's jobs are its data work alone.
   *
   * Layout under the table root (all manifest paths RELATIVE to the root,
   * so a table survives relocation):
@@ -144,9 +149,9 @@ object SnapshotStore {
 
   /** Roll the fold into a checkpoint once this many delta segments have
     * accumulated past the previous checkpoint — bounding every read's
-    * segment count while keeping commits delta-sized. The checkpoint
-    * write itself is a distributed job over the (metadata-sized)
-    * segments, amortized 1/16 per commit. */
+    * segment count (and so the fold's driver memory) while keeping
+    * commits delta-sized. The checkpoint is the driver's fold written as
+    * one segment, amortized 1/16 per commit. */
   private val CheckpointEvery = 16L
 
   private def fsOf(spark: SparkSession, root: Path): FileSystem =
@@ -202,53 +207,60 @@ object SnapshotStore {
       }).toMap
 
   /** The segments whose fold is version `v`'s live set: the newest
-    * checkpoint at or below `v` (if any) plus every delta after it.
-    * Returns (checkpoint version or 0, segment dirs in order). */
-  private def segmentDirs(fs: FileSystem, root: Path, v: Long): (Long, Seq[Path]) = {
+    * checkpoint at or below `v` (if any) plus every delta after it. */
+  private def segmentDirs(fs: FileSystem, root: Path, v: Long): Seq[Path] = {
     requireFormat(fs, root) // every fold resolves through here
     val c = ckptVersions(fs, root).filter(_ <= v).lastOption.getOrElse(0L)
-    val dirs = (if (c > 0) Seq(ckptDir(root, c)) else Nil) ++
-      ((c + 1) to v).map(manifestDir(root, _))
-    dirs.foreach(d => require(fs.exists(d),
-      s"manifest segment missing at $root: ${d.getName} — corrupt table " +
-        "(a delta was deleted without a covering checkpoint)"))
-    (c, dirs)
+    (if (c > 0) Seq(ckptDir(root, c)) else Nil) ++ ((c + 1) to v).map(manifestDir(root, _))
   }
 
-  /** Whether any delta in (c, v] can carry remove rows — read from the
-    * markers' recorded counts (tiny driver reads), so the common
-    * append-only fold skips the anti-join entirely. Unknown ⇒ true. */
-  private def mayRemove(fs: FileSystem, root: Path, c: Long, v: Long): Boolean =
-    ((c + 1) to v).exists { dv =>
-      !fs.exists(markerPath(root, dv)) || // staged segment: assume anything
-        !markerFields(fs, root, dv).get("removes").contains("0")
+  /** One segment's rows; a missing segment refuses as a corrupt table. */
+  private def readSegment(fs: FileSystem, root: Path, dir: Path): Seq[ManifestRow] =
+    try ManifestCodec.read(fs, dir)
+    catch { case _: java.io.FileNotFoundException =>
+      throw new IllegalArgumentException(
+        s"requirement failed: manifest segment missing at $root: ${dir.getName} — " +
+          "corrupt table (a delta was deleted without a covering checkpoint)")
     }
 
-  private lazy val manifestSchema: StructType =
-    Encoders.product[ManifestRow].schema
-
-  /** The SEGMENT FOLD as a Dataset: one parquet read over the segment
-    * dirs; when any segment may remove, drop every add whose path a
-    * remove names (order-free — see [[ManifestRow]]). Manifest processing
-    * stays distributed; callers collect only the final pruned list. */
-  private def foldSegments(spark: SparkSession, dirs: Seq[Path],
-                           withRemoves: Boolean): org.apache.spark.sql.Dataset[ManifestRow] = {
-    implicit val enc = Encoders.product[ManifestRow]
-    val all = spark.read.schema(manifestSchema)
-      .parquet(dirs.map(_.toString): _*).as[ManifestRow]
-    if (!withRemoves) all
-    else {
-      // txn rows ride along untouched (they are lineage markers, not
-      // files — the remove anti-join must never see them)
-      val txns = all.filter(col("action") === "txn")
-      val adds = all.filter(col("action") === "add")
-      val removes = all.filter(col("action") === "remove").select(col("path"))
-      adds.join(removes, Seq("path"), "left_anti")
-        .select(col("action"), col("kind"), col("path"), col("rows"),
-          col("bytes"), col("stats")).as[ManifestRow]
-        .unionByName(txns)
-    }
+  /** THE FOLD, on the driver: live = adds ∖ removes by path (order-free —
+    * see [[ManifestRow]]) plus the newest txn row per writer lineage (so a
+    * checkpoint of the fold carries ONE txn row per lineage, not one per
+    * batch). Driver memory: the rows read, i.e. the checkpoint's rows plus
+    * the deltas after it — at most [[CheckpointEvery]] of them while the
+    * automatic roll keeps up; the same list [[liveSplit]] collects. */
+  private def foldRows(rows: Seq[ManifestRow]): Seq[ManifestRow] = {
+    val removed = rows.iterator.filter(_.action == "remove").map(_.path).toSet
+    val latestTxn = rows.filter(_.action == "txn").groupBy(_.kind).values
+      .map(_.maxBy(_.rows)).toSeq.sortBy(_.kind)
+    rows.filter(r => r.action == "add" && !removed.contains(r.path)) ++ latestTxn
   }
+
+  /** Version `v`'s fold, read from its segments by [[ManifestCodec]]. */
+  private def foldAt(fs: FileSystem, root: Path, v: Long): Seq[ManifestRow] =
+    foldRows(segmentDirs(fs, root, v).flatMap(readSegment(fs, root, _)))
+
+  /** The fold of a committed version (refuses an uncommitted one). */
+  private def committedFold(spark: SparkSession, path: String,
+                            v: Long): Seq[ManifestRow] = {
+    val root = new Path(path)
+    val fs = fsOf(spark, root)
+    require(fs.exists(markerPath(root, v)), s"version $v not committed at $path")
+    foldAt(fs, root, v)
+  }
+
+  private def fileEntries(rows: Seq[ManifestRow], kind: String): Seq[FileEntry] =
+    rows.filter(r => r.action == "add" && r.kind == kind)
+      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats)).sortBy(_.path)
+
+  /** (data entries, tombstone entries) of a fold. */
+  private def split(rows: Seq[ManifestRow]): (Seq[FileEntry], Seq[FileEntry]) =
+    (fileEntries(rows, "data"), fileEntries(rows, "tombstone"))
+
+  /** The newest batch id lineage `txnId` committed, within a fold. */
+  private def txnMark(rows: Seq[ManifestRow], txnId: String): Option[Long] =
+    rows.filter(r => r.action == "txn" && r.kind == s"txn:$txnId")
+      .map(_.rows).maxOption
 
   /** The newest batch id writer lineage `txnId` has committed to this
     * table, read from the manifest fold (the txn rows commit ATOMICALLY
@@ -256,50 +268,25 @@ object SnapshotStore {
   def lastTxn(spark: SparkSession, path: String, txnId: String): Option[Long] = {
     val vs = versions(spark, path)
     if (vs.isEmpty) None
-    else manifestRowsDs(spark, path, vs.last)
-      .filter(col("action") === "txn" && col("kind") === s"txn:$txnId")
-      .collect().map(_.rows).maxOption
-  }
-
-  /** Live manifest rows (data + tombstone entries) of committed version
-    * `v`, as a Dataset — the scale-safe form ([[entries]] collects it). */
-  def manifestRowsDs(spark: SparkSession, path: String,
-                     v: Long): org.apache.spark.sql.Dataset[ManifestRow] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    require(fs.exists(markerPath(root, v)), s"version $v not committed at $path")
-    val (c, dirs) = segmentDirs(fs, root, v)
-    foldSegments(spark, dirs, mayRemove(fs, root, c, v))
+    else txnMark(committedFold(spark, path, vs.last), txnId)
   }
 
   /** The manifest of version `v`: DATA file list with stats,
-    * root-relative, driver-collected (the final prune step — bounded by
-    * the version's live file count; commit paths never call this). */
+    * root-relative, folded on the driver (bounded by the version's live
+    * file count plus the deltas since its checkpoint). */
   def entries(spark: SparkSession, path: String, v: Long): Seq[FileEntry] =
-    manifestRowsDs(spark, path, v).collect().toSeq
-      .filter(_.kind == "data")
-      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats))
-      .sortBy(_.path)
+    fileEntries(committedFold(spark, path, v), "data")
 
   /** Live row-tombstone files of version `v` (merge-on-read deletes). */
   def tombstoneEntries(spark: SparkSession, path: String,
                        v: Long): Seq[FileEntry] =
-    manifestRowsDs(spark, path, v).collect().toSeq
-      .filter(_.kind == "tombstone")
-      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats))
-      .sortBy(_.path)
+    fileEntries(committedFold(spark, path, v), "tombstone")
 
-  /** ONE fold collect, split (data entries, tombstone entries) — the
-    * write paths and the read planners use this so an op pays a single
-    * segment-fold job, not one per kind. */
+  /** ONE fold, split (data entries, tombstone entries) — the write paths
+    * and the read planners use this so an op folds each version once. */
   private[graft] def liveSplit(spark: SparkSession, path: String,
-                               v: Long): (Seq[FileEntry], Seq[FileEntry]) = {
-    val all = manifestRowsDs(spark, path, v).collect().toSeq
-    (all.filter(_.kind == "data")
-      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats)).sortBy(_.path),
-      all.filter(_.kind == "tombstone")
-        .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats)).sortBy(_.path))
-  }
+                               v: Long): (Seq[FileEntry], Seq[FileEntry]) =
+    split(committedFold(spark, path, v))
 
   /** The table schema is the HIGHEST-numbered schema file (`schema` = the
     * creation schema, `schema-<k>` = the k-th evolution). Each evolution
@@ -406,15 +393,14 @@ object SnapshotStore {
     * rows against the tombstones. */
   def readVersion(spark: SparkSession, path: String, v: Long): DataFrame = {
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val all = manifestRowsDs(spark, path, v).collect().toSeq
-    val es = all.filter(_.kind == "data")
-      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats)).sortBy(_.path)
-    val tombs = all.filter(_.kind == "tombstone")
-      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats))
-    if (es.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tableSchema(fs, root))
-    else readFilesResolved(spark, root, fs, es, tombs, tableSchema(fs, root))
+    readFold(spark, root, fsOf(spark, root), committedFold(spark, path, v))
+  }
+
+  /** Read a fold's live rows (tombstones resolved). */
+  private def readFold(spark: SparkSession, root: Path, fs: FileSystem,
+                       rows: Seq[ManifestRow]): DataFrame = {
+    val (es, tombs) = split(rows)
+    readFilesResolved(spark, root, fs, es, tombs, tableSchema(fs, root))
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -431,7 +417,7 @@ object SnapshotStore {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val v = currentVersion(spark, path)
-    // one fold job for tombstone check + file list (was two)
+    // one fold for tombstone check + file list
     val (es, tombs) = liveSplit(spark, path, v)
     require(tombs.isEmpty,
       s"readRelation: version $v at $path carries ${tombs.size} live row-" +
@@ -453,8 +439,26 @@ object SnapshotStore {
 
   // ---- zone-map pruning ----------------------------------------------------
 
-  private def cmp(kind: String, a: String, b: String): Int =
-    if (kind == "num") BigDecimal(a).compare(BigDecimal(b)) else a.compareTo(b)
+  /** THE stats order, shared by [[pruned]] and
+    * [[graft.plans.SnapshotFileIndex]]: `num` compares as BigDecimal; `str`
+    * in Unicode code-point order, which is UTF-8 byte order — the order
+    * Spark's `min`/`max` and parquet's footers record intervals in.
+    * (`String.compareTo` is UTF-16 code-unit order: it sorts U+1F600 below
+    * U+FFFF, and would prune a file holding the queried value.) */
+  private[graft] def compareStats(kind: String, a: String, b: String): Int =
+    if (kind == "num") BigDecimal(a).compare(BigDecimal(b))
+    else {
+      var i = 0
+      var j = 0
+      while (i < a.length && j < b.length) {
+        val ca = a.codePointAt(i)
+        val cb = b.codePointAt(j)
+        if (ca != cb) return Integer.compare(ca, cb)
+        i += Character.charCount(ca)
+        j += Character.charCount(cb)
+      }
+      Integer.compare(a.length - i, b.length - j)
+    }
 
   /** Manifest entries whose `[lo, hi]` interval on `col` overlaps the query
     * range — driver-side, manifest-sized, zero I/O. Files with no recorded
@@ -467,7 +471,7 @@ object SnapshotStore {
     es.filter { e =>
       e.stats.get(colName) match {
         case Some(s) =>
-          try cmp(s.kind, s.hi, lo) >= 0 && cmp(s.kind, s.lo, hi) <= 0
+          try compareStats(s.kind, s.hi, lo) >= 0 && compareStats(s.kind, s.lo, hi) <= 0
           catch { case _: NumberFormatException => true }
         case None => true
       }
@@ -604,7 +608,7 @@ object SnapshotStore {
         if (tombEs.isEmpty) { // nothing matched: a true no-op
           fs.delete(dir, true)
           cur
-        } else commitDelta(spark, root, fs, v,
+        } else commitDelta(root, fs, v,
           tombEs.map(addRow(_, kind = "tombstone")), Nil, "delete_mor")
       }
     }
@@ -659,7 +663,7 @@ object SnapshotStore {
           cur
         } else {
           val (_, newEs) = writeData(spark, root, fs, v, newImages, statsCols(fs, root))
-          commitDelta(spark, root, fs, v,
+          commitDelta(root, fs, v,
             tombEs.map(addRow(_, kind = "tombstone")) ++ newEs.map(addRow(_)),
             Nil, "update_mor")
         }
@@ -711,7 +715,7 @@ object SnapshotStore {
       if (newEs.isEmpty && tombEs.isEmpty) { // empty batch: true no-op
         fs.delete(dataDir, true)
         cur
-      } else commitDelta(spark, root, fs, v,
+      } else commitDelta(root, fs, v,
         tombEs.map(addRow(_, kind = "tombstone")) ++ newEs.map(addRow(_)),
         Nil, "merge_mor")
     }
@@ -758,7 +762,7 @@ object SnapshotStore {
     * aggregates: a NaN/Infinity min or max encodes as NULL, so the file
     * simply carries no interval (always kept) instead of a stats string
     * that would throw at prune time. */
-  private def statsEncoder(dt: DataType): Option[(String, Column => Column)] = dt match {
+  private[graft] def statsEncoder(dt: DataType): Option[(String, Column => Column)] = dt match {
     case FloatType | DoubleType => Some(("num", c =>
       when(isnan(c) || abs(c) === lit(Double.PositiveInfinity), lit(null))
         .otherwise(c.cast(StringType))))
@@ -788,40 +792,57 @@ object SnapshotStore {
   }
 
   /** Build manifest entries for freshly written files: one listing pass for
-    * bytes plus ONE column-pruned scan of only the new files for row counts
-    * and min/max per stats column (the whole-table is never re-read). */
+    * bytes, then each new file's parquet FOOTER for its row count and, per
+    * stats column, its min/max wherever the footer gives the canonical
+    * interval exactly ([[ManifestCodec.footerInterval]] names the cases it
+    * cannot: chosen by column type and footer content). Only those
+    * columns fall back to ONE column-pruned aggregate over only the files
+    * that need it; the whole table is never re-read. Zero-row part files
+    * are dead weight and never referenced. */
   private def newEntries(spark: SparkSession, root: Path, fs: FileSystem,
-                         commitDataDir: Path, cols: Seq[String]): Seq[FileEntry] = {
+                         commitDataDir: Path, schema: StructType,
+                         cols: Seq[String]): Seq[FileEntry] = {
     def rel(abs: String): String = relOf(fs, root, abs)
     if (!fs.exists(commitDataDir)) return Nil
-    val files = fs.listStatus(commitDataDir).iterator
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .map(f => rel(fs.makeQualified(f.getPath).toString) -> f.getLen)
-      .toMap
-    if (files.isEmpty) return Nil
-    val df = spark.read.parquet(
-      files.keysIterator.map(p => new Path(root, p).toString).toSeq: _*)
+    val written = fs.listStatus(commitDataDir).toSeq.filter(ManifestCodec.isDataFile)
+    if (written.isEmpty) return Nil
     val kinds = cols.flatMap(c =>
-      statsEncoder(df.schema(c).dataType).map { case (k, enc) => (c, k, enc) })
-    val aggs = count(lit(1)).as("__n") +: kinds.flatMap { case (c, _, enc) =>
-      Seq(enc(min(col(c))).as(s"__lo_$c"), enc(max(col(c))).as(s"__hi_$c"))
-    }
-    val statRows = df.groupBy(col("_metadata.file_path").as("__fp"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val byFile = statRows.map(r => rel(r.getString(0)) -> r).toMap
-    files.toSeq.sortBy(_._1).flatMap { case (p, bytes) =>
-      byFile.get(p) match {
-        case None => None // zero-row part file: dead weight, never referenced
-        case Some(r) =>
-          val st = kinds.flatMap { case (c, kind, _) =>
-            val lo = r.getAs[String](s"__lo_$c")
-            val hi = r.getAs[String](s"__hi_$c")
-            if (lo == null || hi == null) None // all-null column: no interval
-            else Some(c -> ColStats(lo, hi, kind))
-          }.toMap
-          Some(FileEntry(p, r.getAs[Long]("__n"), bytes, st))
+      statsEncoder(schema(c).dataType).map { case (k, enc) => (c, k, enc) })
+    val truncLen = "parquet.statistics.truncate.length"
+    val binaryTruncated = spark.conf.getOption(truncLen)
+      .orElse(Option(spark.sparkContext.hadoopConfiguration.get(truncLen)))
+      .exists(_.trim.toIntOption.forall(_ < Int.MaxValue))
+    // per file: (path, bytes, rows, column → footer interval)
+    val files = written.map { f =>
+      val meta = ManifestCodec.footer(fs, f)
+      (rel(fs.makeQualified(f.getPath).toString), f.getLen, ManifestCodec.rowCount(meta),
+        kinds.map { case (c, _, _) =>
+          c -> ManifestCodec.footerInterval(meta, c, schema(c).dataType, binaryTruncated)
+        }.toMap)
+    }.filter(_._3 > 0).sortBy(_._1)
+    // the cells no footer answers: one aggregate job over just their files
+    val aggFiles = files.filter(_._4.values.exists(_.isEmpty))
+    val aggCols = kinds.filter { case (c, _, _) => aggFiles.exists(_._4(c).isEmpty) }
+    val aggregated: Map[String, Row] =
+      if (aggCols.isEmpty) Map.empty
+      else {
+        val aggs = aggCols.flatMap { case (c, _, enc) =>
+          Seq(enc(min(col(c))).as(s"__lo_$c"), enc(max(col(c))).as(s"__hi_$c"))
+        }
+        spark.read.schema(StructType(aggCols.map { case (c, _, _) => schema(c) }))
+          .parquet(aggFiles.map(f => new Path(root, f._1).toString): _*)
+          .groupBy(col("_metadata.file_path").as("__fp"))
+          .agg(aggs.head, aggs.tail: _*).collect()
+          .map(r => rel(r.getString(0)) -> r).toMap
       }
+    files.map { case (p, bytes, n, fromFooter) =>
+      val st = kinds.flatMap { case (c, kind, _) =>
+        fromFooter(c).getOrElse {
+          val r = aggregated(p)
+          Option(r.getAs[String](s"__lo_$c")).zip(Option(r.getAs[String](s"__hi_$c")))
+        }.map { case (lo, hi) => c -> ColStats(lo, hi, kind) } // all-null: no interval
+      }.toMap
+      FileEntry(p, n, bytes, st)
     }
   }
 
@@ -841,7 +862,7 @@ object SnapshotStore {
     val dir = new Path(root,
       s"data/c$v-${java.util.UUID.randomUUID().toString.take(8)}")
     df.write.mode("overwrite").parquet(dir.toString)
-    (dir, newEntries(spark, root, fs, dir, cols))
+    (dir, newEntries(spark, root, fs, dir, df.schema, cols))
   }
 
   /** Raised at the commit point when version `v`'s slot is taken.
@@ -861,22 +882,22 @@ object SnapshotStore {
     * production. */
   @volatile private[graft] var commitFence: () => Unit = () => ()
 
-  /** The atomic commit of one DELTA segment: add/remove rows to a tmp
-    * sibling, rename to `v<N>`, then the fail-if-exists marker. The
+  /** The atomic commit of one DELTA segment: the driver writes the
+    * add/remove rows ([[ManifestCodec]] — no Spark job) to a tmp sibling,
+    * renames it to `v<N>`, then creates the fail-if-exists marker. The
     * marker is the ONLY commit point — a conflicting committer loses
     * cleanly and its segment/data garbage awaits vacuum; the table is
     * never ambiguous. Cost is O(this commit's churn): the previous
     * version's file list is never read, collected, or rewritten here.
-    * The marker body records op, parent, add/remove counts (the fold's
-    * fast path) and the commit instant (timestamp time travel). */
-  private def commitDelta(spark: SparkSession, root: Path, fs: FileSystem,
+    * The marker body records op, parent, add/remove counts (what the
+    * change feed classifies commits by, without reading a segment) and
+    * the commit instant (timestamp time travel). */
+  private def commitDelta(root: Path, fs: FileSystem,
                           v: Long, adds: Seq[ManifestRow],
                           removePaths: Seq[String], op: String): Long = {
     commitFence()
     val tmp = new Path(snapDir(root), s"tmp-$v-${java.util.UUID.randomUUID()}")
-    implicit val enc = Encoders.product[ManifestRow]
-    spark.createDataset(adds ++ removePaths.map(removeRow))
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    ManifestCodec.write(fs, tmp, adds ++ removePaths.map(removeRow))
     val dst = manifestDir(root, v)
     def conflict(committed: Boolean): Nothing = {
       fs.delete(tmp, true)
@@ -898,14 +919,15 @@ object SnapshotStore {
         s"ts=${System.currentTimeMillis()}")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    // roll a checkpoint once enough deltas accumulated (distributed job,
-    // amortized 1/CheckpointEvery per commit; best-effort — the commit
-    // marker is already down, so a failure here must not fail the commit:
-    // it leaves a longer fold, never a wrong one; vacuum's own checkpoint
-    // call, by contrast, surfaces failures — it deletes covered deltas)
-    val c = ckptVersions(fs, root).filter(_ <= v).lastOption.getOrElse(0L)
-    if (v - c >= CheckpointEvery)
-      try writeCheckpoint(spark, root, fs, v)
+    // roll a checkpoint once enough deltas accumulated (amortized
+    // 1/CheckpointEvery per commit; no listing below that many versions;
+    // best-effort — the commit marker is already down, so a failure here
+    // must not fail the commit: it leaves a longer fold, never a wrong one;
+    // vacuum's own checkpoint call, by contrast, surfaces failures — it
+    // deletes covered deltas)
+    if (v >= CheckpointEvery &&
+        v - ckptVersions(fs, root).filter(_ <= v).lastOption.getOrElse(0L) >= CheckpointEvery)
+      try writeCheckpoint(root, fs, v)
       catch { case scala.util.control.NonFatal(_) => () }
     v
   }
@@ -918,26 +940,11 @@ object SnapshotStore {
     * missing checkpoint, or kept versions lose their covering segment).
     * Every read of `v` or later then starts from this segment instead of
     * replaying the full delta history. */
-  private def writeCheckpoint(spark: SparkSession, root: Path,
-                              fs: FileSystem, v: Long): Unit = {
-    val (c, dirs) = segmentDirs(fs, root, v)
-    val live0 = foldSegments(spark, dirs, mayRemove(fs, root, c, v))
-    // bound persistent txn state to ONE row per writer lineage (else a
-    // long-lived stream's per-batch txn rows would accumulate across
-    // checkpoints): keep only the max batch id per lineage kind
-    implicit val enc = Encoders.product[ManifestRow]
-    val latestTxn = live0.filter((r: ManifestRow) => r.action == "txn")
-      .groupByKey((r: ManifestRow) => r.kind)(Encoders.STRING)
-      .reduceGroups((a: ManifestRow, b: ManifestRow) =>
-        if (a.rows >= b.rows) a else b)
-      .map(_._2)
-    val live = live0.filter((r: ManifestRow) => r.action != "txn")
-      .union(latestTxn)
+  private def writeCheckpoint(root: Path, fs: FileSystem, v: Long): Unit = {
     val tmp = new Path(snapDir(root), s"tmpckpt-$v-${java.util.UUID.randomUUID()}")
-    // one writer task: a checkpoint is manifest-sized (≈50 MB / 10⁶ files
-    // at 100 TB), not data-sized — a single parquet part keeps the next
-    // fold's read one footer instead of many
-    live.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    // one parquet file: a checkpoint is manifest-sized (≈50 MB / 10⁶ files
+    // at 100 TB), not data-sized, so the next fold reads one footer
+    ManifestCodec.write(fs, tmp, foldAt(fs, root, v))
     if (!fs.rename(tmp, ckptDir(root, v))) {
       fs.delete(tmp, true)
       if (!fs.exists(ckptDir(root, v))) throw new java.io.IOException(
@@ -953,7 +960,7 @@ object SnapshotStore {
     val fs = fsOf(spark, root)
     Lease.withLease(fs, root, "snapshot manifest checkpoint") {
       val v = currentVersion(spark, path)
-      if (!fs.exists(ckptDir(root, v))) writeCheckpoint(spark, root, fs, v)
+      if (!fs.exists(ckptDir(root, v))) writeCheckpoint(root, fs, v)
     }
   }
 
@@ -989,7 +996,7 @@ object SnapshotStore {
             .sortWithinPartitions(clusterBy.map(col): _*)
         else if (numFiles > 0) df.repartition(numFiles)
         else df
-      commitDelta(spark, root, fs, 1L,
+      commitDelta(root, fs, 1L,
         writeData(spark, root, fs, 1L, shaped, statsColumns)._2.map(addRow(_)) ++
           txn.map { case (id, b) => txnRow(id, b) }.toSeq,
         Nil, "create")
@@ -1065,7 +1072,7 @@ object SnapshotStore {
         } else withCommitRebase("snapshot append") { _ =>
           // re-resolve per attempt; the data dir's name keeps the FIRST
           // attempt's slot number — cosmetic only, paths are opaque
-          commitDelta(spark, root, fs, currentVersion(spark, path) + 1,
+          commitDelta(root, fs, currentVersion(spark, path) + 1,
             newEs.map(addRow(_)) ++
               txn.map { case (id, b) => txnRow(id, b) }.toSeq,
             Nil, "append")
@@ -1094,9 +1101,8 @@ object SnapshotStore {
       // BEFORE the key anti-join — the content-level idempotence below
       // stays as the cross-lineage (fresh-checkpoint) safety net
       val curT = currentVersion(spark, path)
-      val replayed = txn.exists { case (id, b) =>
-        lastTxn(spark, path, id).exists(_ >= b)
-      }
+      val foldT = committedFold(spark, path, curT)
+      val replayed = txn.exists { case (id, b) => txnMark(foldT, id).exists(_ >= b) }
       if (replayed) curT
       else withCommitRebase("snapshot dedup append") { attempt =>
         // each attempt re-derives the anti-join against the CURRENT head:
@@ -1106,15 +1112,17 @@ object SnapshotStore {
         // rebase re-filters and re-writes (the lost attempt's data dir is
         // vacuum garbage)
         val cur = currentVersion(spark, path)
+        // the head's fold is the one read above unless a rebase moved it
+        val rows = if (cur == curT) foldT else committedFold(spark, path, cur)
         val inBatch = DedupAppend.survivors(df, keys, tieBreak)
         val fresh = inBatch.join(
-          readVersion(spark, path, cur).select(keys.map(col): _*), keys, "left_anti")
+          readFold(spark, root, fs, rows).select(keys.map(col): _*), keys, "left_anti")
         val v = cur + 1
         val (dataDir, newEs) = writeData(spark, root, fs, v, fresh, statsCols(fs, root))
         if (newEs.isEmpty) { // fully re-delivered batch: idempotent no-op
           fs.delete(dataDir, true)
           cur
-        } else commitDelta(spark, root, fs, v,
+        } else commitDelta(root, fs, v,
           newEs.map(addRow(_)) ++
             txn.map { case (id, b) => txnRow(id, b) }.toSeq,
           Nil, "append_dedup")
@@ -1139,7 +1147,7 @@ object SnapshotStore {
       val removed = { val (es, tombs) = liveSplit(spark, path, cur)
         es.map(_.path) ++ tombs.map(_.path) }
       val v = cur + 1
-      commitDelta(spark, root, fs, v,
+      commitDelta(root, fs, v,
         writeData(spark, root, fs, v,
           df.select(schema.fieldNames.toSeq.map(col): _*),
           statsCols(fs, root))._2.map(addRow(_)),
@@ -1191,7 +1199,7 @@ object SnapshotStore {
           .filter(!(pred <=> lit(true)))
         // delta: the rewritten files in, the touched originals out — the
         // untouched majority is never even named
-        commitDelta(spark, root, fs, v,
+        commitDelta(root, fs, v,
           writeData(spark, root, fs, v, kept, statsCols(fs, root))._2.map(addRow(_)),
           touched.map(_.path), "delete")
       }
@@ -1226,7 +1234,7 @@ object SnapshotStore {
               case None => col(c)
             }
           }: _*)
-        commitDelta(spark, root, fs, v,
+        commitDelta(root, fs, v,
           writeData(spark, root, fs, v, updated, statsCols(fs, root))._2.map(addRow(_)),
           touched.map(_.path), "update")
       }
@@ -1309,7 +1317,7 @@ object SnapshotStore {
       if (newEs.isEmpty && touched.isEmpty) { // empty batch: true no-op
         fs.delete(dataDir, true)
         cur
-      } else commitDelta(spark, root, fs, v, newEs.map(addRow(_)),
+      } else commitDelta(root, fs, v, newEs.map(addRow(_)),
         touched.map(_.path), "merge")
     }
   }
@@ -1384,7 +1392,7 @@ object SnapshotStore {
       // compaction's delta removes EVERY current file (data and any live
       // row tombstones — the rewrite read is tombstone-resolved, so the
       // new files carry the net rows and the tombstones fold away here)
-      commitDelta(spark, root, fs, v,
+      commitDelta(root, fs, v,
         writeData(spark, root, fs, v, shaped, statsCols(fs, root))._2.map(addRow(_)),
         es.map(_.path) ++ tombs.map(_.path),
         "compact")
@@ -1414,9 +1422,7 @@ object SnapshotStore {
       val v = cur + 1
       val (dataDir, newEs) = writeData(spark, root, fs, v, df, statsCols(fs, root))
       val tmp = new Path(snapDir(root), s"tmp-$v-${java.util.UUID.randomUUID()}")
-      implicit val enc = Encoders.product[ManifestRow]
-      spark.createDataset(newEs.map(addRow(_)))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      ManifestCodec.write(fs, tmp, newEs.map(addRow(_)))
       val dst = manifestDir(root, v)
       if (fs.exists(dst) || fs.exists(markerPath(root, v)) || !fs.rename(tmp, dst)) {
         fs.delete(tmp, true)
@@ -1437,14 +1443,8 @@ object SnapshotStore {
       s"version $v at $path is not a staged (unpublished) version")
     require(fs.exists(markerPath(root, v - 1)),
       s"staged version $v at $path has no committed base v${v - 1}")
-    val (_, baseDirs) = segmentDirs(fs, root, v - 1)
-    val all = foldSegments(spark, baseDirs :+ manifestDir(root, v),
-      withRemoves = true).collect().toSeq
-    val es = all.filter(_.kind == "data")
-      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats)).sortBy(_.path)
-    val tombs = all.filter(_.kind == "tombstone")
-      .map(r => FileEntry(r.path, r.rows, r.bytes, r.stats))
-    readFilesResolved(spark, root, fs, es, tombs, tableSchema(fs, root))
+    readFold(spark, root, fs, foldRows(
+      (segmentDirs(fs, root, v - 1) :+ manifestDir(root, v)).flatMap(readSegment(fs, root, _))))
   }
 
   /** Publish a staged version: ONE marker create — the same atomic commit
@@ -1464,10 +1464,7 @@ object SnapshotStore {
       if (cur != v - 1) throw new java.io.IOException(
         s"snapshot publish conflict at $path: staged v$v audited against v${v - 1} " +
           s"but current is v$cur — re-stage against the new current version")
-      implicit val enc = Encoders.product[ManifestRow]
-      val stagedAdds = spark.read.schema(manifestSchema)
-        .parquet(manifestDir(root, v).toString).as[ManifestRow]
-        .collect().toSeq.filter(_.action == "add")
+      val stagedAdds = ManifestCodec.read(fs, manifestDir(root, v)).filter(_.action == "add")
       val missing = stagedAdds.filterNot(e => fs.exists(new Path(root, e.path)))
       if (missing.nonEmpty) throw new java.io.IOException(
         s"snapshot publish refused at $path: staged v$v references " +
@@ -1519,7 +1516,13 @@ object SnapshotStore {
     * for the churn between the versions, never the table. Net semantics
     * via exact multiset difference (exceptAll both ways): an update is an
     * insert+delete pair, and a pure rewrite (compaction) that changed
-    * files but not content yields an EMPTY delta. This is what lets an
+    * files but not content yields an EMPTY delta. A window's trailing
+    * [[compact]] commits are answered from their MARKERS alone: compaction
+    * rewrites the tombstone-resolved rows, so its net delta is empty by
+    * construction, and the diff runs against the last commit before them
+    * (a window of compactions alone is empty with no job and no fold;
+    * the law in SnapshotStoreSpec checks `read(v-1) == read(v)` across a
+    * compaction so this shortcut cannot pass vacuously). This is what lets an
     * incremental consumer (a maintained MV, a replica, an index) follow
     * the table version-by-version without ever re-scanning it.
     *
@@ -1537,9 +1540,42 @@ object SnapshotStore {
                      fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV, s"changesBetween: fromV $fromV > toV $toV")
     val root = new Path(path)
-    changesBetweenSplits(spark, root, fsOf(spark, root),
-      liveSplit(spark, path, fromV), liveSplit(spark, path, toV))
+    val fs = fsOf(spark, root)
+    var to = toV
+    while (to > fromV && markerOp(fs, root, to).contains("compact")) to -= 1
+    if (to > fromV)
+      changesBetweenSplits(spark, root, fs,
+        liveSplit(spark, path, fromV), liveSplit(spark, path, to))
+    else {
+      require(fs.exists(markerPath(root, fromV)), s"version $fromV not committed at $path")
+      emptyChanges(spark, changeSchema(fs, root))
+    }
   }
+
+  /** The op a committed version's marker records; None when the marker
+    * is missing or carries no op (callers then take the general path,
+    * which refuses a missing version loudly). */
+  private def markerOp(fs: FileSystem, root: Path, v: Long): Option[String] =
+    try markerFields(fs, root, v).get("op")
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The table schema, refused when it collides with the change feed's
+    * reserved names. The guard covers EVERY branch (the fast paths add
+    * change_type too, and the general case additionally derives the
+    * sign/net/replicate scratch columns): a colliding table schema must
+    * refuse uniformly across commit shapes, never silently overwrite. */
+  private def changeSchema(fs: FileSystem, root: Path): StructType = {
+    val schema = tableSchema(fs, root)
+    require(Seq("__chg_sign", "__chg_net", "__chg_rep", "change_type")
+        .forall(c => !schema.fieldNames.contains(c)),
+      s"changesBetween: table schema collides with reserved column names")
+    schema
+  }
+
+  /** An empty change set: a local relation, so collecting it runs no job. */
+  private def emptyChanges(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      .withColumn("change_type", lit("insert"))
 
   /** [[changesBetween]] over PRE-COMPUTED manifest folds — the seam
     * multi-version consumers ([[changeFeedLegs]]) use so adjacent steps
@@ -1548,7 +1584,7 @@ object SnapshotStore {
                                    fs: FileSystem,
                                    fromSplit: (Seq[FileEntry], Seq[FileEntry]),
                                    toSplit: (Seq[FileEntry], Seq[FileEntry])): DataFrame = {
-    val schema = tableSchema(fs, root)
+    val schema = changeSchema(fs, root)
     val (fromEs, fromTombs) = fromSplit
     val (toEs, toTombs) = toSplit
     val fromPaths = fromEs.map(_.path).toSet
@@ -1569,13 +1605,6 @@ object SnapshotStore {
     // tombstones — carried-and-untombstoned files are never opened
     val beforeFiles = changed(fromEs, toPaths)
     val afterFiles = changed(toEs, fromPaths)
-    // reserved-name guard for EVERY branch (the fast paths add
-    // change_type too, and the general case additionally derives the
-    // sign/net/replicate scratch columns): a colliding table schema must
-    // refuse uniformly across commit shapes, never silently overwrite
-    require(Seq("__chg_sign", "__chg_net", "__chg_rep", "change_type")
-        .forall(c => !schema.fieldNames.contains(c)),
-      s"changesBetween: table schema collides with reserved column names")
     val before = readFilesResolved(spark, root, fs, beforeFiles, fromTombs, schema)
     val after = readFilesResolved(spark, root, fs, afterFiles, toTombs, schema)
     // One-sided fast paths: when a side of the manifest diff names NO
@@ -1641,7 +1670,12 @@ object SnapshotStore {
     *
     *  2. NON-APPEND STEPS share each boundary version's manifest fold
     *     through [[changesBetweenSplits]] (the loop folded every interior
-    *     version twice). */
+    *     version twice).
+    *
+    * A [[compact]] step delivers no leg, classified from its marker like
+    * the append runs: compaction's net delta is empty by construction
+    * (see [[changesBetween]]). A range of compactions alone yields one
+    * empty leg, so callers can always union the legs. */
   def changeFeedLegs(spark: SparkSession, path: String,
                      fromV: Long, toV: Long): Seq[DataFrame] = {
     require(1L <= fromV && fromV <= toV,
@@ -1650,8 +1684,9 @@ object SnapshotStore {
     val fs = fsOf(spark, root)
     val schema = tableSchema(fs, root)
     val appendOps = Set("create", "append", "append_dedup")
+    val markers = (fromV to toV).map(w => w -> markerFields(fs, root, w)).toMap
     def pureAppend(v: Long): Boolean = {
-      val f = markerFields(fs, root, v)
+      val f = markers(v)
       f.get("op").exists(appendOps.contains) && f.get("removes").contains("0") &&
         // vacuum may delete the oldest KEPT version's delta segment (its
         // fold rides the checkpoint): such a version must take the
@@ -1666,37 +1701,31 @@ object SnapshotStore {
         val run = scala.collection.mutable.ArrayBuffer(v)
         while (v + 1 <= toV && pureAppend(v + 1)) { v += 1; run += v }
         groups += Left(run.toSeq)
-      } else { groups += Right(v) }
+      } else if (!markers(v).get("op").contains("compact")) groups += Right(v)
       v += 1
     }
     // diff steps share boundary folds (step v needs v-1 and v; adjacent
     // diff steps share the middle version's fold through this cache)
     val splits = scala.collection.mutable.Map.empty[Long, (Seq[FileEntry], Seq[FileEntry])]
-    def split(w: Long) = splits.getOrElseUpdate(w, liveSplit(spark, path, w))
+    def splitOf(w: Long) = splits.getOrElseUpdate(w, liveSplit(spark, path, w))
     def emptyLeg: DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        .withColumn("change_type", lit("insert"))
-        .withColumn("_commit_version", lit(fromV))
+      emptyChanges(spark, schema).withColumn("_commit_version", lit(fromV))
+    if (groups.isEmpty) return Seq(emptyLeg)
     groups.toSeq.flatMap {
       case Right(1L) => // non-append v1 (e.g. publish): the full snapshot
-        Seq(readVersion(spark, path, 1L)
+        val (es, tombs) = splitOf(1L)
+        Seq(readFilesResolved(spark, root, fs, es, tombs, schema)
           .withColumn("change_type", lit("insert"))
           .withColumn("_commit_version", lit(1L)))
       case Right(w) =>
-        Seq(changesBetweenSplits(spark, root, fs, split(w - 1), split(w))
+        Seq(changesBetweenSplits(spark, root, fs, splitOf(w - 1), splitOf(w))
           .withColumn("_commit_version", lit(w)))
       case Left(run) =>
-        // every added data file of the run, with its version recovered
-        // from its SEGMENT's directory name (structural: _snapshots/v<N>/)
-        // — one metadata job for the whole run
-        val adds: Seq[(Long, String)] = spark.read.schema(manifestSchema)
-          .parquet(run.map(manifestDir(root, _).toString): _*)
-          .filter(col("action") === "add" && col("kind") === "data")
-          .select(col("path"), input_file_name())
-          .collect().toSeq.map { r =>
-            val seg = new Path(r.getString(1)).getParent.getName
-            (seg.stripPrefix("v").toLong, r.getString(0))
-          }
+        // every added data file of the run, tagged with the version of
+        // the SEGMENT it was read from — driver reads, no job
+        val adds: Seq[(Long, String)] = run.flatMap(w =>
+          readSegment(fs, root, manifestDir(root, w))
+            .filter(r => r.action == "add" && r.kind == "data").map(r => (w, r.path)))
         val dirForm = "^data/c([0-9]+)(-[^/]*)?/[^/]+$".r
         if (adds.isEmpty) Seq(emptyLeg)
         else if (adds.forall { case (w, rel) =>
@@ -1752,7 +1781,7 @@ object SnapshotStore {
       //    would otherwise compute `referenced` without the pre-window
       //    live files (data loss) and leave kept folds without a segment.
       if (dropped.nonEmpty && !ckptVersions(fs, root).contains(oldest))
-        writeCheckpoint(spark, root, fs, oldest)
+        writeCheckpoint(root, fs, oldest)
       if (dropped.nonEmpty) require(fs.exists(ckptDir(root, oldest)),
         s"vacuum: checkpoint at oldest kept version $oldest missing at $root " +
           "— refusing to drop deltas/files without their covering checkpoint")
@@ -1773,7 +1802,7 @@ object SnapshotStore {
         staged.map(manifestDir(root, _))
       // referenced stays a DATASET — never collected: at 10⁷ files a
       // driver-side Set here is the next memory ceiling in this path
-      val referencedDf = spark.read.schema(manifestSchema)
+      val referencedDf = spark.read.schema(Encoders.product[ManifestRow].schema)
         .parquet(keptSegs.map(_.toString): _*)
         .filter(col("action") === "add").select(col("path")).distinct()
       // markers first: a crash mid-vacuum must never leave a version that

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.SnapshotStore.{ColStats, FileEntry}
+import graft.operators.SnapshotStore.{ColStats, FileEntry, compareStats}
 
 /** The zone map pushed INTO Catalyst: a [[FileIndex]] over one committed
   * snapshot manifest whose `listFiles` intersects the query's OWN data
@@ -70,9 +70,6 @@ final class SnapshotFileIndex(
     case _ => None
   }
 
-  private def cmp(kind: String, a: String, b: String): Int =
-    if (kind == "num") BigDecimal(a).compare(BigDecimal(b)) else a.compareTo(b)
-
   /** Keep `e` unless its interval on `colName` is PROVEN disjoint from
     * [lo, hi] (either side open). An unparseable stats string (foreign or
     * corrupt manifest) keeps the file — pruning must never drop a file it
@@ -81,8 +78,8 @@ final class SnapshotFileIndex(
                        lo: Option[String], hi: Option[String]): Boolean =
     e.stats.get(colName) match {
       case Some(ColStats(eLo, eHi, kind)) =>
-        try lo.forall(l => cmp(kind, eHi, l) >= 0) &&
-          hi.forall(h => cmp(kind, eLo, h) <= 0)
+        try lo.forall(l => compareStats(kind, eHi, l) >= 0) &&
+          hi.forall(h => compareStats(kind, eLo, h) <= 0)
         catch { case _: NumberFormatException => true }
       case None => true // no interval recorded: never prune
     }

@@ -201,7 +201,7 @@ class SnapshotSource extends RelationProvider with CreatableRelationProvider
         SnapshotStore.versionAsOfTimestamp(spark, path, millis)
       case _ => SnapshotStore.currentVersion(spark, path)
     }
-    // one fold job for tombstone check + file list (was two)
+    // one fold for tombstone check + file list
     val (es, tombs) = SnapshotStore.liveSplit(spark, path, v)
     if (tombs.nonEmpty)
       // live merge-on-read tombstones: a pure file listing cannot apply

@@ -1009,4 +1009,55 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // plain values still translate
     assert(filterToColumn(In("a", Array(1, 2))).isDefined)
   }
+  test("zone map: str intervals compare in code-point (UTF-8 byte) order") {
+    import spark.implicits._
+    withTable { path =>
+      // one file whose stats column spans U+E000 .. U+1F600; in UTF-16
+      // code-unit order U+1F600 (a surrogate pair) sorts below U+FFFF, so a
+      // String.compareTo pruner would drop the file holding U+FFFF
+      val vals = Seq("\uE000", "\uFFFF", "\uD83D\uDE00")
+      SnapshotStore.create(spark, vals.toDF("s").coalesce(1), path, statsColumns = Seq("s"))
+      val es = SnapshotStore.entries(spark, path, 1)
+      assert(es.size == 1 && es.head.stats("s").lo == "\uE000" &&
+        es.head.stats("s").hi == "\uD83D\uDE00")
+      val q = "\uFFFF"
+      assert(SnapshotStore.pruned(es, "s", q, q).size == 1)
+      assert(SnapshotStore.readRelation(spark, path).filter(col("s") === q).count() == 1)
+      assert(SnapshotStore.read(spark, path).filter(col("s") === q).count() == 1)
+      // a value past the interval still prunes
+      assert(SnapshotStore.pruned(es, "s", "\uD83D\uDE01", "\uD83D\uDE01").isEmpty)
+    }
+  }
+
+  test("compaction is content-neutral: read(v-1) and read(v) are equal multisets") {
+    withTable { path =>
+      val d = docs.filter(col("doc_id") < 300)
+      SnapshotStore.create(spark, d, path, statsColumns = Seq("doc_id"),
+        clusterBy = Seq("doc_id"), numFiles = 3)
+      SnapshotStore.append(spark, d.filter(col("doc_id") < 40), path) // duplicate rows
+      SnapshotStore.deleteWhereMoR(spark, path, col("lang") === "de") // tombstones
+      assert(SnapshotStore.tombstoneEntries(spark, path, 3).nonEmpty)
+      val v = SnapshotStore.compact(spark, path, Long.MaxValue, clusterBy = Seq("doc_id"))
+      assert(v == 4L && SnapshotStore.tombstoneEntries(spark, path, v).isEmpty)
+      val before = SnapshotStore.readVersion(spark, path, v - 1)
+      val after = SnapshotStore.readVersion(spark, path, v)
+      assert(before.count() > d.filter(col("lang") =!= "de").count(), "duplicates kept")
+      assert(before.exceptAll(after).isEmpty && after.exceptAll(before).isEmpty)
+      assert(before.count() == after.count())
+      assert(SnapshotStore.changesBetween(spark, path, v - 1, v).isEmpty)
+      // a mixed window (append, then compact) still delivers the append
+      val add = d.filter(col("doc_id") < 5).withColumn("lang", lit("zz"))
+      SnapshotStore.append(spark, add, path)
+      val c = SnapshotStore.compact(spark, path, Long.MaxValue)
+      val fromBetween = SnapshotStore.changesBetween(spark, path, v, c)
+      assert(fromBetween.filter(col("change_type") =!= "insert").isEmpty)
+      assert(fromBetween.drop("change_type").exceptAll(add).isEmpty &&
+        add.exceptAll(fromBetween.drop("change_type")).isEmpty)
+      val legs = SnapshotStore.changeFeedLegs(spark, path, v, c).reduce(_ unionByName _)
+      assert(legs.filter(col("change_type") =!= "insert" ||
+        col("_commit_version") =!= c - 1).isEmpty)
+      val legRows = legs.drop("change_type", "_commit_version")
+      assert(legRows.exceptAll(add).isEmpty && add.exceptAll(legRows).isEmpty)
+    }
+  }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.TextFns.tokenSet
+
 /** PERSISTED MinHash-LSH band/signature index — the stored-index column
   * of [[TextDedup]]'s one MinHash pipeline (the matrix at the head of its
   * MinHash section), and the text-dedup analog of
@@ -46,11 +48,14 @@ import org.apache.spark.sql.types._
   * [[graft.plans.ProjectionCatalog.registerVerified]]), and
   * [[probeVerified]] REFUSES to mine from a stale index.
   *
-  * Determinism contract making stored ≡ fresh exact: signatures depend
-  * only on the token SET (minhashSignatures hashes tokenSet(text)), and
-  * reps carry the set's canonical token array — so a stored rep's bands
-  * and verify results are bit-identical to freshly-derived ones, whichever
-  * member of the group happens to be the rep (law in TextDedupSpec).
+  * Determinism contract making stored ≡ fresh exact: band keys depend
+  * only on the token SET ([[graft.functions.MinHashBands]] maps a
+  * distinct-token array to its keys, order-free), and reps carry the
+  * set's canonical token array — so a stored rep's bands and verify
+  * results are bit-identical to freshly-derived ones, whichever member of
+  * the group happens to be the rep (law in TextDedupSpec). The kernel
+  * reproduces the earlier explode + aggregate formulation bit for bit, so
+  * band tables stored before it stay valid.
   */
 object LshIndex {
 
@@ -82,18 +87,15 @@ object LshIndex {
         size(col("toks")).cast(LongType).as("n"))
   }
 
-  /** Band rows (key, rep, n, bucket) for rep rows. The signature is
-    * computed from the canonical token array (tokenSet of the rejoined
-    * text ≡ the set), so it equals the signature of any group member's
-    * original text — the determinism the stored≡fresh law rests on. */
-  private def bandsOf(reps: DataFrame, nBuckets: Int): DataFrame = {
-    val sigs = TextDedup.minhashSignatures(
-        reps.select(col("rep").as("doc_id"), concat_ws(" ", col("toks")).as("text")))
-      .join(reps.select(col("rep").as("doc_id"), col("n")), "doc_id")
-    TextDedup.bandKeys(sigs, Seq("n"))
-      .select(col("key"), col("doc_id").as("rep"), col("n"),
+  /** Band rows (key, rep, n, bucket) for rep rows, banded row-locally
+    * ([[TextDedup.bandRows]]) from tokenSet of the rejoined canonical
+    * token array (≡ the set), so they equal the bands of any group
+    * member's original text — the determinism the stored≡fresh law rests
+    * on. A rep with null toks bands as the text "" does. */
+  private def bandsOf(reps: DataFrame, nBuckets: Int): DataFrame =
+    TextDedup.bandRows(reps, tokenSet(concat_ws(" ", col("toks"))), col("rep"), col("n"))
+      .select(col("key"), col("rep"), col("n"),
         pmod(col("key"), lit(nBuckets.toLong)).as("bucket"))
-  }
 
   /** Build the index AT REST over a corpus (overwrite). The one
     * corpus-sized signature pass ever paid. */

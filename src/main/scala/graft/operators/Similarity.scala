@@ -798,9 +798,12 @@ object Similarity {
     *
     * Plane dots use the explode + codegen-agg formulation (one hash agg
     * with bands·rows integer-unit sums) — a dotUnits lambda per plane
-    * would evaluate interpreted (see minhashSignatures for the same
-    * choice), and integer units keep bucket signs order-independent and
-    * engine-exact. */
+    * would evaluate interpreted, and integer units keep bucket signs
+    * order-independent and engine-exact. At the 8×6 default the agg has
+    * 49 output fields, under `spark.sql.codegen.maxFields` (100), so it
+    * stays inside whole-stage codegen (PlanSpec guard); past that limit
+    * an agg silently runs interpreted, and a row-local native expression
+    * (the [[graft.functions.MinHashBands]] shape) is the way out. */
   def srpBandedNearDups(embeddings: DataFrame, threshold: Double,
                         bands: Int = BandCount, rows: Int = BandRows,
                         planes: Array[Array[Long]] = bandPlanes): DataFrame = {

@@ -996,12 +996,24 @@ object SnapshotStore {
             .sortWithinPartitions(clusterBy.map(col): _*)
         else if (numFiles > 0) df.repartition(numFiles)
         else df
-      commitDelta(root, fs, 1L,
-        writeData(spark, root, fs, 1L, shaped, statsColumns)._2.map(addRow(_)) ++
-          txn.map { case (id, b) => txnRow(id, b) }.toSeq,
+      // a frame whose optimized plan is an empty local relation (e.g.
+      // `batch.limit(0)`, a pipeline's empty day-0 create) commits v1
+      // with no data file: no write job, no zero-row part for vacuum
+      val adds =
+        if (isEmptyLocal(df)) Nil
+        else writeData(spark, root, fs, 1L, shaped, statsColumns)._2.map(addRow(_))
+      commitDelta(root, fs, 1L, adds ++ txn.map { case (id, b) => txnRow(id, b) }.toSeq,
         Nil, "create")
     }
   }
+
+  /** True when `df` is known empty without running a job: its optimized
+    * plan is a row-less local relation. */
+  private def isEmptyLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.isEmpty
+      case _ => false
+    }
 
   /** Batch-vs-table schema contract for content-replacing writes
     * (overwrite, merge): field NAMES and TYPES must match, order-

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.MinHashBands
 import graft.functions.TextFns._
 
 /** Text deduplication family for LLM training-data pipelines:
@@ -291,56 +292,16 @@ object TextDedup {
     * incremental contract (one ingest batch, never corpus-sized), so its
     * broadcasts are the only hinted ones. */
 
-  /** Fixed permutation family (a_i*h + b_i) mod P31, deterministically
-    * generated (LCG, seed 42) so signatures are reproducible run-to-run.
-    *
-    * Banding at 32 bands × 8 rows: collision S-curve threshold
-    * (1/32)^(1/8) ≈ 0.65, miss-prob at s=0.9 is (1-0.9^8)^32 ≈ 1.2e-8.
-    * The longer rows-per-band matter on self-similar corpora: with r=4 the
-    * threshold sits at 0.42 and a corpus where most pairs are ≥0.5-similar
-    * floods candidate generation (measured 8× more raw candidate rows). */
-  val NumPerms = 256
-  val NumBands = 32
-  private val lcg = {
-    var state = 42L
-    () => { state = (state * 6364136223846793005L + 1442695040888963407L) & Long.MaxValue; state }
-  }
-  val permA: Array[Long] = Array.fill(NumPerms)(lcg() % (P31 - 1) + 1)
-  val permB: Array[Long] = Array.fill(NumPerms)(lcg() % P31)
-
-  /** doc_id, sig: array<bigint> of NumPerms MinHash values.
-    *
-    * Two formulation choices that matter at scale:
-    *   - explode(tokens) + ONE hash aggregation with NumPerms codegen'd
-    *     min() columns — higher-order lambdas evaluate interpreted (~10µs
-    *     per call) while the agg form is whole-stage-codegen'd with
-    *     map-side partial mins; the only shuffle is on doc_id, linear;
-    *   - the per-token hash is xxhash64 (native, codegen'd) rather than an
-    *     md5-hex round-trip: signatures are Spark-internal — the oracle
-    *     checks the exact-Jaccard RESULT, never the signatures — so no
-    *     cross-engine hash replication is needed here. */
-  def minhashSignatures(docs: DataFrame): DataFrame = {
-    val th = docs.select(col("doc_id"), explode(tokenSet(col("text"))).as("tok"))
-      .select(col("doc_id"), pmod(xxhash64(col("tok")), lit(P31)).as("h"))
-    val mins = (0 until NumPerms).map(i =>
-      min(expr(s"(${permA(i)}L * h + ${permB(i)}L) % $P31")).as(s"m$i"))
-    th.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until NumPerms).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** One row per (doc, band): a 64-bit key hashing (band index, band slice
-    * of the signature), with `carry` columns riding along. explode-then-
-    * compute keeps slice+hash in whole-stage codegen (a transform() lambda
-    * would evaluate interpreted), and the long key replaces a ~170-char
-    * string band key in the self-join shuffle. */
-  private[operators] def bandKeys(sigs: DataFrame, carry: Seq[String]): DataFrame = {
-    val rows = NumPerms / NumBands
-    sigs.select(col("doc_id") +: carry.map(col) :+ col("sig") :+
-        explode(expr(s"sequence(0, ${NumBands - 1})")).as("band"): _*)
-      .select(col("doc_id") +: carry.map(col) :+
-        expr(s"xxhash64(band, cast(slice(sig, band * $rows + 1, $rows) as string))").as("key"): _*)
-  }
+  /** Band rows, one per (row of `rows`, band): the `carry` columns and a
+    * 64-bit `key` hashing (band index, band slice of the MinHash
+    * signature of the `toks` distinct-token array). [[MinHashBands]]
+    * computes each row's keys in one row-local kernel inside the
+    * generated stage, so no exchange or aggregate sits between `rows` and
+    * their bands (PlanSpec guard); the long key replaces a ~170-char
+    * string band key in the self-join shuffle. The family is fixed (see
+    * [[MinHashBands]]), so band keys are reproducible run to run. */
+  private[graft] def bandRows(rows: DataFrame, toks: Column, carry: Column*): DataFrame =
+    rows.select(carry :+ explode(MinHashBands.keysOf(toks)).as("key"): _*)
 
   /** Near-dup doc pairs (a_id < b_id, jacc) with set-Jaccard >= threshold,
     * mask identity; the matrix above places each entry point. */
@@ -408,8 +369,8 @@ object TextDedup {
     // stage 2 yields pairs in each form's native endpoint: identity pairs
     // for mask (verified in-join on masks), rep pairs for setid
     val (native, pairs) =
-      if (masked) (key, minhashVerifiedRepPairs(repSignatures(docs, groups), threshold, probeKeys))
-      else ("rep", unboundedRepPairs(docs, members, groups, threshold, probeKeys))
+      if (masked) (key, minhashVerifiedRepPairs(docs, groups, threshold, probeKeys))
+      else ("rep", unboundedRepPairs(members, groups, threshold, probeKeys))
     def endpoints(to: String) = if (to == native) pairs else relabel(pairs, groups, native, to)
     if (clusters) labelClusters(keyed, groups, key, endpoints("rep"))
     else expandPairs(keyed, key, endpoints(key), batch)
@@ -442,25 +403,21 @@ object TextDedup {
       .withColumn("setid", sha2(concat_ws(" ", col("toks")), 256))
       .select(col("doc_id"), col("setid"), col("toks"))
 
-  /** One representative signature (+ bitmask) per distinct token set. */
-  private def repSignatures(docs: DataFrame, groups: DataFrame): DataFrame = {
-    // repDocs is O(distinct content) — plain join, AQE decides broadcast
+  /** Stage 2, mask form: bands of each distinct token set's rep, each row
+    * carrying its bitmask, then a band self-join with exact verification
+    * inside the join (two popcounts); returns distinct (a_mask, b_mask,
+    * jacc). With `probeMasks`, only bands of those masks sit on the left,
+    * and pairs are mask-normalized because a probe-probe pair collides in
+    * both directions. */
+  private def minhashVerifiedRepPairs(docs: DataFrame, groups: DataFrame, threshold: Double,
+                                      probeMasks: Option[DataFrame]): DataFrame = {
+    // repDocs is O(distinct content) — plain join, AQE decides broadcast.
+    // Both sides of the self-join read the banded table: materialize once,
+    // or the banding upstream executes once per side
     val repDocs = docs.join(
       groups.select(col("rep"), col("mask")), docs("doc_id") === col("rep"))
-    minhashSignatures(repDocs.select(col("doc_id"), col("text")))
-      .join(repDocs.select(col("doc_id"), col("mask")), "doc_id")
-  }
-
-  /** Stage 2, mask form: band self-join + in-join exact verification over
-    * rep signatures carrying their bitmask; returns distinct (a_mask,
-    * b_mask, jacc). With `probeMasks`, only bands of those masks sit on the
-    * left, and pairs are mask-normalized because a probe-probe pair
-    * collides in both directions. */
-  private def minhashVerifiedRepPairs(sigsWithMask: DataFrame, threshold: Double,
-                                      probeMasks: Option[DataFrame]): DataFrame = {
-    // both sides of the self-join read the banded table: materialize once,
-    // or the signature pipeline upstream executes once per side
-    val bands = bandKeys(sigsWithMask, Seq("mask")).localCheckpoint(true)
+    val bands = bandRows(repDocs, tokenSet(col("text")), col("doc_id"), col("mask"))
+      .localCheckpoint(true)
     val lBands = probeMasks.fold(bands)(pm => bands.join(broadcast(pm), "mask"))
     val l = lBands.select(col("key"), col("doc_id").as("a_id"), col("mask").as("a_mask"))
     val r = bands.select(col("key"), col("doc_id").as("b_id"), col("mask").as("b_mask"))
@@ -474,22 +431,17 @@ object TextDedup {
       .distinct() // only true pairs left, at band multiplicity
   }
 
-  /** Stage 2, setid form from docs: signatures and bands over reps only
-    * (each band row carries its set size n), then [[verifyBandPairs]].
-    * With `probeSetids`, only bands of reps whose group holds a new doc sit
-    * on the left. Returns (a_rep, b_rep, jacc). */
-  private def unboundedRepPairs(docs: DataFrame, members: DataFrame, groups: DataFrame,
-                                threshold: Double,
+  /** Stage 2, setid form from docs: bands straight from each rep's
+    * canonical token array (each band row carries its set size n), then
+    * [[verifyBandPairs]]. With `probeSetids`, only bands of reps whose
+    * group holds a new doc sit on the left. Returns (a_rep, b_rep, jacc). */
+  private def unboundedRepPairs(members: DataFrame, groups: DataFrame, threshold: Double,
                                 probeSetids: Option[DataFrame]): DataFrame = {
     val repToks = members.join(
       groups.select(col("rep")), members("doc_id") === col("rep"))
       .select(col("doc_id"), col("toks"))
-    val sigs = minhashSignatures(
-      docs.join(groups.select(col("rep")), docs("doc_id") === col("rep"))
-        .select(col("doc_id"), col("text")))
-      .join(repToks.select(col("doc_id"),
-        size(col("toks")).cast(LongType).as("n")), "doc_id")
-    val bands = bandKeys(sigs, Seq("n")).localCheckpoint(true)
+    val bands = bandRows(repToks, col("toks"),
+      col("doc_id"), size(col("toks")).cast(LongType).as("n")).localCheckpoint(true)
     val lBands = probeSetids.fold(bands) { ids =>
       bands.join(broadcast(groups.join(broadcast(ids), "setid")
         .select(col("rep").as("doc_id"))), "doc_id")
@@ -729,9 +681,12 @@ object TextDedup {
   val SimBands = 4 // 15 bits/band; pigeonhole: distance <= 3 ⇒ ≥1 band equal
 
   /** 60-bit SimHash over the distinct-token set (unit weights).
-    * Same explode+codegen-agg formulation as [[minhashSignatures]] (60
-    * per-bit sums in one hash agg) — the nested lambda form was ~50×
-    * slower because higher-order functions evaluate interpreted. */
+    * explode + one hash agg of 60 per-bit sums: 62 output fields, under
+    * `spark.sql.codegen.maxFields` (100), so the agg stays inside
+    * whole-stage codegen (PlanSpec guard; a wider agg silently falls out
+    * of it, which is why MinHash bands through [[MinHashBands]] instead).
+    * The nested lambda form was ~50× slower because higher-order
+    * functions evaluate interpreted. */
   def simhashSignatures(docs: DataFrame): DataFrame = {
     val th = docs.select(col("doc_id"), explode(expr(
       s"transform(array_distinct(split(text, ' ')), " +

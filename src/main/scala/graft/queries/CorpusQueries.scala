@@ -82,7 +82,7 @@ object CorpusQueries {
   def x50LeakSplit(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Curation.leakFreeSplit(
       docs(spark, dir).filter(pmod(col("doc_id"), lit(2)) === 0),
-      LlmData.clusterLabels(spark, dir, 2), // shared mined frame (x69 reads it too)
+      LlmData.clusterLabels(spark, dir, 2),
       SplitTestPermille)
       .orderBy(col("doc_id"))
 
@@ -109,7 +109,7 @@ object CorpusQueries {
   def x63DupWeights(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).filter(pmod(col("doc_id"), lit(4)) === 0)
     graft.operators.Curation.duplicationWeights(d,
-      LlmData.clusterLabels(spark, dir, 4)) // shared mined frame, mined once
+      LlmData.clusterLabels(spark, dir, 4))
       .orderBy(col("doc_id"))
   }
 

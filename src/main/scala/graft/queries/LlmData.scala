@@ -245,7 +245,7 @@ object LlmData {
     * consumers of the SAME deterministic training (the integer-unit
     * contract makes the stored frame bit-identical to an inline run, so
     * hashes are unchanged), and x71 scores the training's at-rest form
-    * itself. The clusterLabels pattern applied to the embedding side. */
+    * itself. */
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
   def sharedCentroids(spark: SparkSession, dir: String): DataFrame = {
@@ -440,33 +440,16 @@ object LlmData {
   def x35DedupClusters(spark: SparkSession, dir: String): DataFrame =
     clusterLabels(spark, dir, 1).orderBy(col("doc_id"))
 
-  /** Mined cluster labels for the (doc_id % modulus == 0) subset, computed
-    * ONCE per (session, dir, subset) and materialized to a temp parquet
-    * table that later callers re-read: x35 (full corpus), x50/x69 (half),
-    * x63 (quarter) all score POST-PROCESSINGS of the same label frame, so
-    * the battery pays LSH mining + union-find once per subset instead of
-    * once per query — the round-4 review's re-mining item, and also the
-    * production shape: labels are a maintained TABLE (x37 is the
-    * maintenance path) that downstream dedup actions read, never re-mine.
-    * Hashes are unchanged — the parquet round-trip is the same frame an
-    * inline mining returns. A plain parquet write (not localCheckpoint)
-    * so Bench's between-query unpersist can't invalidate it. */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), String]()
+  /** Mined cluster labels for the (doc_id % modulus == 0) subset: x35
+    * (full corpus), x50/x69 (half), x63 (quarter) and x70 (full) score
+    * post-processings of this frame. Each query mines its own labels:
+    * nothing is cached across queries, so a timed row always pays for the
+    * mining it scores. */
   def clusterLabels(spark: SparkSession, dir: String, modulus: Int): DataFrame = {
-    val path = labelCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, modulus), _ => {
-        val d =
-          if (modulus <= 1) docs(spark, dir)
-          else docs(spark, dir).filter(pmod(col("doc_id"), lit(modulus)) === 0)
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft_labels_m$modulus")
-        graft.util.Fs.deleteOnExit(tmp.toFile) // JVM-lifetime cache; see sharedCentroids
-        val out = tmp.toString + "/labels.parquet"
-        TextDedup.nearDupClusters(d, JaccThreshold)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-    spark.read.parquet(path)
+    val d =
+      if (modulus <= 1) docs(spark, dir)
+      else docs(spark, dir).filter(pmod(col("doc_id"), lit(modulus)) === 0)
+    TextDedup.nearDupClusters(d, JaccThreshold)
   }
 
   /** Batch dedup-cluster oracle over an arbitrary document source (reused
@@ -515,7 +498,7 @@ object LlmData {
     * determinism of the double score is exactly x25's law. */
   def x69ClusterKeep(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).filter(pmod(col("doc_id"), lit(2)) === 0)
-    val clusters = clusterLabels(spark, dir, 2) // shared mined frame (x50 reads it too)
+    val clusters = clusterLabels(spark, dir, 2)
     val quality = graft.operators.Curation.qualityScore(d)
       .select(col("doc_id"), col("score"))
     clusters.join(quality, "doc_id")
@@ -559,8 +542,8 @@ object LlmData {
     * tells a data owner "crawl B is 40% redundant with crawl A" before
     * anyone trains on it.
     *
-    * Scale shape: reads the MAINTAINED label table ([[clusterLabels]] —
-    * mining paid once per corpus, x35's frame), quality is a per-row
+    * Scale shape: the labels are x35's ([[clusterLabels]]; in production
+    * a maintained table, x37's path), quality is a per-row
     * projection + map-side-combinable agg, the keep decision is one
     * `max_by` per cluster (never sorts members), and the report is one
     * (source)-keyed agg over doc-sized rows. The only shuffles key on

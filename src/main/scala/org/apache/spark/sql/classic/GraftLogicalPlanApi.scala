@@ -41,4 +41,10 @@ object GraftLogicalPlanApi {
     * store's Column-typed row-level operations. */
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     ExpressionUtils.column(e)
+
+  /** The inverse seam (`ExpressionUtils.expression` is `private[sql]`):
+    * a Column's Catalyst expression, for wrapping in a native expression
+    * such as [[graft.functions.MinHashBands]]. */
+  def expressionOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    ExpressionUtils.expression(c)
 }

@@ -138,6 +138,28 @@ class ManifestCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("job-count law: an empty create commits v1 without a data write") {
+    withTable { path =>
+      // limit(0) optimizes to an empty local relation (a pipeline's day-0
+      // create); spark.range(0, 0) stays a Range and still writes, above
+      val (createJobs, v1) = jobsOf(SnapshotStore.create(spark, keyed(0, 10).limit(0), path,
+        statsColumns = Seq("k"), txn = Some(("L", 0L))))
+      assert(v1 == 1L && createJobs == 0, s"an empty create ran $createJobs jobs")
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(!fs.exists(new Path(root, "data")), "an empty create writes no data dir")
+      val back = SnapshotStore.read(spark, path)
+      assert(back.schema.map(f => (f.name, f.dataType)) ==
+        keyed(0, 1).schema.map(f => (f.name, f.dataType)))
+      assert(back.count() == 0L && SnapshotStore.entries(spark, path, 1).isEmpty)
+      assert(SnapshotStore.lastTxn(spark, path, "L").contains(0L))
+      SnapshotStore.appendDedup(spark, keyed(0, 20), path, keys = Seq("k"), tieBreak = Seq("v"))
+      SnapshotStore.appendDedup(spark, keyed(10, 30), path, keys = Seq("k"), tieBreak = Seq("v"))
+      assert(SnapshotStore.read(spark, path).select(col("k")).collect().map(_.getLong(0))
+        .sorted.toSeq == (0L until 30L))
+    }
+  }
+
   test("segments and checkpoints in Spark's own layout fold to the same entries") {
     withTable { path =>
       SnapshotStore.create(spark, keyed(0, 40), path, statsColumns = Seq("k"),

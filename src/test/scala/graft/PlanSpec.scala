@@ -1,5 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, QueryExecution, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
@@ -99,6 +108,78 @@ class PlanSpec extends AnyFunSuite {
         |cast(0 as bigint), (acc, v) -> acc + v) as double))""".stripMargin.replace("\n", " "))
       .collect().map(_.getDouble(0))
     assert(fused.toSeq == interp.toSeq, "fused expression must be bit-identical to composable form")
+  }
+
+  /** The executed plans (AQE's final ones) of every action `body` runs,
+    * eager checkpoints included. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq
+  }
+
+  /** Every operator of `plan`, paired with whether it runs inside a
+    * whole-stage codegen stage (an `*(n)` in the plan text). */
+  private def inCodegen(plan: SparkPlan, in: Boolean = false): Seq[(SparkPlan, Boolean)] =
+    plan match {
+      case a: AdaptiveSparkPlanExec => inCodegen(a.executedPlan)
+      case q: QueryStageExec => inCodegen(q.plan)
+      case w: WholeStageCodegenExec => inCodegen(w.child, in = true)
+      case i: InputAdapter => inCodegen(i.child)
+      case p => (p, in) +: p.children.flatMap(inCodegen(_, in))
+    }
+
+  private def aggsOutsideCodegen(plans: Seq[SparkPlan]): Seq[String] =
+    plans.flatMap(inCodegen(_)).collect {
+      case (a: HashAggregateExec, false) => s"${a.output.size} fields: ${a.simpleString(100)}"
+    }
+
+  test("MinHash band rows are row-local: no exchange or aggregate between the documents scan and the bands") {
+    import org.apache.spark.sql.functions.col
+    val bands = graft.operators.TextDedup.bandRows(Tables.t(spark, sf, "documents"),
+      graft.functions.TextFns.tokenSet(col("text")), col("doc_id"))
+    val nodes = inCodegen(bands.queryExecution.executedPlan)
+    val plan = planOf(bands)
+    assert(!nodes.exists(_._1.isInstanceOf[Exchange]), s"no exchange before the bands:\n$plan")
+    assert(!nodes.exists(_._1.isInstanceOf[BaseAggregateExec]), s"no aggregate before the bands:\n$plan")
+    assert(nodes.exists {
+      case (g: GenerateExec, true) => g.generator.toString.contains("minhash_bands")
+      case _ => false
+    }, s"the band explode must run inside whole-stage codegen:\n$plan")
+    assert(bands.count() == 500L * graft.functions.MinHashBands.NumBands)
+  }
+
+  test("MinHash pipelines, simhash and SRP keep every hash aggregate inside whole-stage codegen") {
+    // An operator whose output has more than spark.sql.codegen.maxFields
+    // (100) fields silently leaves whole-stage codegen: the 256-min-column
+    // signature aggregate the MinHash kernel replaced did. simhash's
+    // signature agg has 62 output fields and SRP's plane-dot agg 49.
+    import org.apache.spark.sql.functions.col
+    val d = Tables.t(spark, sf, "documents").filter(col("doc_id") < 200)
+    val e = Tables.t(spark, sf, "embeddings")
+    val runs = Seq(
+      "minhashNearDups" -> (() => graft.operators.TextDedup.minhashNearDups(d, 0.9).collect()),
+      "minhashNearDupsUnbounded" ->
+        (() => graft.operators.TextDedup.minhashNearDupsUnbounded(d, 0.9).collect()),
+      "simhashSignatures" -> (() => graft.operators.TextDedup.simhashSignatures(d).collect()),
+      "srpBandedNearDups" -> (() => Similarity.srpBandedNearDups(e, 0.4).collect()))
+    for ((name, run) <- runs) {
+      val plans = executedPlans(run())
+      assert(plans.nonEmpty, s"$name ran no captured action")
+      val outside = aggsOutsideCodegen(plans)
+      assert(outside.isEmpty, s"$name: hash aggregates outside codegen:\n${outside.mkString("\n")}")
+    }
+    // the guard detects the fallback: a 257-field aggregate is outside codegen
+    val wide = d.groupBy(col("doc_id")).agg(org.apache.spark.sql.functions.min(col("doc_id")),
+      (1 until 256).map(i => org.apache.spark.sql.functions.min(col("doc_id") + i)): _*)
+    assert(aggsOutsideCodegen(executedPlans(wide.collect())).nonEmpty)
   }
 
   test("q19 as-of join: shuffle is on the equi key, not a cartesian product") {

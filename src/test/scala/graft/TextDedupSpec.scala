@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.MinHashBands
+import graft.functions.TextFns.{P31, tokenSet}
 import graft.operators.TextDedup
 
 class TextDedupSpec extends AnyFunSuite {
@@ -100,6 +103,82 @@ class TextDedupSpec extends AnyFunSuite {
       assert(j >= 0.9 && j <= 1.0)
       assert(r.getAs[Long]("a_id") < r.getAs[Long]("b_id"))
     }
+  }
+
+  /** The formulation [[graft.functions.MinHashBands]] replaced, kept here
+    * as the kernel's reference: explode the token set, one NumPerms-column
+    * `min` aggregate per doc, then per band xxhash64(band, the band's
+    * signature slice cast to string). (doc_id, band, key). */
+  private def referenceBands(docs: DataFrame): DataFrame = {
+    import MinHashBands.{NumBands, NumPerms, RowsPerBand, permA, permB}
+    val th = docs.select(col("doc_id"), explode(tokenSet(col("text"))).as("tok"))
+      .select(col("doc_id"), pmod(xxhash64(col("tok")), lit(P31)).as("h"))
+    val mins = (0 until NumPerms).map(i =>
+      min(expr(s"(${permA(i)}L * h + ${permB(i)}L) % $P31")).as(s"m$i"))
+    th.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"), array((0 until NumPerms).map(i => col(s"m$i")): _*).as("sig"))
+      .select(col("doc_id"), col("sig"),
+        explode(expr(s"sequence(0, ${NumBands - 1})")).as("band"))
+      .select(col("doc_id"), col("band"), expr(
+        s"xxhash64(band, cast(slice(sig, band * $RowsPerBand + 1, $RowsPerBand) as string))")
+        .as("key"))
+  }
+
+  /** Docs the whitespace tokenizer treats unusually, ids from 10000. */
+  private def edgeDocs: DataFrame = {
+    import spark.implicits._
+    Seq[(Long, String)]((10000L, null), (10001L, ""), (10002L, "alpha  beta"),
+      (10003L, "café é naïve"), (10004L, "smile \uD83D\uDE00 grin"), (10005L, "solo"),
+      (10006L, "alpha beta"), (10007L, "café é naïve \uD83D\uDE00"))
+      .toDF("doc_id", "text")
+  }
+
+  test("MinHash kernel law: band keys equal the explode + min-aggregate reference, per doc") {
+    val all = docs.select(col("doc_id"), col("text")).unionByName(edgeDocs)
+    def keyed(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val ref = keyed(referenceBands(all).collect())
+    val got = keyed(all.select(col("doc_id"),
+      posexplode(MinHashBands.keysOf(tokenSet(col("text"))))).collect())
+    assert(ref.size == (500 + edgeDocs.count() - 1) * MinHashBands.NumBands,
+      "every doc but the null text has NumBands reference bands")
+    assert(!got.keys.exists(_._1 == 10000L), "a null text has no band rows")
+    assert(got == ref)
+    // the vocab > 63 corpus (every token suffixed with its doc's lang)
+    assert(keyed(wideDocs.select(col("doc_id"),
+      posexplode(MinHashBands.keysOf(tokenSet(col("text"))))).collect()) ==
+      keyed(referenceBands(wideDocs).collect()))
+    // a set's keys do not depend on token order or repeats (the setid form
+    // bands the sorted array, LshIndex the rejoined text)
+    val one = all.filter(col("doc_id") === 10007L)
+    def keysOf(t: org.apache.spark.sql.Column) =
+      one.select(MinHashBands.keysOf(t)).head().getSeq[Long](0)
+    assert(keysOf(array_sort(tokenSet(col("text")))) == keysOf(tokenSet(col("text"))))
+    assert(keysOf(split(concat_ws(" ", col("text"), col("text")), " ")) ==
+      keysOf(tokenSet(col("text"))))
+  }
+
+  test("mask and setid pipelines return exactly the exact pairs whose docs share a reference band") {
+    // At 0.7 the 32×8 S-curve misses ~15% of true pairs, so the pair set
+    // depends on the band keys themselves: it must be the exact-Jaccard
+    // pairs whose two docs share a band key of the reference formulation.
+    val t = 0.7
+    val all = docs.select(col("doc_id"), col("text"))
+      .unionByName(edgeDocs.filter(col("text").isNotNull)).localCheckpoint(true)
+    val ref = referenceBands(all)
+    val collide = ref.select(col("key"), col("doc_id").as("a_id"))
+      .join(ref.select(col("key"), col("doc_id").as("b_id")), "key")
+      .filter(col("a_id") < col("b_id")).select(col("a_id"), col("b_id")).distinct()
+    val expected = TextDedup.jaccardPairs(all, t).join(collide, Seq("a_id", "b_id"))
+      .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
+        r.getAs[Double]("jacc"))).toSet
+    def canon(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val exact = TextDedup.jaccardPairs(all, t).collect().length
+    assert(expected.nonEmpty && expected.size < exact,
+      s"the threshold must make banding lose pairs: ${expected.size} of $exact")
+    assert(canon(TextDedup.minhashNearDups(all, t).collect()) == expected)
+    assert(canon(TextDedup.minhashNearDupsUnbounded(all, t).collect()) == expected)
   }
 
   test("minhash LSH candidates ⊇ true near-dup pairs (recall) and verified output equals exact") {

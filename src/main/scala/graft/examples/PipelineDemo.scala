@@ -35,15 +35,16 @@ object PipelineDemo {
       retries = 2, delayMs = 10L)
     println(s"[demo] fetch live=$live (fallback engaged=${!live})")
     val demoTmp = Files.createTempDirectory("graft_demo_")
-    graft.util.Fs.deleteOnExit(demoTmp.toFile)
-    val table = demoTmp.toString + "/solar_flare_data"
-    DedupAppend.append(spark, Donki.project(raw), table,
-      keys = Seq("flr_id"), tieBreak = Seq("class_type", "link"))
-    DedupAppend.append(spark, Donki.project(raw), table,
-      keys = Seq("flr_id"), tieBreak = Seq("class_type", "link")) // re-run: no-op
-    val flares = spark.read.parquet(table)
-    println(s"[demo] solar_flare_data rows after double append: ${flares.count()}")
-    flares.show(3, truncate = false)
+    try {
+      val table = demoTmp.toString + "/solar_flare_data"
+      DedupAppend.append(spark, Donki.project(raw), table,
+        keys = Seq("flr_id"), tieBreak = Seq("class_type", "link"))
+      DedupAppend.append(spark, Donki.project(raw), table,
+        keys = Seq("flr_id"), tieBreak = Seq("class_type", "link")) // re-run: no-op
+      val flares = spark.read.parquet(table)
+      println(s"[demo] solar_flare_data rows after double append: ${flares.count()}")
+      flares.show(3, truncate = false)
+    } finally graft.util.Fs.deleteTree(demoTmp.toFile)
 
     // 2. streaming: tumbling event-time agg with watermark over a landing dir
     val windows = EventStreams.runOnce(spark, sfDir, "demo_stream")
@@ -98,14 +99,13 @@ object PipelineDemo {
     val skew = shards.agg(
       (max(col("total_tokens")) - min(col("total_tokens"))).as("d")).first().getLong(0)
     val demoTmpM = Files.createTempDirectory("graft_demo_m_")
-    graft.util.Fs.deleteOnExit(demoTmpM.toFile)
-    val mTable = demoTmpM.toString + "/docs"
-    val fileCounts = (0 until 4).map { i =>
-      graft.operators.Maintenance.appendCycle(spark,
-        docs.filter(pmod(col("doc_id"), lit(4)) === i), mTable,
-        keys = Seq("doc_id"), tieBreak = Nil,
-        maxFiles = 6, targetFileBytes = 64L * 1024 * 1024)
-    }
+    val fileCounts =
+      try (0 until 4).map { i =>
+        graft.operators.Maintenance.appendCycle(spark,
+          docs.filter(pmod(col("doc_id"), lit(4)) === i), demoTmpM.toString + "/docs",
+          keys = Seq("doc_id"), tieBreak = Nil,
+          maxFiles = 6, targetFileBytes = 64L * 1024 * 1024)
+      } finally graft.util.Fs.deleteTree(demoTmpM.toFile)
     println(s"[demo] sharding: 8 shards, max-min token spread $skew;" +
       s" maintenance cycles ended at file counts ${fileCounts.mkString(",")}")
 

@@ -397,9 +397,12 @@ object TextDedup {
   /** The setid identity: (doc_id, setid = sha256 of the sorted distinct-
     * token list, toks = that list). Shared with the persisted [[LshIndex]],
     * so both sides of the stored-index-equals-fresh-mining law derive
-    * identity from this one definition. */
+    * identity from this one definition. A null text has no token list and
+    * no identity, as in the mask form: `concat_ws` would hash it like the
+    * text "" and pair the two. */
   private[operators] def setMembers(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), array_sort(tokenSet(col("text"))).as("toks"))
+      .filter(col("toks").isNotNull)
       .withColumn("setid", sha2(concat_ws(" ", col("toks")), 256))
       .select(col("doc_id"), col("setid"), col("toks"))
 

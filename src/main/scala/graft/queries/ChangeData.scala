@@ -516,7 +516,7 @@ object ChangeData {
     // differently and no row silently drops out of the sum (a bare
     // concat_ws would SKIP null args; the oracle's || would null the row)
     def slot(c: org.apache.spark.sql.Column) =
-      coalesce(c.cast("string"), lit(" "))
+      coalesce(c.cast("string"), lit("\u0000"))
     t(spark, dir, "events")
       .select(col("event_type"),
         concat_ws("|", slot(col("event_id")), slot(col("user_id")),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.TextFns
 import graft.operators.Curation
+import graft.streaming.Drain
 
 /** Round-4 corpus-curation battery (SURVEY.md §2.4 X46/X48/X49): segment-
   * level exact dedup, temperature rebalancing, and df-weighted lexical
@@ -576,9 +577,8 @@ object CorpusQueries {
     * the per-shard rollup of the MAINTAINED TABLE itself. Same oracle as
     * x68: three spellings (batch plan, streamed fold, DuckDB SQL), one
     * answer. */
-  def x79StreamShard(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x79_").toFile
-    try {
+  def x79StreamShard(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_x79_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val assign = new java.io.File(tmp, "assign").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -591,8 +591,7 @@ object CorpusQueries {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
       // NumShards rows: materialize so the temp state/checkpoint can drop
       graft.util.Materialize.sorted(res, col("shard"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val x79Sql: String = x68Sql
 
@@ -803,9 +802,8 @@ object CorpusQueries {
     * law); this entry makes that law a scored fact — the continuous
     * C4-style span-dedup service a 100 TB ingest actually runs, with
     * history probed via the stored span index rather than re-segmented. */
-  def x91StreamSegment(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x91_").toFile
-    try {
+  def x91StreamSegment(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_x91_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val corpus = new java.io.File(tmp, "corpus").getAbsolutePath
       val stats = new java.io.File(tmp, "stats").getAbsolutePath
@@ -819,8 +817,7 @@ object CorpusQueries {
           col("n_tokens_kept"))
       // one row per doc: materialize so the temp landing/corpus drop
       graft.util.Materialize.sorted(res, col("doc_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed gate from empty ≡ batch segmentation: x46's oracle. */
   val x91Sql: String = x46Sql

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables._
+import graft.streaming.Drain
 
 /** Event-time queries over the `events` table (SURVEY.md §2.4 Q15–Q16 plus
   * the JSON-props battery). Batch formulations here are the scored,
@@ -237,9 +238,8 @@ object EventTime {
     * aggregation — the reference's `schedule="@daily"` loop (reference
     * dags/etl.py:12) restated as incremental view maintenance under the
     * DuckDB gate instead of only the StreamingSpec laws. */
-  def q70StreamTumbling(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q70_").toFile
-    try {
+  def q70StreamTumbling(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q70_") { tmp =>
       val state = new java.io.File(tmp, "state").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       graft.streaming.EventStreams.tumblingMaintainStream(spark, dir, state, ckpt)
@@ -249,8 +249,7 @@ object EventTime {
       // materialize (hours × types rows) so the temp state/checkpoint tree
       // can be removed eagerly (q35's reasoning)
       graft.util.Materialize.sorted(res, col("window_start"), col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained-state ≡ batch: the gate q15 already passes. */
   val q70Sql: String = q15Sql
@@ -266,30 +265,23 @@ object EventTime {
     * commit path flips the hash. Complements q70/q74 (which gate the
     * foreachBatch maintenance algebras): this gates the connector-level
     * epoch protocol itself. */
-  def q75StreamSink(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q75_").toFile
-    try {
+  def q75StreamSink(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q75_") { tmp =>
       val out = new java.io.File(tmp, "docs_jsonl").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val schema = spark.read
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .select("doc_id", "text", "lang", "source", "n_chars").schema
-      val q = spark.readStream.schema(schema)
+      Drain.sink(spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .writeStream.format("graft-jsonl")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .select("doc_id", "text", "lang", "source", "n_chars"),
+        ckpt, "graft-jsonl", "append", "path" -> out)
       val res = spark.read.format("graft-jsonl").schema(schema).load(out)
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       // materialize (langs × sources rows) so the temp tree drops eagerly
       graft.util.Materialize.sorted(res, col("lang"), col("source"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q75Sql: String =
     """SELECT lang, source, count(*) AS n_docs,
@@ -309,30 +301,19 @@ object EventTime {
     * hash (on a bounded input every pair must be emitted; StreamingSpec
     * asserts row-set equality with the static join, this adds the
     * cross-engine hash). */
-  def q80StreamPairs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q80_").toFile
-    // the join state is tiny (pairs within 10 min of one user) but every
-    // shuffle partition carries TWO state stores with per-batch commit
-    // overhead — size the stream's partitioning to the state, not the
-    // session default (a stream pins its partitioning at checkpoint
-    // creation, so this is also the knob a real deployment sets)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q80StreamPairs(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q80_", Some(8)) { tmp =>
       val out = new java.io.File(tmp, "pairs").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val q = graft.streaming.EventStreams
-        .pairWithin(graft.streaming.EventStreams.readEvents(spark, dir))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams
+        .pairWithin(graft.streaming.EventStreams.readEvents(spark, dir)),
+        ckpt, "parquet", "append", "path" -> out)
       val res = spark.read.parquet(out)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("sum_gap_us"))
       // one row per user: materialize so the temp sink/checkpoint can drop
       graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q80Sql: String =
     """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
@@ -356,9 +337,8 @@ object EventTime {
     * dropped, duplicated, or mis-enriched flips the hash. Fifth streaming
     * surface under the hard oracle (q70 partial-agg merge, q74 upsert,
     * q75 sink epochs, x79 shard deal, and now the enrich-append). */
-  def q76StreamAsof(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q76_").toFile
-    try {
+  def q76StreamAsof(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q76_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val ordersPath = new java.io.File(tmp, "orders").getAbsolutePath
       val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -374,8 +354,7 @@ object EventTime {
       // materialize (bounded by the landed event table, q57's output size)
       // so the temp orders/checkpoint tree can drop eagerly
       graft.util.Materialize.sorted(res, col("event_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Per-event as-of in micros — q19's semantics on the stream's output
     * schema (events with no prior order are absent, as in q19's inner
@@ -407,10 +386,8 @@ object EventTime {
     * scored per session. q34 proved built-in ≡ manual lag+cumsum in
     * batch; this puts the streaming state machine itself (merge, emit,
     * expire) under the same DuckDB hash. */
-  def q88StreamSession(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q88_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q88StreamSession(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q88_", Some(8)) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val out = new java.io.File(tmp, "sessions").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -421,11 +398,8 @@ object EventTime {
           .as("ts"))
       ev.unionByName(sentinel).write.parquet(landing)
       val stream = spark.readStream.schema(ev.schema).parquet(landing)
-      val q = graft.streaming.EventStreams.sessionAgg(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams.sessionAgg(stream),
+        ckpt, "parquet", "append", "path" -> out)
       val res = spark.read.parquet(out)
         .filter(col("user_id") >= 0) // the sentinel's own session is scaffolding
         .select(col("user_id"),
@@ -434,8 +408,7 @@ object EventTime {
           col("n_events"))
       // session-count-sized: materialize so the temp tree drops eagerly
       graft.util.Materialize.sorted(res, col("user_id"), col("session_start"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed sessions ≡ batch sessions: q34's oracle verbatim. */
   val q88Sql: String = q34Sql
@@ -450,10 +423,8 @@ object EventTime {
     * windows multiply OPEN STATE by size/slide (4× here) but not by
     * input volume — the watermark bound q23's docstring claims, now
     * hash-verified through the streaming path. */
-  def q90StreamSliding(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q90_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q90StreamSliding(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q90_", Some(8)) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val out = new java.io.File(tmp, "windows").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -465,19 +436,15 @@ object EventTime {
         lit("__flush").as("event_type"), lit(0.0).as("value"))
       ev.unionByName(sentinel).write.parquet(landing)
       val stream = spark.readStream.schema(ev.schema).parquet(landing)
-      val q = graft.streaming.EventStreams.slidingAgg(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams.slidingAgg(stream),
+        ckpt, "parquet", "append", "path" -> out)
       val res = spark.read.parquet(out)
         .filter(col("event_type") =!= "__flush")
         .select(col("window_start").cast("timestamp_ntz").as("window_start"),
           col("event_type"), col("n"), col("sum_value"))
       // (hours×4 slides × types) rows: materialize so the temp tree drops
       graft.util.Materialize.sorted(res, col("window_start"), col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed sliding windows ≡ batch: q23's oracle verbatim. */
   val q90Sql: String = q23Sql
@@ -498,9 +465,8 @@ object EventTime {
     * under the hard gate: windowed aggs, session_window, stream-stream /
     * stream-static joins, dropDuplicatesWithinWatermark, foreachBatch
     * maintenance, and now (flat)MapGroupsWithState. */
-  def q97StreamStateful(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q97_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q97StreamStateful(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q97_", Some(8)) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
@@ -517,8 +483,7 @@ object EventTime {
           sum(col("n_events")).as("n_events"))
       // one row per user: materialize so the temp landing drops eagerly
       graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Closed sessions ≡ batch sessionization: q16's oracle verbatim. */
   val q97Sql: String = q16Sql
@@ -567,21 +532,16 @@ object EventTime {
     * costs nothing to keep running forever. Completes the streaming join
     * family under the hard gate: stream-stream inner (q80), stream-static
     * as-of enrich (q76), and now the suppression/anti shape. */
-  def q93StreamAnti(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q93_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q93StreamAnti(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q93_", Some(8)) { tmp =>
       val out = new java.io.File(tmp, "kept").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val block = t(spark, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_custkey").as("user_id")).distinct()
-      val q = graft.streaming.EventStreams.readEvents(spark, dir)
-        .join(block, Seq("user_id"), "left_anti")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams.readEvents(spark, dir)
+        .join(block, Seq("user_id"), "left_anti"),
+        ckpt, "parquet", "append", "path" -> out)
       val res = spark.read.parquet(out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -589,8 +549,7 @@ object EventTime {
           sumMoney2(col("value")).as("sum_value"))
       // one row per event type: materialize so the temp tree drops
       graft.util.Materialize.sorted(res, col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q93Sql: String =
     """SELECT event_type, count(*) AS n,
@@ -627,21 +586,14 @@ object EventTime {
     * aggregation, q74 stateful upsert, q80 the stream-stream join, q83
     * the streaming dedup operator — the unbounded-stream form of the
     * reference's `ON CONFLICT DO NOTHING` (reference dags/etl.py:74). */
-  def q83StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q83_").toFile
-    // one small state store per shuffle partition: size the stream's
-    // partitioning to the state volume (q80's reasoning), not the default
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q83StreamDedup(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q83_", Some(8)) { tmp =>
       val out = new java.io.File(tmp, "deduped").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val once = graft.streaming.EventStreams.readEvents(spark, dir)
       val twice = once.union(graft.streaming.EventStreams.readEvents(spark, dir))
-      val q = graft.streaming.EventStreams.dedupStream(twice)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams.dedupStream(twice),
+        ckpt, "parquet", "append", "path" -> out)
       val res = spark.read.parquet(out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -650,8 +602,7 @@ object EventTime {
       // one row per event type: materialize so the temp sink/checkpoint
       // tree can drop eagerly
       graft.util.Materialize.sorted(res, col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Single-delivery rollup — n must equal n_ids (every duplicate gone). */
   val q83Sql: String =
@@ -688,24 +639,14 @@ object EventTime {
     * run; the one requirement, as with q80/q83, is sizing
     * `spark.sql.shuffle.partitions` to the state volume because each
     * shuffle partition is its own store. */
-  def q102StateInspect(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q102_").toFile
-    // partitions ∝ state volume (the sizing rule this gate documents,
-    // executable — [[graft.util.Confs.stateSizedPartitions]]); the sink is
-    // noop: nothing ever reads the deduped rows — the gate's answer comes
-    // from the CHECKPOINT, and serializing discarded output to parquet was
-    // pure sink cost (guide §1.4 applied to the operator itself, r11)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+  def q102StateInspect(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q102_",
+      Some(graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet"))) { tmp =>
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val q = graft.streaming.EventStreams
+      Drain.sink(graft.streaming.EventStreams
         .dedupStream(graft.streaming.EventStreams.readEvents(spark, dir),
-          watermark = "3650 days") // >> data span: nothing evicts, state is exact
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+          watermark = "3650 days"), // >> data span: nothing evicts, state is exact
+        ckpt, "noop", "append")
       val stateKeys = spark.read.format("statestore").load(ckpt)
         .select(col("key.event_id").as("event_id"))
       val res = t(spark, dir, "events")
@@ -715,8 +656,7 @@ object EventTime {
       val rows = res.collectAsList()
       require(!rows.isEmpty, "q102: the state store must hold keys")
       spark.createDataFrame(rows, res.schema).orderBy(col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** With no eviction the store holds every distinct id once — the key
     * census per type is the base table's distinct-id count. */
@@ -736,21 +676,14 @@ object EventTime {
     * reads state (rate × window per side), never stream history, and is
     * exactly how an operator confirms which side's buffer a skewed user
     * is inflating. */
-  def q118JoinState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q118_").toFile
-    // partitions ∝ state volume + noop sink (output discarded; the gate's
-    // answer is the checkpoint census) — see q102, same r11 reasoning
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+  def q118JoinState(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q118_",
+      Some(graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet"))) { tmp =>
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val q = graft.streaming.EventStreams
+      Drain.sink(graft.streaming.EventStreams
         .pairWithin(graft.streaming.EventStreams.readEvents(spark, dir),
-          watermark = "3650 days") // >> data span: nothing evicts, state is exact
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+          watermark = "3650 days"), // >> data span: nothing evicts, state is exact
+        ckpt, "noop", "append")
       def census(side: String, as: String, userCol: String) =
         spark.read.format("statestore").option("joinSide", side).load(ckpt)
           .groupBy(col(s"value.$userCol").as("user_id"))
@@ -760,8 +693,7 @@ object EventTime {
       val rows = res.collectAsList()
       require(!rows.isEmpty, "q118: the join state stores must hold rows")
       spark.createDataFrame(rows, res.schema).orderBy(col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** No eviction → each side buffered every input row once. */
   val q118Sql: String =
@@ -779,25 +711,17 @@ object EventTime {
     * pipeline wants, read from the checkpoint at state cost — and it
     * doubles as a law that incremental gap-merge state equals the
     * one-shot computation. */
-  def q119SessionState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q119_").toFile
-    // partitions ∝ state volume + noop sink (append mode emits nothing
-    // here by design; the gate's answer is the open-session state) — see
-    // q102, same r11 reasoning
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+  def q119SessionState(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q119_",
+      Some(graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet"))) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
       ev.write.parquet(landing)
       val stream = spark.readStream.schema(ev.schema).parquet(landing)
-      val q = graft.streaming.EventStreams
-        .sessionAgg(stream, watermark = "3650 days") // nothing closes: state = answer
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams
+        .sessionAgg(stream, watermark = "3650 days"), // nothing closes: state = answer
+        ckpt, "noop", "append")
       val res = spark.read.format("statestore").load(ckpt)
         .select(col("value.user_id").as("user_id"),
           col("value.session_window.start").cast("timestamp_ntz").as("session_start"),
@@ -807,8 +731,7 @@ object EventTime {
       require(!rows.isEmpty, "q119: the session store must hold open sessions")
       spark.createDataFrame(rows, res.schema)
         .orderBy(col("user_id"), col("session_start"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Open merged sessions ≡ batch sessions: q34's oracle verbatim. */
   val q119Sql: String = q34Sql
@@ -833,12 +756,9 @@ object EventTime {
     * state (keys × partitions), never stream history, and the oracle
     * relation is what makes the audit's answer CHECKABLE rather than
     * trusted. */
-  def q123EvictingState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q123_").toFile
-    // partitions ∝ state volume — q102's sizing rule, executable (r11)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+  def q123EvictingState(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q123_",
+      Some(graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet"))) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val ev = t(spark, dir, "events").select(col("event_id"), col("ts"))
@@ -848,16 +768,11 @@ object EventTime {
       ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").json(landing)
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("ts", TimestampType)))
-      val q = spark.readStream.schema(schema)
+      Drain.sink(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").json(landing)
         .withWatermark("ts", "7 days") // << data span: eviction is REAL
-        .dropDuplicates("event_id", "ts")
-        // noop sink: the deduped rows are never read — the gate's answer
-        // is the checkpoint state (q102's r11 reasoning)
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .dropDuplicates("event_id", "ts"),
+        ckpt, "noop", "append")
       val stateKeys = spark.read.format("statestore").load(ckpt)
         .select(col("key.event_id").as("event_id"))
       val res = t(spark, dir, "events")
@@ -871,8 +786,7 @@ object EventTime {
       require(retained < t(spark, dir, "events").count(),
         s"q123: the watermark must have evicted (state holds $retained keys)")
       spark.createDataFrame(rows, res.schema).orderBy(col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** The watermark-retained suffix, per type: keys with ts within the
     * final watermark's delay of the stream's max event time. */
@@ -902,10 +816,8 @@ object EventTime {
     * complement emitted to the sink, state stays (rate × gap)-bounded
     * however long the stream runs, and the audit's answer is still
     * checkable against the base table. */
-  def q125EvictingSessions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q125_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q125EvictingSessions(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q125_", Some(8)) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val out = new java.io.File(tmp, "closed").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -918,12 +830,9 @@ object EventTime {
       ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").parquet(landing)
       val stream = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(landing)
-      val q = graft.streaming.EventStreams
-        .sessionAgg(stream, watermark = "7 days") // << data span: sessions CLOSE
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams
+        .sessionAgg(stream, watermark = "7 days"), // << data span: sessions CLOSE
+        ckpt, "parquet", "append", "path" -> out)
       val open = spark.read.format("statestore").load(ckpt)
         .select(col("value.user_id").as("user_id"),
           col("value.session_window.start").cast("timestamp_ntz").as("session_start"),
@@ -937,8 +846,7 @@ object EventTime {
           s"(closed=$closed, open=${rows.size()})")
       spark.createDataFrame(rows, open.schema)
         .orderBy(col("user_id"), col("session_start"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Q126 — STREAM-STREAM JOIN STATE UNDER REAL EVICTION, scored: q118's
     * two-store census with a watermark that genuinely evicts, completing
@@ -958,12 +866,9 @@ object EventTime {
     * from the base table. Operationally: the "why is my join state
     * growing?" audit of q118 now runs on a stream where state is
     * watermark-BOUNDED — and the answer is still checkable. */
-  def q126EvictingJoinState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q126_").toFile
-    // partitions ∝ state volume — q102's sizing rule, executable (r11)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+  def q126EvictingJoinState(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q126_",
+      Some(graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet"))) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val ev = t(spark, dir, "events")
@@ -975,14 +880,9 @@ object EventTime {
       ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").parquet(landing)
       val stream = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(landing)
-      val q = graft.streaming.EventStreams
-        .pairWithin(stream, windowMinutes = 10, watermark = "7 days") // evicts
-        // noop sink: the pairs are never read — the gate's answer is the
-        // checkpoint census (q102's r11 reasoning)
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams
+        .pairWithin(stream, windowMinutes = 10, watermark = "7 days"), // evicts
+        ckpt, "noop", "append")
       def census(side: String, as: String, userCol: String) =
         spark.read.format("statestore").option("joinSide", side).load(ckpt)
           .groupBy(col(s"value.$userCol").as("user_id"))
@@ -999,8 +899,7 @@ object EventTime {
       require(buffered < ev.count(),
         s"q126: the watermark must have evicted (left holds $buffered rows)")
       spark.createDataFrame(rows, res.schema).orderBy(col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Per-user retained suffixes: left down to wm − 10min, right to wm. */
   val q126Sql: String =
@@ -1049,10 +948,8 @@ object EventTime {
     * (rate × window per side); the outer form adds only the emission
     * delay — results trail by the watermark, the price of proving a
     * negative on an unbounded stream. */
-  def q122StreamOuter(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q122_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q122StreamOuter(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q122_", Some(8)) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val out = new java.io.File(tmp, "pairs").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -1065,11 +962,8 @@ object EventTime {
       ev.unionByName(sentinel).write.parquet(landing)
       val stream = spark.readStream
         .schema(spark.read.parquet(landing).schema).parquet(landing)
-      val q = graft.streaming.EventStreams.pairWithinOuter(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams.pairWithinOuter(stream),
+        ckpt, "parquet", "append", "path" -> out)
       val res = spark.read.parquet(out)
         .filter(col("user_id") >= 0) // the sentinel's row is scaffolding
         .groupBy(col("user_id"))
@@ -1077,8 +971,7 @@ object EventTime {
              sum(when(col("b_id").isNull, 1L).otherwise(0L)).as("n_lonely"),
              sum(col("gap_us")).as("sum_gap_us"))
       graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Q127 — STREAM-STREAM FULL OUTER JOIN, scored: completes the
     * stream-stream join matrix (inner q80, left q122, full q127). Both
@@ -1090,10 +983,8 @@ object EventTime {
     * paired / left-lonely / right-lonely rows hash-matches DuckDB's FULL
     * JOIN recompute. At 100 TB: state = rate × window per side, the
     * full form only adds the both-sides emission delay. */
-  def q127StreamFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q127_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+  def q127StreamFullOuter(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q127_", Some(8)) { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val out = new java.io.File(tmp, "pairs").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -1106,11 +997,8 @@ object EventTime {
       ev.unionByName(sentinel).write.parquet(landing)
       val stream = spark.readStream
         .schema(spark.read.parquet(landing).schema).parquet(landing)
-      val q = graft.streaming.EventStreams.pairWithinFull(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      Drain.sink(graft.streaming.EventStreams.pairWithinFull(stream),
+        ckpt, "parquet", "append", "path" -> out)
       val res = spark.read.parquet(out)
         .filter(col("user_id") >= 0) // the sentinel's rows are scaffolding
         .groupBy(col("user_id"))
@@ -1121,8 +1009,7 @@ object EventTime {
              sum(when(col("a_id").isNull, 1L).otherwise(0L)).as("n_lonely_right"),
              sum(col("gap_us")).as("sum_gap_us"))
       graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** FULL JOIN recompute: both unmatched sides carry one null row each. */
   val q127Sql: String =

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.Tables._
 import graft.functions.Aggregators
 import graft.operators.TableLayout
+import graft.streaming.Drain
 import graft.util.ScanPaths
 
 /** Coverage for the remaining SURVEY.md §2.2 categories: semi join, as-of
@@ -884,32 +885,25 @@ object Extended {
     * composition a warehouse actually runs: STREAMS keep the view fresh,
     * the OPTIMIZER routes queries to it, and the DuckDB oracle (base-
     * table aggregation) catches any drift between the two. */
-  def q92StreamMv(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q92_").toFile
-    try {
+  def q92StreamMv(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q92_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val li = t(spark, dir, "lineitem")
         .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val partial = batch.toDF()
-            .groupBy(col("l_returnflag"), col("l_linestatus"))
-            .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt"))
-          graft.operators.StateMerge.mergeOverwrite(
-            batch.sparkSession, partial, mvPath, batchId)(
-            _.groupBy(col("l_returnflag"), col("l_linestatus"))
-              .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
-                   sum(col("cnt")).as("cnt")))
-        }
-        .start()
-      q.awaitTermination()
+      Drain.batches(spark.readStream.schema(li.schema)
+        .option("maxFilesPerTrigger", "2").parquet(landing), ckpt) { (batch, batchId) =>
+        val partial = batch
+          .groupBy(col("l_returnflag"), col("l_linestatus"))
+          .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt"))
+        graft.operators.StateMerge.mergeOverwrite(
+          batch.sparkSession, partial, mvPath, batchId)(
+          _.groupBy(col("l_returnflag"), col("l_linestatus"))
+            .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
+                 sum(col("cnt")).as("cnt")))
+      }
       registerLineitemMv(spark, dir, mvPath)
       try {
         val res = t(spark, dir, "lineitem").groupBy(col("l_returnflag"))
@@ -922,8 +916,7 @@ object Extended {
           s"q92 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained + rewritten ≡ one-shot over the base: q89's oracle. */
   val q92Sql: String = q89Sql
@@ -1621,10 +1614,8 @@ object Extended {
     * is exactly the 100 TB hot/cold shape: the archive aggregate is paid
     * once, each ingest batch reprices only its own groups, and dashboard
     * queries over archive ∪ this-quarter read |grain| rows. */
-  def q115UnionIvm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q115_").toFile
-    try {
+  def q115UnionIvm(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q115_") { tmp =>
       val coldPath = new java.io.File(tmp, "li_cold.parquet").getAbsolutePath
       val hotPath = new java.io.File(tmp, "li_hot.parquet").getAbsolutePath
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
@@ -1641,15 +1632,10 @@ object Extended {
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt")),
         mvPath)(identity)
       val hotSchema = spark.read.parquet(landing).schema
-      val q = spark.readStream.schema(hotSchema)
-        .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          foldHotBatch(batch.toDF(), batchId, hotPath, mvPath, Some(ckpt))
-        }
-        .start()
-      q.awaitTermination()
+      Drain.batches(spark.readStream.schema(hotSchema)
+        .option("maxFilesPerTrigger", "2").parquet(landing), ckpt) { (batch, batchId) =>
+        foldHotBatch(batch, batchId, hotPath, mvPath, Some(ckpt))
+      }
       graft.plans.MvCatalog.register(graft.plans.MvCatalog.MvDef(
         basePathSuffix = "li_cold.parquet", // unused: baseUnion matches
         groupCols = Set("l_returnflag", "l_linestatus"),
@@ -1676,8 +1662,7 @@ object Extended {
             s"q115 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** cold ∪ streamed hot = lineitem exactly once (disjoint split). */
   val q115Sql: String =
@@ -1702,10 +1687,8 @@ object Extended {
     * maintained view. At 100 TB this is the hot-slice view kept current
     * by ingest: each batch pays one filtered partial, the dashboard
     * reads |grain| rows. */
-  def q120FilteredIvm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q120_").toFile
-    try {
+  def q120FilteredIvm(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q120_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_mv_disc").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -1713,15 +1696,10 @@ object Extended {
         .select(col("l_returnflag"), col("l_linestatus"),
                 col("l_quantity"), col("l_discount"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          foldFilteredBatch(batch.toDF(), batchId, mvPath, Some(ckpt))
-        }
-        .start()
-      q.awaitTermination()
+      Drain.batches(spark.readStream.schema(li.schema)
+        .option("maxFilesPerTrigger", "2").parquet(landing), ckpt) { (batch, batchId) =>
+        foldFilteredBatch(batch, batchId, mvPath, Some(ckpt))
+      }
       registerDiscountMv(spark, dir, mvPath)
       try {
         val res = t(spark, dir, "lineitem")
@@ -1735,8 +1713,7 @@ object Extended {
           s"q120 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Fold one fact micro-batch into the FILTERED view's state: the baked
     * conjunct applies to the batch, the per-grain partial merges via the
@@ -1772,10 +1749,8 @@ object Extended {
     * maintenance matrix: every MV base kind — single (q92), inner star
     * (q109), filtered (q120), union (q115), outer (q121) — now has a
     * scored streamed-maintenance gate. */
-  def q121OuterIvm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q121_").toFile
-    try {
+  def q121OuterIvm(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q121_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val dimPath = new java.io.File(tmp, "orders_dim.parquet").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_outer_mv").getAbsolutePath
@@ -1787,24 +1762,19 @@ object Extended {
       val li = t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val partial = batch.toDF()
-            .join(batch.sparkSession.read.parquet(dimPath),
-              col("l_orderkey") === col("o_orderkey"), "left_outer")
-            .groupBy(col("o_orderpriority"), col("l_returnflag"))
-            .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt"))
-          graft.operators.StateMerge.mergeOverwrite(
-            batch.sparkSession, partial, mvPath, batchId)(
-            _.groupBy(col("o_orderpriority"), col("l_returnflag"))
-              .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
-                   sum(col("cnt")).as("cnt")))
-        }
-        .start()
-      q.awaitTermination()
+      Drain.batches(spark.readStream.schema(li.schema)
+        .option("maxFilesPerTrigger", "2").parquet(landing), ckpt) { (batch, batchId) =>
+        val partial = batch
+          .join(batch.sparkSession.read.parquet(dimPath),
+            col("l_orderkey") === col("o_orderkey"), "left_outer")
+          .groupBy(col("o_orderpriority"), col("l_returnflag"))
+          .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt"))
+        graft.operators.StateMerge.mergeOverwrite(
+          batch.sparkSession, partial, mvPath, batchId)(
+          _.groupBy(col("o_orderpriority"), col("l_returnflag"))
+            .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
+                 sum(col("cnt")).as("cnt")))
+      }
       registerOuterMv(spark, dir, mvPath)
       try {
         val res = t(spark, dir, "lineitem")
@@ -1821,8 +1791,7 @@ object Extended {
             s"q121 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("o_orderpriority"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained ≡ one-shot outer-join aggregate: q116's oracle (lazy:
     * q116Sql is declared later in this file). */
@@ -1936,40 +1905,32 @@ object Extended {
     * production star-schema shape at 100 TB: facts stream in, the dim
     * join is paid once per delta (broadcast-sized dim), and every
     * matching query reads a |grain|-row view. */
-  def q109StreamJoinMv(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q109_").toFile
-    try {
+  def q109StreamJoinMv(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_q109_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_orders_mv").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val li = t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val dim = t(batch.sparkSession, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderpriority"))
-          val partial = batch.toDF()
-            .join(dim, col("l_orderkey") === col("o_orderkey"))
-            .groupBy(col("o_orderpriority"), col("l_returnflag"))
-            .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt"))
-          graft.operators.StateMerge.mergeOverwrite(
-            batch.sparkSession, partial, mvPath, batchId)(
-            _.groupBy(col("o_orderpriority"), col("l_returnflag"))
-              .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
-                   sum(col("cnt")).as("cnt")))
-        }
-        .start()
-      q.awaitTermination()
+      Drain.batches(spark.readStream.schema(li.schema)
+        .option("maxFilesPerTrigger", "2").parquet(landing), ckpt) { (batch, batchId) =>
+        val dim = t(batch.sparkSession, dir, "orders")
+          .select(col("o_orderkey"), col("o_orderpriority"))
+        val partial = batch
+          .join(dim, col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"), col("l_returnflag"))
+          .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt"))
+        graft.operators.StateMerge.mergeOverwrite(
+          batch.sparkSession, partial, mvPath, batchId)(
+          _.groupBy(col("o_orderpriority"), col("l_returnflag"))
+            .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
+                 sum(col("cnt")).as("cnt")))
+      }
       registerJoinMv(spark, dir, mvPath)
       try joinMvQuery(spark, dir, "q109")
       finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained + rewritten ≡ one-shot over the bases: q107's oracle. */
   val q109Sql: String = q107Sql

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.Tables._
 import graft.functions.TextFns
 import graft.operators.{Similarity, TextDedup}
+import graft.streaming.Drain
 
 /** LLM-training-data extension queries (SURVEY.md §2.3/§2.4 X17–X20 plus the
   * wider dedup/similarity/text/multimodal battery the north star requires).
@@ -240,33 +241,8 @@ object LlmData {
 
   // ---- X31: IVF ANN (deterministic k-means, nprobe cell-pruned search) -
 
-  /** Trained k-means centroids, computed ONCE per (session, dir) and
-    * materialized to a temp parquet table — x31/x47/x72 all score
-    * consumers of the SAME deterministic training (the integer-unit
-    * contract makes the stored frame bit-identical to an inline run, so
-    * hashes are unchanged), and x71 scores the training's at-rest form
-    * itself. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  def sharedCentroids(spark: SparkSession, dir: String): DataFrame = {
-    val path = centroidCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cents")
-        // shared for the JVM's lifetime (that's the point of the cache),
-        // so cleanup is a shutdown hook — without it every battery run
-        // leaks one parquet tree per (app, dir) key to /tmp forever
-        graft.util.Fs.deleteOnExit(tmp.toFile)
-        val out = tmp.toString + "/centroids.parquet"
-        Similarity.kmeansCentroids(embs(spark, dir))
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-    spark.read.parquet(path)
-  }
-
   def x31IvfAnn(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfTopKWith(embs(spark, dir), sharedCentroids(spark, dir), 5)
-      .orderBy(col("p_id"), col("rn"))
+    Similarity.ivfTopK(embs(spark, dir), 5).orderBy(col("p_id"), col("rn"))
 
   /** X71 — the PERSISTED-index ANN path, scored: build the IVF index at
     * rest ([[graft.operators.Similarity.buildIvfIndex]] — centroids +
@@ -283,7 +259,7 @@ object LlmData {
     try {
       val idx = new java.io.File(tmp, "ivf").getAbsolutePath
       val e = embs(spark, dir)
-      Similarity.buildIvfIndexWith(e, sharedCentroids(spark, dir), idx)
+      Similarity.buildIvfIndex(e, idx)
       val res = Similarity.ivfTopKFromIndex(spark, idx,
         e.filter(col("vec_id") < 10), 5)
       // k × probes rows: materialize so the temp index tree drops eagerly
@@ -306,9 +282,7 @@ object LlmData {
     * CODES (dim + 8 bytes/vector vs 8·dim float64), and only ~k·factor
     * rows per probe ever touch full-precision vectors. */
   def x72AdcAnn(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfTopKQuantizedWith(embs(spark, dir),
-        sharedCentroids(spark, dir), 5)
-      .orderBy(col("p_id"), col("rn"))
+    Similarity.ivfTopKQuantized(embs(spark, dir), 5).orderBy(col("p_id"), col("rn"))
 
   lazy val x72Sql: String = x31Sql
 
@@ -375,8 +349,7 @@ object LlmData {
     * identical k-means (x31's CTEs) then the in-cell lower-id-neighbor
     * rule, so cells, dup links, and keep decisions all hash-match. */
   def x47SemanticDedup(spark: SparkSession, dir: String): DataFrame =
-    Similarity.semanticDedupWith(embs(spark, dir),
-        sharedCentroids(spark, dir), CosineDupThreshold)
+    Similarity.semanticDedup(embs(spark, dir), CosineDupThreshold)
       .orderBy(col("vec_id"))
 
   val x47Sql: String =
@@ -405,7 +378,7 @@ object LlmData {
     * Recall dominance over x47 is law-tested in SimilaritySpec. */
   def x98MultiprobeSemdedup(spark: SparkSession, dir: String): DataFrame =
     Similarity.semanticDedupMultiWith(embs(spark, dir),
-        sharedCentroids(spark, dir), CosineDupThreshold)
+        Similarity.kmeansCentroids(embs(spark, dir)), CosineDupThreshold)
       .orderBy(col("vec_id"))
 
   val x98Sql: String =
@@ -767,9 +740,8 @@ object LlmData {
     * an empty index the arrival-order fold ≡ the one-shot batch miner
     * (StreamingIngestSpec law), so the oracle is x93's exact full-pair
     * set over the same derived corpus. */
-  def x96StreamIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x96_").toFile
-    try {
+  def x96StreamIndexed(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_x96_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val idx = new java.io.File(tmp, "idx").getAbsolutePath
       val pairs = new java.io.File(tmp, "pairs").getAbsolutePath
@@ -787,8 +759,7 @@ object LlmData {
         .select(col("a_id"), col("b_id"), col("jacc"))
       // pair-set-sized: materialize so the temp index/checkpoint drop
       graft.util.Materialize.sorted(res, col("a_id"), col("b_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed-indexed miner from empty ≡ batch miner: x93's oracle. */
   val x96Sql: String = x93Sql
@@ -860,9 +831,8 @@ object LlmData {
     * reproduces x99's batch maintenance exactly, so x99's oracle is the
     * oracle. Per-trigger work ∝ the landed file; the probe reads nprobe
     * cell directories — the continuous-ANN-service twin of x96. */
-  def x100StreamAnnIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x100_").toFile
-    try {
+  def x100StreamAnnIngest(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_x100_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val idx = new java.io.File(tmp, "idx").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -880,8 +850,7 @@ object LlmData {
       val res = Similarity.ivfTopKFromIndexVerified(spark, idx, e,
         e.filter(col("vec_id") < 10), 5)
       graft.util.Materialize.sorted(res, col("p_id"), col("rn"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed index-fold ≡ batch build+append: x99's oracle. */
   lazy val x100Sql: String = x99Sql
@@ -1387,7 +1356,8 @@ object LlmData {
     * (doc_id = vec_id) and the final agg is (source, cell)-keyed,
     * cardinality #sources × #cells. */
   def x78TopicProfile(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Similarity.assignCells(embs(spark, dir), sharedCentroids(spark, dir))
+    val e = embs(spark, dir)
+    val cells = Similarity.assignCells(e, Similarity.kmeansCentroids(e))
     docs(spark, dir).join(cells, col("doc_id") === col("vec_id"))
       .groupBy(col("source"), col("cell"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
@@ -1415,9 +1385,8 @@ object LlmData {
     * oracle is the exact half-corpus Jaccard pair set x44 already passes
     * — half-corpus like x44, because the battery pays full-corpus LSH in
     * x21/x35 already and the streamed run re-mines per scoring pass. */
-  def x92StreamNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x92_").toFile
-    try {
+  def x92StreamNearDup(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_x92_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val corpus = new java.io.File(tmp, "corpus").getAbsolutePath
       val pairs = new java.io.File(tmp, "pairs").getAbsolutePath
@@ -1431,8 +1400,7 @@ object LlmData {
         .select(col("a_id"), col("b_id"), col("jacc"))
       // pair-set-sized: materialize so the temp corpus/checkpoint drop
       graft.util.Materialize.sorted(res, col("a_id"), col("b_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed miner from empty ≡ batch miner: x44's half-corpus oracle. */
   val x92Sql: String = x44Sql

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.ingest.Donki
 import graft.operators.DedupAppend
+import graft.streaming.Drain
 
 /** Reference-parity queries P1–P3 (SURVEY.md §2.4).
   *
@@ -266,9 +267,8 @@ object Parity {
     * read back with the surrogate id — must hash-equal p3's answer.
     * P1-P5 gate the pipeline's pieces; this gates the assembled service
     * the reference user actually migrates to. */
-  def p6StreamIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_p6_").toFile
-    try {
+  def p6StreamIngest(spark: SparkSession, dir: String): DataFrame =
+    Drain.scope(spark, "graft_p6_") { tmp =>
       val landing = new java.io.File(tmp, "landing")
       landing.mkdirs()
       val table = new java.io.File(tmp, "solar_flare_data").getAbsolutePath
@@ -282,8 +282,7 @@ object Parity {
       // fixture-sized result: materialize so the temp tree drops eagerly
       val res = Donki.withId(read)
       graft.util.Materialize.sorted(res, col("id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed pipeline ≡ batch pipeline: the gate p3 already passes. */
   val p6Sql: String = p3Sql

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.operators.SnapshotStore
 import graft.operators.SnapshotStore.RangeHint
+import graft.streaming.Drain
 import graft.util.Materialize
 
 /** Scored gates for [[graft.operators.SnapshotStore]] — the manifest-
@@ -18,11 +19,8 @@ import graft.util.Materialize
   * any commit is a hash mismatch, not a silent drift. */
 object Snapshot {
 
-  private def withTmp[A](prefix: String)(f: String => A): A = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try f(new java.io.File(tmp, "t").getAbsolutePath)
-    finally graft.util.Fs.deleteTree(tmp)
-  }
+  private def withTmp[A](spark: SparkSession, prefix: String)(f: String => A): A =
+    Drain.scope(spark, prefix)(tmp => f(new java.io.File(tmp, "t").getAbsolutePath))
 
   private def docCols = Seq("doc_id", "text", "lang", "source", "n_chars")
 
@@ -53,7 +51,7 @@ object Snapshot {
     * writes only its batch and each commit is one marker create: table
     * size never enters the write path. */
   def q129SnapshotOps(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q129_") { path =>
+    withTmp(spark, "graft_q129_") { path =>
       buildDocsTable(spark, dir, path)
       require(SnapshotStore.versions(spark, path) == Seq(1L, 2L, 3L, 4L),
         s"q129: expected versions 1..4, got ${SnapshotStore.versions(spark, path)}")
@@ -78,7 +76,7 @@ object Snapshot {
     * readers lock-free at 100 TB: a reader pinned to version 3 is
     * untouched by any number of later commits. */
   def q130TimeTravel(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q130_") { path =>
+    withTmp(spark, "graft_q130_") { path =>
       buildDocsTable(spark, dir, path)
       SnapshotStore.vacuum(spark, path, keepVersions = 3)
       require(SnapshotStore.versions(spark, path) == Seq(2L, 3L, 4L),
@@ -108,7 +106,7 @@ object Snapshot {
     * between rewriting gigabytes and rewriting the whole table for a
     * one-key-range correction. */
   def q131CowUpdate(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q131_") { path =>
+    withTmp(spark, "graft_q131_") { path =>
       SnapshotStore.create(spark, t(spark, dir, "orders"), path,
         statsColumns = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"), numFiles = 8)
       val before = SnapshotStore.entries(spark, path, 1).map(_.path).toSet
@@ -140,7 +138,7 @@ object Snapshot {
     * prune is what turns a time-windowed scan from all-files into
     * O(window/span) files before the reader even opens a footer. */
   def q132ManifestPrune(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q132_") { path =>
+    withTmp(spark, "graft_q132_") { path =>
       SnapshotStore.create(spark, t(spark, dir, "orders"), path,
         statsColumns = Seq("o_orderdate"), clusterBy = Seq("o_orderdate"), numFiles = 8)
       val es = SnapshotStore.entries(spark, path, 1)
@@ -177,7 +175,7 @@ object Snapshot {
     * maintenance-loop discipline on the snapshot substrate, where
     * compaction needs no swap dance because readers never race a rename. */
   def q133VacuumLifecycle(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q133_") { path =>
+    withTmp(spark, "graft_q133_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       SnapshotStore.create(spark, docs, path,
         statsColumns = Seq("doc_id"), clusterBy = Seq("doc_id"), numFiles = 6)
@@ -233,7 +231,7 @@ object Snapshot {
     * give: a crash BETWEEN the sink write and the checkpoint commit
     * replays into an atomic no-op instead of a half-visible batch. */
   def q134StreamSnapshot(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q134_") { path =>
+    withTmp(spark, "graft_q134_") { path =>
       val base = new java.io.File(path).getParentFile
       val landing = new java.io.File(base, "landing").getAbsolutePath
       val ckpt1 = new java.io.File(base, "ckpt1").getAbsolutePath
@@ -272,7 +270,7 @@ object Snapshot {
     * reference's ON CONFLICT DO NOTHING to DO UPDATE — with an atomicity
     * the row-at-a-time warehouse spelling only gets from its engine. */
   def q135SnapshotMerge(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q135_") { path =>
+    withTmp(spark, "graft_q135_") { path =>
       val o = t(spark, dir, "orders")
       SnapshotStore.create(spark, o, path,
         statsColumns = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"), numFiles = 8)
@@ -324,7 +322,7 @@ object Snapshot {
     * (maintained MV, replica, index) follows the table with — cost ∝
     * churn between versions, never table size. */
   def q137SnapshotChanges(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q137_") { path =>
+    withTmp(spark, "graft_q137_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       SnapshotStore.create(spark, docs, path,
         statsColumns = Seq("doc_id"), clusterBy = Seq("doc_id"), numFiles = 8)
@@ -381,7 +379,7 @@ object Snapshot {
     * not eventually-consistent — because each delta is an exact multiset
     * difference between committed snapshots. */
   def q138SnapshotIvm(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q138_") { path =>
+    withTmp(spark, "graft_q138_") { path =>
       buildDocsTable(spark, dir, path) // v1..v4
       def aggOf(df: DataFrame): DataFrame =
         df.groupBy(col("lang"))
@@ -424,7 +422,7 @@ object Snapshot {
     * 100 TB adding a column costs one small schema file — never a table
     * rewrite — which is the only viable evolution story at that size. */
   def q139SchemaEvolution(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q139_") { path =>
+    withTmp(spark, "graft_q139_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       SnapshotStore.create(spark,
         docs.filter(pmod(col("doc_id"), lit(3)) < 2), path)
@@ -459,7 +457,7 @@ object Snapshot {
     * a quality gate fronts a table without copying it: stage = the
     * batch's bytes, audit = any query, publish = one atomic marker. */
   def q140WriteAuditPublish(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q140_") { path =>
+    withTmp(spark, "graft_q140_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       SnapshotStore.create(spark, docs, path)
       def audit(v: Long): Long =
@@ -514,7 +512,7 @@ object Snapshot {
     * the 100 TB read path: planner-side metadata pruning first, parquet
     * row-group stats second, and the query text never knows. */
   def q141AutoPrune(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q141_") { path =>
+    withTmp(spark, "graft_q141_") { path =>
       SnapshotStore.create(spark, t(spark, dir, "orders"), path,
         statsColumns = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"), numFiles = 8)
       val res = orderCols(SnapshotStore.readRelation(spark, path)
@@ -552,7 +550,7 @@ object Snapshot {
     * slab bounds derive from the manifest's own stats (max/8), so the
     * gate is scale-factor-independent. */
   def q142ZorderCompact(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q142_") { path =>
+    withTmp(spark, "graft_q142_") { path =>
       SnapshotStore.create(spark, t(spark, dir, "orders"), path,
         statsColumns = Seq("o_orderkey", "o_custkey"), numFiles = 16)
       val es1 = SnapshotStore.entries(spark, path, 1)
@@ -593,7 +591,7 @@ object Snapshot {
     * pipeline runs daily — the snapshot substrate is what makes the
     * refresh atomic under a live stream. */
   def q143StreamSnapshotJoin(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q143_") { path =>
+    withTmp(spark, "graft_q143_") { path =>
       val base = new java.io.File(path).getParentFile
       val landing = new java.io.File(base, "landing").getAbsolutePath
       val out = new java.io.File(base, "out").getAbsolutePath
@@ -626,7 +624,7 @@ object Snapshot {
     * no version, an aborted commit would leave no marker), so the audit
     * answer is a deterministic fact, not a log heuristic. */
   def q144TableHistory(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q144_") { path =>
+    withTmp(spark, "graft_q144_") { path =>
       buildDocsTable(spark, dir, path)
       Materialize.sorted(SnapshotStore.history(spark, path), col("version"))
     }
@@ -651,7 +649,7 @@ object Snapshot {
     * The relation is [[graft.plans.SnapshotFileIndex]]-backed, so this
     * surface inherits the whole zone-map read path (q146 pins that). */
   def q145FormatTimeTravel(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q145_") { path =>
+    withTmp(spark, "graft_q145_") { path =>
       buildDocsTable(spark, dir, path)
       SnapshotStore.vacuum(spark, path, keepVersions = 3)
       val byVersion = spark.read.format("graft-snapshot")
@@ -683,7 +681,7 @@ object Snapshot {
     * read path (manifest prune → row-group stats → codegen) is what every
     * API gets. */
   def q146FormatPrune(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q146_") { path =>
+    withTmp(spark, "graft_q146_") { path =>
       SnapshotStore.create(spark, t(spark, dir, "orders"), path,
         statsColumns = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"), numFiles = 8)
       val res = orderCols(spark.read.format("graft-snapshot").load(path)
@@ -718,7 +716,7 @@ object Snapshot {
     * each of 10⁴ files costs one tombstone file here vs 10⁴ full-file
     * rewrites under CoW. */
   def q147MorDelete(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q147_") { path =>
+    withTmp(spark, "graft_q147_") { path =>
       val cowPath = path + "_cow"
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       val pred = col("lang") === "de"
@@ -797,7 +795,7 @@ object Snapshot {
     * 100 TB follows the table paying churn-sized reads per version, with
     * no coordinator and no re-scan. */
   def q148CdcStream(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q148_") { path =>
+    withTmp(spark, "graft_q148_") { path =>
       val base = new java.io.File(path).getParentFile
       val mvPath = new java.io.File(base, "mv").getAbsolutePath
       val ckpt1 = new java.io.File(base, "ckpt1").getAbsolutePath
@@ -845,7 +843,7 @@ object Snapshot {
     * read proves the zone map prunes). The oracle: every document exactly
     * once. A migrating user's write-side instinct now works unchanged. */
   def q149FormatWrite(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q149_") { path =>
+    withTmp(spark, "graft_q149_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       def slice(i: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === i)
       slice(0).write.format("graft-snapshot")
@@ -907,7 +905,7 @@ object Snapshot {
     * once, minus the deleted language. A migrating warehouse user's SQL
     * instinct now works against the snapshot substrate unchanged. */
   def q150SqlCatalog(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q150_") { path =>
+    withTmp(spark, "graft_q150_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       docs.createOrReplaceTempView("docs_q150")
       spark.sql("DROP TABLE IF EXISTS g150")
@@ -961,7 +959,7 @@ object Snapshot {
     * committed version refuses loudly through SQL too. Oracle: q130's —
     * version 3 is the complete corpus. */
   def q151SqlTimeTravel(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q151_") { path =>
+    withTmp(spark, "graft_q151_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       docs.createOrReplaceTempView("docs_q151")
       spark.sql("DROP TABLE IF EXISTS g151")
@@ -1003,7 +1001,7 @@ object Snapshot {
     * the table's file count. One relation serves the helper, format, and
     * SQL surfaces — the 100 TB read path is what every API gets. */
   def q152SqlPrune(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q152_") { path =>
+    withTmp(spark, "graft_q152_") { path =>
       t(spark, dir, "orders").createOrReplaceTempView("orders_q152")
       spark.sql("DROP TABLE IF EXISTS g152")
       try {
@@ -1047,60 +1045,53 @@ object Snapshot {
     * silently skip deltas). At 100 TB each micro-batch reads manifest-
     * diff-sized deltas — the consumer never re-scans the table. */
   def q153CdcSource(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q153_") { path =>
-      import org.apache.spark.sql.streaming.Trigger
+    withTmp(spark, "graft_q153_") { path =>
       val base = new java.io.File(path).getParentFile
       val mvPath = new java.io.File(base, "mv").getAbsolutePath
       def ckpt(i: Int) = new java.io.File(base, s"ckpt$i").getAbsolutePath
       buildDocsTable(spark, dir, path) // v1..v4 (v4 deletes 'de')
       // ---- user-side consumer over the PUBLIC source ----
-      def drain(checkpointDir: String): Unit = {
-        val q = spark.readStream.format("graft-snapshot")
+      def drain(checkpointDir: String): Unit =
+        Drain.batches(spark.readStream.format("graft-snapshot")
           .option("readChangeFeed", "true").option("startingVersion", 1)
-          .load(path)
-          .writeStream.trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val s = batch.sparkSession
-            val b = batch.localCheckpoint(true) // read 2×: mark probe + fold
-            val marks = b.agg(max(col("_commit_version"))).head
-            if (!marks.isNullAt(0)) {
-              val hi = marks.getLong(0)
-              val applied =
-                if (SnapshotStore.versions(s, mvPath).isEmpty) 0L
+          .load(path), checkpointDir) { (batch, _) =>
+          val s = batch.sparkSession
+          val b = batch.localCheckpoint(true) // read 2×: mark probe + fold
+          val marks = b.agg(max(col("_commit_version"))).head
+          if (!marks.isNullAt(0)) {
+            val hi = marks.getLong(0)
+            val applied =
+              if (SnapshotStore.versions(s, mvPath).isEmpty) 0L
+              else SnapshotStore.read(s, mvPath)
+                .agg(max(col("as_of_version"))).head.getLong(0)
+            // the high-water mark makes any replay a no-op at the
+            // version level — the redelivered rows fold to nothing
+            val fresh = b.filter(col("_commit_version") > applied)
+            if (hi > applied) {
+              val sign = when(col("_change_type") === "insert", 1L)
+                .otherwise(-1L)
+              val d = fresh.groupBy(col("lang"))
+                .agg(sum(sign).as("d_n"), sum(sign * col("n_chars")).as("d_chars"))
+              val prev =
+                if (applied == 0L) d.select(col("lang"),
+                  lit(0L).as("n_docs"), lit(0L).as("sum_chars")).limit(0)
                 else SnapshotStore.read(s, mvPath)
-                  .agg(max(col("as_of_version"))).head.getLong(0)
-              // the high-water mark makes any replay a no-op at the
-              // version level — the redelivered rows fold to nothing
-              val fresh = b.filter(col("_commit_version") > applied)
-              if (hi > applied) {
-                val sign = when(col("_change_type") === "insert", 1L)
-                  .otherwise(-1L)
-                val d = fresh.groupBy(col("lang"))
-                  .agg(sum(sign).as("d_n"), sum(sign * col("n_chars")).as("d_chars"))
-                val prev =
-                  if (applied == 0L) d.select(col("lang"),
-                    lit(0L).as("n_docs"), lit(0L).as("sum_chars")).limit(0)
-                  else SnapshotStore.read(s, mvPath)
-                    .select(col("lang"), col("n_docs"), col("sum_chars"))
-                val mv = prev.join(d, Seq("lang"), "full_outer")
-                  .select(col("lang"),
-                    (coalesce(col("n_docs"), lit(0L)) +
-                      coalesce(col("d_n"), lit(0L))).as("n_docs"),
-                    (coalesce(col("sum_chars"), lit(0L)) +
-                      coalesce(col("d_chars"), lit(0L))).as("sum_chars"))
-                  .withColumn("as_of_version", lit(hi))
-                if (SnapshotStore.versions(s, mvPath).isEmpty)
-                  SnapshotStore.create(s, mv, mvPath, owner = Some(checkpointDir))
-                else SnapshotStore.merge(s, mv, mvPath,
-                  keys = Seq("lang"), tieBreak = Nil, owner = Some(checkpointDir))
-                ()
-              }
+                  .select(col("lang"), col("n_docs"), col("sum_chars"))
+              val mv = prev.join(d, Seq("lang"), "full_outer")
+                .select(col("lang"),
+                  (coalesce(col("n_docs"), lit(0L)) +
+                    coalesce(col("d_n"), lit(0L))).as("n_docs"),
+                  (coalesce(col("sum_chars"), lit(0L)) +
+                    coalesce(col("d_chars"), lit(0L))).as("sum_chars"))
+                .withColumn("as_of_version", lit(hi))
+              if (SnapshotStore.versions(s, mvPath).isEmpty)
+                SnapshotStore.create(s, mv, mvPath, owner = Some(checkpointDir))
+              else SnapshotStore.merge(s, mv, mvPath,
+                keys = Seq("lang"), tieBreak = Nil, owner = Some(checkpointDir))
+              ()
             }
           }
-          .start()
-        q.awaitTermination()
-      }
+        }
       drain(ckpt(1))
       // a later commit: the SAME lineage folds only the new delta
       SnapshotStore.deleteWhere(spark, path, col("lang") === "zh")
@@ -1142,7 +1133,7 @@ object Snapshot {
     * declaratively. At 100 TB a scattered one-column correction is THE
     * case where CoW explodes — this is its bounded-cost twin. */
   def q154MorUpdate(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q154_") { path =>
+    withTmp(spark, "graft_q154_") { path =>
       val cowPath = path + "_cow"
       val o = t(spark, dir, "orders")
       val pred = pmod(col("o_orderkey"), lit(100)) === 0
@@ -1206,7 +1197,7 @@ object Snapshot {
     * delete (q147), update (q154), merge (q155) — every row-level op now
     * has both cost models, chosen per workload. */
   def q155MorMerge(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q155_") { path =>
+    withTmp(spark, "graft_q155_") { path =>
       val cowPath = path + "_cow"
       val o = t(spark, dir, "orders")
       SnapshotStore.create(spark, o, path,
@@ -1279,7 +1270,7 @@ object Snapshot {
     * (a subquery predicate cannot rebind by name and must refuse, never
     * approximate). Oracle: q133's declarative replay. */
   def q156SqlDml(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q156_") { path =>
+    withTmp(spark, "graft_q156_") { path =>
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       docs.createOrReplaceTempView("docs_q156")
       spark.sql("DROP TABLE IF EXISTS g156")
@@ -1322,7 +1313,7 @@ object Snapshot {
     * live in one of 8 range-clustered files, ≥7 carry by reference.
     * Oracle: q135's declarative replay. */
   def q157SqlMerge(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q157_") { path =>
+    withTmp(spark, "graft_q157_") { path =>
       val o = t(spark, dir, "orders")
       o.createOrReplaceTempView("orders_q157")
       spark.sql("DROP TABLE IF EXISTS g157")
@@ -1377,7 +1368,7 @@ object Snapshot {
     * lock-free marker scan, changes reads only the manifest-diff files.
     * Oracle: the literal expected trail (q144's). */
   def q158SqlTvf(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q158_") { path =>
+    withTmp(spark, "graft_q158_") { path =>
       buildDocsTable(spark, dir, path) // v1..v4 (v4 deletes 'de')
       val hist = spark.sql(s"SELECT * FROM snapshot_history('$path')")
       require(hist.orderBy(col("version")).collect().toSeq ==
@@ -1414,8 +1405,7 @@ object Snapshot {
     * no-op). The zone map flowed: a ranged format read prunes files.
     * Oracle: every document exactly once (q134's). */
   def q159StreamSink(spark: SparkSession, dir: String): DataFrame =
-    withTmp("graft_q159_") { path =>
-      import org.apache.spark.sql.streaming.Trigger
+    withTmp(spark, "graft_q159_") { path =>
       val base = new java.io.File(path).getParentFile
       val landing = new java.io.File(base, "landing").getAbsolutePath
       val ckpt1 = new java.io.File(base, "ckpt1").getAbsolutePath
@@ -1423,17 +1413,10 @@ object Snapshot {
       val docs = t(spark, dir, "documents").select(docCols.map(col): _*)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      def drain(ckpt: String): Unit = {
-        val q = spark.readStream.schema(schema).json(landing)
-          .writeStream.format("graft-snapshot")
-          .option("checkpointLocation", ckpt)
-          .option("dedupKeys", "doc_id")
-          .option("statsColumns", "doc_id").option("clusterBy", "doc_id")
-          .option("numFiles", "4")
-          .trigger(Trigger.AvailableNow())
-          .start(path)
-        q.awaitTermination()
-      }
+      def drain(ckpt: String): Unit =
+        Drain.sink(spark.readStream.schema(schema).json(landing), ckpt,
+          "graft-snapshot", "append", "path" -> path, "dedupKeys" -> "doc_id",
+          "statsColumns" -> "doc_id", "clusterBy" -> "doc_id", "numFiles" -> "4")
       docs.filter(pmod(col("doc_id"), lit(2)) === 0).coalesce(1).write.json(landing)
       drain(ckpt1)
       val vsA = SnapshotStore.versions(spark, path)

@@ -189,20 +189,11 @@ object EventStreams {
     * equivalence. `complete` output mode so still-open windows are emitted
     * too (matching the batch answer on a bounded input). */
   def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    drain(tumblingAgg(readEvents(spark, dir)), queryName)
+    Drain.toMemory(tumblingAgg(readEvents(spark, dir)), "complete", queryName)
 
   /** Same, for the sliding-window twin. */
   def runOnceSliding(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    drain(slidingAgg(readEvents(spark, dir)), queryName)
-
-  private def drain(df: DataFrame, queryName: String): DataFrame = {
-    val q = df.writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    df.sparkSession.table(queryName)
-  }
+    Drain.toMemory(slidingAgg(readEvents(spark, dir)), "complete", queryName)
 
   /** Incremental ingest of a JSON landing dir into a dedup-append parquet
     * table — the full reference-pipeline restatement under Structured
@@ -213,22 +204,16 @@ object EventStreams {
     * the checkpoint. */
   def ingestFlares(spark: SparkSession, landingDir: String, tablePath: String,
                    checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val raw = spark.readStream.schema(graft.ingest.Donki.flrSchema)
       .json(landingDir)
-    val q = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // owner = the checkpoint: this lineage's restart re-acquires its
-        // own stale lease after a crash (the replay is conflict-skipped)
-        graft.operators.DedupAppend.append(
-          batch.sparkSession, graft.ingest.Donki.project(batch.toDF()), tablePath,
-          keys = Seq("flr_id"), tieBreak = Seq("class_type", "link"),
-          owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(raw, checkpointDir) { (batch, _) =>
+      // owner = the checkpoint: this lineage's restart re-acquires its
+      // own stale lease after a crash (the replay is conflict-skipped)
+      graft.operators.DedupAppend.append(
+        batch.sparkSession, graft.ingest.Donki.project(batch), tablePath,
+        keys = Seq("flr_id"), tieBreak = Seq("class_type", "link"),
+        owner = Some(checkpointDir))
+    }
   }
 
   /** Streaming NEAR-DUP gate — the LSH analogue of [[ingestFlares]]: each
@@ -253,30 +238,24 @@ object EventStreams {
   def mineNearDupsStream(spark: SparkSession, landingDir: String, corpusPath: String,
                          pairsPath: String, checkpointDir: String,
                          threshold: Double): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        // consumed by mining (probe + corpus union) and the corpus append
-        val newDocs = batch.toDF().localCheckpoint(true)
-        val existing =
-          if (!graft.operators.DedupAppend.exists(s, corpusPath)) newDocs.limit(0)
-          else s.read.parquet(corpusPath) // replay safety: exclude this batch's ids
-            .join(broadcast(newDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        val pairs = graft.operators.TextDedup
-          .minhashNearDupsIncremental(existing, newDocs, threshold)
-        graft.operators.DedupAppend.append(s, pairs, pairsPath,
-          keys = Seq("a_id", "b_id"), tieBreak = Nil)
-        graft.operators.DedupAppend.append(s, newDocs, corpusPath,
-          keys = Seq("doc_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(docSchema).json(landingDir),
+      checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      // consumed by mining (probe + corpus union) and the corpus append
+      val newDocs = batch.localCheckpoint(true)
+      val existing =
+        if (!graft.operators.DedupAppend.exists(s, corpusPath)) newDocs.limit(0)
+        else s.read.parquet(corpusPath) // replay safety: exclude this batch's ids
+          .join(broadcast(newDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+      val pairs = graft.operators.TextDedup
+        .minhashNearDupsIncremental(existing, newDocs, threshold)
+      graft.operators.DedupAppend.append(s, pairs, pairsPath,
+        keys = Seq("a_id", "b_id"), tieBreak = Nil)
+      graft.operators.DedupAppend.append(s, newDocs, corpusPath,
+        keys = Seq("doc_id"), tieBreak = Nil)
+    }
   }
 
   /** Streaming keyed ingest into a [[graft.operators.SnapshotStore]]
@@ -296,29 +275,23 @@ object EventStreams {
   def snapshotIngestStream(spark: SparkSession, landingDir: String,
                            tablePath: String, checkpointDir: String,
                            keys: Seq[String]): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val owner = Some(checkpointDir)
-        if (graft.operators.SnapshotStore.versions(s, tablePath).isEmpty)
-          graft.operators.SnapshotStore.create(s,
-            graft.operators.DedupAppend.survivors(batch.toDF(), keys, Nil),
-            tablePath, owner = owner)
-        else
-          graft.operators.SnapshotStore.appendDedup(s, batch.toDF(), tablePath,
-            keys, tieBreak = Nil, owner = owner)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(docSchema).json(landingDir),
+      checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      val owner = Some(checkpointDir)
+      if (graft.operators.SnapshotStore.versions(s, tablePath).isEmpty)
+        graft.operators.SnapshotStore.create(s,
+          graft.operators.DedupAppend.survivors(batch, keys, Nil),
+          tablePath, owner = owner)
+      else
+        graft.operators.SnapshotStore.appendDedup(s, batch, tablePath,
+          keys, tieBreak = Nil, owner = owner)
+      ()
+    }
   }
 
   /** SNAPSHOT CDC AS A STREAMING SOURCE — the subscription form of
@@ -344,76 +317,69 @@ object EventStreams {
     * re-scan — and the marker listing is metadata-sized. */
   def snapshotCdcStream(spark: SparkSession, tablePath: String,
                         mvPath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.operators.SnapshotStore
-    val q = spark.readStream.format("text")
+    Drain.batches(spark.readStream.format("text")
       .load(s"$tablePath/_snapshots/commit-*")
-      .select(col("_metadata.file_path").as("marker"))
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val owner = Some(checkpointDir)
-        // marker names only: metadata-sized (one row per commit in batch)
-        val vs = batch.collect().map { r =>
-          new org.apache.hadoop.fs.Path(r.getString(0)).getName
-            .stripPrefix("commit-").toLong
-        }.toSeq.distinct.sorted
-        if (vs.nonEmpty) {
-          val applied =
-            if (SnapshotStore.versions(s, mvPath).isEmpty) 0L
+      .select(col("_metadata.file_path").as("marker")), checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      val owner = Some(checkpointDir)
+      // marker names only: metadata-sized (one row per commit in batch)
+      val vs = batch.collect().map { r =>
+        new org.apache.hadoop.fs.Path(r.getString(0)).getName
+          .stripPrefix("commit-").toLong
+      }.toSeq.distinct.sorted
+      if (vs.nonEmpty) {
+        val applied =
+          if (SnapshotStore.versions(s, mvPath).isEmpty) 0L
+          else SnapshotStore.read(s, mvPath)
+            .agg(max(col("as_of_version"))).head.getLong(0)
+        val todo = vs.filter(_ > applied)
+        if (todo.nonEmpty) {
+          require(todo == (todo.head to todo.max),
+            s"snapshotCdcStream: non-contiguous versions $todo — a delta " +
+              "was vacuumed away; re-bootstrap the consumer")
+          require(applied > 0L || todo.head == 1L,
+            s"snapshotCdcStream: first delivery must start at version 1, " +
+              s"got ${todo.head}")
+          // fold the WHOLE window in one aggregation: version deltas
+          // are additive under the signed sum (Σ_v Σ_rows ≡ Σ_rows of
+          // the unioned legs), so the per-version full_outer-join +
+          // eager-localCheckpoint loop this replaces (one shuffle + one
+          // materialization job per version) collapses to one union,
+          // one aggregation, one join — identical rows by additivity.
+          // Legs come from [[SnapshotStore.changeFeedLegs]]: a fresh
+          // bootstrap (applied = 0) folds from version 1 — the v1 leg
+          // IS the initial snapshot as inserts — so the pure-append
+          // prefix coalesces to a single scan. [r11]
+          val fromLeg = if (applied == 0L) 1L else todo.head
+          val sign = when(col("change_type") === "insert", 1L).otherwise(-1L)
+          val d = SnapshotStore.changeFeedLegs(s, tablePath, fromLeg, todo.max)
+            .map(_.select(col("lang"), col("n_chars"), sign.as("sgn")))
+            .reduce(_ unionByName _)
+            .groupBy(col("lang"))
+            .agg(sum(col("sgn")).as("d_n"),
+              sum(col("sgn") * col("n_chars")).as("d_chars"))
+          val mv: DataFrame =
+            if (applied == 0L)
+              d.select(col("lang"), col("d_n").as("n_docs"),
+                col("d_chars").as("sum_chars"))
             else SnapshotStore.read(s, mvPath)
-              .agg(max(col("as_of_version"))).head.getLong(0)
-          val todo = vs.filter(_ > applied)
-          if (todo.nonEmpty) {
-            require(todo == (todo.head to todo.max),
-              s"snapshotCdcStream: non-contiguous versions $todo — a delta " +
-                "was vacuumed away; re-bootstrap the consumer")
-            require(applied > 0L || todo.head == 1L,
-              s"snapshotCdcStream: first delivery must start at version 1, " +
-                s"got ${todo.head}")
-            // fold the WHOLE window in one aggregation: version deltas
-            // are additive under the signed sum (Σ_v Σ_rows ≡ Σ_rows of
-            // the unioned legs), so the per-version full_outer-join +
-            // eager-localCheckpoint loop this replaces (one shuffle + one
-            // materialization job per version) collapses to one union,
-            // one aggregation, one join — identical rows by additivity.
-            // Legs come from [[SnapshotStore.changeFeedLegs]]: a fresh
-            // bootstrap (applied = 0) folds from version 1 — the v1 leg
-            // IS the initial snapshot as inserts — so the pure-append
-            // prefix coalesces to a single scan. [r11]
-            val fromLeg = if (applied == 0L) 1L else todo.head
-            val sign = when(col("change_type") === "insert", 1L).otherwise(-1L)
-            val d = SnapshotStore.changeFeedLegs(s, tablePath, fromLeg, todo.max)
-              .map(_.select(col("lang"), col("n_chars"), sign.as("sgn")))
-              .reduce(_ unionByName _)
-              .groupBy(col("lang"))
-              .agg(sum(col("sgn")).as("d_n"),
-                sum(col("sgn") * col("n_chars")).as("d_chars"))
-            val mv: DataFrame =
-              if (applied == 0L)
-                d.select(col("lang"), col("d_n").as("n_docs"),
-                  col("d_chars").as("sum_chars"))
-              else SnapshotStore.read(s, mvPath)
-                .select(col("lang"), col("n_docs"), col("sum_chars"))
-                .join(d, Seq("lang"), "full_outer")
-                .select(col("lang"),
-                  (coalesce(col("n_docs"), lit(0L)) +
-                    coalesce(col("d_n"), lit(0L))).as("n_docs"),
-                  (coalesce(col("sum_chars"), lit(0L)) +
-                    coalesce(col("d_chars"), lit(0L))).as("sum_chars"))
-            val out = mv.withColumn("as_of_version", lit(todo.max))
-            if (SnapshotStore.versions(s, mvPath).isEmpty)
-              SnapshotStore.create(s, out, mvPath, owner = owner)
-            else SnapshotStore.merge(s, out, mvPath,
-              keys = Seq("lang"), tieBreak = Nil, owner = owner)
-            ()
-          }
+              .select(col("lang"), col("n_docs"), col("sum_chars"))
+              .join(d, Seq("lang"), "full_outer")
+              .select(col("lang"),
+                (coalesce(col("n_docs"), lit(0L)) +
+                  coalesce(col("d_n"), lit(0L))).as("n_docs"),
+                (coalesce(col("sum_chars"), lit(0L)) +
+                  coalesce(col("d_chars"), lit(0L))).as("sum_chars"))
+          val out = mv.withColumn("as_of_version", lit(todo.max))
+          if (SnapshotStore.versions(s, mvPath).isEmpty)
+            SnapshotStore.create(s, out, mvPath, owner = owner)
+          else SnapshotStore.merge(s, out, mvPath,
+            keys = Seq("lang"), tieBreak = Nil, owner = owner)
+          ()
         }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Stream-snapshot enrichment: each micro-batch joins against the dim
@@ -429,22 +395,15 @@ object EventStreams {
   def enrichAgainstSnapshotStream(spark: SparkSession, landingDir: String,
                                   dimPath: String, outPath: String,
                                   checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val evSchema = StructType(Seq(
       StructField("event_id", LongType), StructField("user_id", LongType)))
-    val q = spark.readStream.schema(evSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val dim = graft.operators.SnapshotStore.readRelation(s, dimPath)
-        val enriched = batch.toDF().join(broadcast(dim), Seq("user_id"))
-        graft.operators.DedupAppend.append(s, enriched, outPath,
-          keys = Seq("event_id"), tieBreak = Nil, owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(evSchema).json(landingDir), checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      val dim = graft.operators.SnapshotStore.readRelation(s, dimPath)
+      val enriched = batch.join(broadcast(dim), Seq("user_id"))
+      graft.operators.DedupAppend.append(s, enriched, outPath,
+        keys = Seq("event_id"), tieBreak = Nil, owner = Some(checkpointDir))
+    }
   }
 
   /** The UNBOUNDED-VOCABULARY streamed near-dup mining service —
@@ -467,32 +426,27 @@ object EventStreams {
   def mineNearDupsStreamIndexed(spark: SparkSession, landingDir: String,
                                 indexPath: String, pairsPath: String,
                                 checkpointDir: String, threshold: Double): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .option("maxFilesPerTrigger", "1") // one landed file = one fold step
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        // consumed by the index fold and the probe: materialize once
-        val newDocs = batch.toDF().localCheckpoint(true)
-        // first batch bootstraps the index; later (and replayed) batches
-        // fold in idempotently — append-then-probe, so the probe always
-        // sees an index that already contains its own batch
-        if (!graft.operators.DedupAppend.exists(s, s"$indexPath/members"))
-          graft.operators.LshIndex.build(newDocs, indexPath)
-        else
-          graft.operators.LshIndex.append(newDocs, indexPath,
-            owner = Some(checkpointDir))
-        val pairs = graft.operators.LshIndex.probe(s, indexPath, newDocs, threshold)
-        graft.operators.DedupAppend.append(s, pairs, pairsPath,
-          keys = Seq("a_id", "b_id"), tieBreak = Nil, owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+    // maxFilesPerTrigger is a writer option here, which the file source
+    // never reads: every file landed before the drain folds in one batch
+    Drain.batches(spark.readStream.schema(docSchema).json(landingDir),
+      checkpointDir, "maxFilesPerTrigger" -> "1") { (batch, _) =>
+      val s = batch.sparkSession
+      // consumed by the index fold and the probe: materialize once
+      val newDocs = batch.localCheckpoint(true)
+      // first batch bootstraps the index; later (and replayed) batches
+      // fold in idempotently — append-then-probe, so the probe always
+      // sees an index that already contains its own batch
+      if (!graft.operators.DedupAppend.exists(s, s"$indexPath/members"))
+        graft.operators.LshIndex.build(newDocs, indexPath)
+      else
+        graft.operators.LshIndex.append(newDocs, indexPath,
+          owner = Some(checkpointDir))
+      val pairs = graft.operators.LshIndex.probe(s, indexPath, newDocs, threshold)
+      graft.operators.DedupAppend.append(s, pairs, pairsPath,
+        keys = Seq("a_id", "b_id"), tieBreak = Nil, owner = Some(checkpointDir))
+    }
   }
 
   /** Continuous ANN-index maintenance: each landed parquet file of
@@ -510,29 +464,23 @@ object EventStreams {
     * via buildIvfIndex when assignment quality decays). */
   def maintainIvfIndexStream(spark: SparkSession, landingDir: String,
                              indexPath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .option("maxFilesPerTrigger", "1") // one landed file = one fold step
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        // consumed by seed-order scan + assignment (+ Lloyd iterations on
-        // bootstrap): materialize once
-        val vecs = batch.toDF().localCheckpoint(true)
-        if (!graft.operators.DedupAppend.exists(s, s"$indexPath/cells"))
-          graft.operators.Similarity.buildIvfIndexWith(vecs,
-            graft.operators.Similarity.kmeansCentroids(vecs), indexPath)
-        else
-          graft.operators.Similarity.appendToIvfIndex(vecs, indexPath,
-            owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+    // a writer option, as in mineNearDupsStreamIndexed: not a slicing
+    Drain.batches(spark.readStream.schema(schema).parquet(landingDir),
+      checkpointDir, "maxFilesPerTrigger" -> "1") { (batch, _) =>
+      val s = batch.sparkSession
+      // consumed by seed-order scan + assignment (+ Lloyd iterations on
+      // bootstrap): materialize once
+      val vecs = batch.localCheckpoint(true)
+      if (!graft.operators.DedupAppend.exists(s, s"$indexPath/cells"))
+        graft.operators.Similarity.buildIvfIndexWith(vecs,
+          graft.operators.Similarity.kmeansCentroids(vecs), indexPath)
+      else
+        graft.operators.Similarity.appendToIvfIndex(vecs, indexPath,
+          owner = Some(checkpointDir))
+    }
   }
 
   /** Streaming SEGMENT-DEDUP gate — [[mineNearDupsStream]]'s shape one
@@ -550,29 +498,23 @@ object EventStreams {
   def segmentGateStream(spark: SparkSession, landingDir: String, corpusPath: String,
                         statsPath: String, checkpointDir: String,
                         segTokens: Int): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val newDocs = batch.toDF().localCheckpoint(true)
-        val existing =
-          if (!graft.operators.DedupAppend.exists(s, corpusPath)) newDocs.limit(0)
-          else s.read.parquet(corpusPath)
-            .join(broadcast(newDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        val stats = graft.operators.Curation
-          .segmentDedupIncremental(existing, newDocs, segTokens)
-        graft.operators.DedupAppend.append(s, stats, statsPath,
-          keys = Seq("doc_id"), tieBreak = Nil)
-        graft.operators.DedupAppend.append(s, newDocs, corpusPath,
-          keys = Seq("doc_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(docSchema).json(landingDir),
+      checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      val newDocs = batch.localCheckpoint(true)
+      val existing =
+        if (!graft.operators.DedupAppend.exists(s, corpusPath)) newDocs.limit(0)
+        else s.read.parquet(corpusPath)
+          .join(broadcast(newDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+      val stats = graft.operators.Curation
+        .segmentDedupIncremental(existing, newDocs, segTokens)
+      graft.operators.DedupAppend.append(s, stats, statsPath,
+        keys = Seq("doc_id"), tieBreak = Nil)
+      graft.operators.DedupAppend.append(s, newDocs, corpusPath,
+        keys = Seq("doc_id"), tieBreak = Nil)
+    }
   }
 
   /** The SCORED streaming gate (q70): AvailableNow ingest of the events
@@ -590,23 +532,16 @@ object EventStreams {
     * decides which gate goes where. */
   def tumblingMaintainStream(spark: SparkSession, dir: String,
                              statePath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = readEvents(spark, dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val partial = batch.toDF()
-          .groupBy(window(col("ts"), "1 hour").getField("start")
-              .cast(TimestampNTZType).as("window_start"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n"),
-               sum(col("value").cast(DecimalType(18, 2)))
-                 .cast(DecimalType(18, 2)).as("sum_dec"))
-        mergeTumbling(batch.sparkSession, partial, statePath, batchId)
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(readEvents(spark, dir), checkpointDir) { (batch, batchId) =>
+      val partial = batch
+        .groupBy(window(col("ts"), "1 hour").getField("start")
+            .cast(TimestampNTZType).as("window_start"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"),
+             sum(col("value").cast(DecimalType(18, 2)))
+               .cast(DecimalType(18, 2)).as("sum_dec"))
+      mergeTumbling(batch.sparkSession, partial, statePath, batchId)
+    }
   }
 
   /** Merge a partial tumbling rollup into the maintained table: sum of
@@ -630,20 +565,13 @@ object EventStreams {
     * law a scored fact. */
   def cdcCompactStream(spark: SparkSession, dir: String,
                        statePath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = readEvents(spark, dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val ch = batch.toDF().selectExpr("user_id", "event_type",
-          "unix_micros(ts) as ts_us", "event_id",
-          "cast(round(value * 100) as bigint) as cents")
-        graft.operators.UpsertState.merge(batch.sparkSession, ch, statePath,
-          keys = Seq("user_id"), version = Seq("ts_us", "event_id"))
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(readEvents(spark, dir), checkpointDir) { (batch, _) =>
+      val ch = batch.selectExpr("user_id", "event_type",
+        "unix_micros(ts) as ts_us", "event_id",
+        "cast(round(value * 100) as bigint) as cents")
+      graft.operators.UpsertState.merge(batch.sparkSession, ch, statePath,
+        keys = Seq("user_id"), version = Seq("ts_us", "event_id"))
+    }
   }
 
   /** Streaming CDC-UPSERT gate — the latest-wins counterpart of
@@ -659,21 +587,15 @@ object EventStreams {
     * .current]] is the live view. */
   def cdcUpsertStream(spark: SparkSession, landingDir: String, statePath: String,
                       checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val changeSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("ts_us", LongType), StructField("event_id", LongType),
       StructField("cents", LongType)))
-    val q = spark.readStream.schema(changeSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.UpsertState.merge(batch.sparkSession, batch.toDF(),
-          statePath, keys = Seq("user_id"), version = Seq("ts_us", "event_id"))
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(changeSchema).json(landingDir),
+      checkpointDir) { (batch, _) =>
+      graft.operators.UpsertState.merge(batch.sparkSession, batch,
+        statePath, keys = Seq("user_id"), version = Seq("ts_us", "event_id"))
+    }
   }
 
   /** Streaming ROLLUP-maintenance gate — materialized-view maintenance as
@@ -686,20 +608,14 @@ object EventStreams {
     * StreamingIngestSpec asserts streamed slices ≡ the full recompute. */
   def rollupMaintainStream(spark: SparkSession, landingDir: String,
                            rollupPath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val changeSchema = StructType(Seq(
       StructField("event_type", StringType), StructField("ts_us", LongType),
       StructField("cents", LongType)))
-    val q = spark.readStream.schema(changeSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.RollupState.merge(batch.sparkSession,
-          graft.operators.RollupState.partial(batch.toDF()), rollupPath, batchId)
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(changeSchema).json(landingDir),
+      checkpointDir) { (batch, batchId) =>
+      graft.operators.RollupState.merge(batch.sparkSession,
+        graft.operators.RollupState.partial(batch), rollupPath, batchId)
+    }
   }
 
   /** Streaming SHARD-DEAL gate — continuous sharding for a training
@@ -716,31 +632,25 @@ object EventStreams {
     * and bound per-shard count spread by the batch count. */
   def shardDealStream(spark: SparkSession, landingDir: String, assignPath: String,
                       checkpointDir: String, numShards: Int): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val assignSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("n_tok", LongType),
       StructField("shard", LongType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val newDocs = batch.toDF().localCheckpoint(true)
-        val existing =
-          if (!graft.operators.DedupAppend.exists(s, assignPath))
-            s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), assignSchema)
-          else s.read.parquet(assignPath) // replay safety: exclude this batch's ids
-            .join(broadcast(newDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        val assigned = graft.operators.Curation
-          .shardDealIncremental(existing, newDocs, numShards)
-        graft.operators.DedupAppend.append(s, assigned, assignPath,
-          keys = Seq("doc_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(docSchema).json(landingDir),
+      checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      val newDocs = batch.localCheckpoint(true)
+      val existing =
+        if (!graft.operators.DedupAppend.exists(s, assignPath))
+          s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), assignSchema)
+        else s.read.parquet(assignPath) // replay safety: exclude this batch's ids
+          .join(broadcast(newDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+      val assigned = graft.operators.Curation
+        .shardDealIncremental(existing, newDocs, numShards)
+      graft.operators.DedupAppend.append(s, assigned, assignPath,
+        keys = Seq("doc_id"), tieBreak = Nil)
+    }
   }
 
   /** Event-time sessionization with explicit per-user state
@@ -816,14 +726,9 @@ object EventStreams {
       }
     }
 
-    val q = events.groupByKey(_._1)
+    Drain.toMemory(events.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+      .toDF(), "append", queryName)
   }
 
   /** One micro-batch of as-of enrichment (q67's merge form over micro-µs
@@ -875,21 +780,15 @@ object EventStreams {
   def asofEnrichStream(spark: SparkSession, landingDir: String,
                        ordersPath: String, outPath: String,
                        checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val eventSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("ts_us", LongType),
       StructField("event_id", LongType)))
-    val q = spark.readStream.schema(eventSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val sp = batch.sparkSession
-        graft.operators.DedupAppend.append(sp,
-          asofEnrich(batch.toDF(), sp.read.parquet(ordersPath)),
-          outPath, keys = Seq("event_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+    Drain.batches(spark.readStream.schema(eventSchema).json(landingDir),
+      checkpointDir) { (batch, _) =>
+      val sp = batch.sparkSession
+      graft.operators.DedupAppend.append(sp,
+        asofEnrich(batch, sp.read.parquet(ordersPath)),
+        outPath, keys = Seq("event_id"), tieBreak = Nil)
+    }
   }
 }

@@ -8,11 +8,4 @@ object Fs {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
     f.delete(): Unit
   }
-
-  /** Recursive-delete on JVM exit — for trees that must live the JVM's
-    * lifetime (session-shared caches), where a finally block is the wrong
-    * scope and java.io.File.deleteOnExit can't remove non-empty dirs.
-    * One hook per call site key: callers gate through a mint-once cache. */
-  def deleteOnExit(f: java.io.File): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(f)))
 }

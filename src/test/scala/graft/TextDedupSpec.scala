@@ -210,6 +210,19 @@ class TextDedupSpec extends AnyFunSuite {
     assert(got == Set((0L, 1L, 1.0)))
   }
 
+  test("a null text has no identity: mask and setid forms agree and never pair it") {
+    import spark.implicits._
+    val edge = Seq[(Long, String)]((1L, null), (2L, ""), (3L, ""), (4L, "a b"))
+      .toDF("doc_id", "text")
+    def canon(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val masked = canon(TextDedup.minhashNearDups(edge, 0.9).collect())
+    val unbounded = canon(TextDedup.minhashNearDupsUnbounded(edge, 0.9).collect())
+    assert(unbounded == masked)
+    assert(masked == Set((2L, 3L, 1.0)))
+    assert(!unbounded.exists(p => p._1 == 1L || p._2 == 1L))
+  }
+
   test("adversarial hot band buckets: mass collisions of distinct-but-similar sets stay bounded") {
     import spark.implicits._
     // 500 distinct 33-token sets sharing a 30-token core: a band whose 8

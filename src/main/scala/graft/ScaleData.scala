@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench tooling: derive a `factor`×-scaled corpus from a driver-generated
@@ -34,15 +34,8 @@ object ScaleData {
     val factor = factorS.toInt
     val wanted: String => Boolean =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     def copies(df: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until factor).map(i => f(df, i)).reduce(_ unionByName _)

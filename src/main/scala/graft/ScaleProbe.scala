@@ -23,15 +23,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir, kS) = args
     val k = kS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     val e = Tables.t(spark, dir, "embeddings")
     def dropCheckpoints(): Unit =

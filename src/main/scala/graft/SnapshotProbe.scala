@@ -25,15 +25,7 @@ import graft.operators.SnapshotStore.RangeHint
 object SnapshotProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     val docs = Tables.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))

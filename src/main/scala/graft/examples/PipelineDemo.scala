@@ -2,8 +2,6 @@ package graft.examples
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ingest.Donki
 import graft.operators.DedupAppend
 import graft.queries.Parity
@@ -18,14 +16,7 @@ import graft.streaming.EventStreams
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
 
     // 1. ingest: live fetch (here: a fetch that fails → static fallback),
     //    project, idempotent append, query — the whole reference DAG.

@@ -69,21 +69,17 @@ case class ChecksumAgg(child: Expression) extends DeclarativeAggregate {
 }
 
 object ChecksumAgg {
-  /** Imperative fallback registration (the CosineUnits contract). */
   /** Imperative registration (the GraftExtensions builder is the
     * config-time path). Arity-checked exactly like the extension builder:
     * `exprs(0)` alone would silently IGNORE extra arguments — a caller's
     * `checksum_agg(a, b)` would checksum only `a` and report success —
     * and the two registration paths must raise the same analysis error
     * (FunctionEdgeSpec pins this; the suites share one session, so
-    * whichever path registered last must behave identically). */
+    * whichever path registered first must behave identically). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "checksum_agg",
-      exprs => {
-        if (exprs.length != 1) throw FunctionArity
-          .wrongNumArgs("checksum_agg", expected = 1, actual = exprs.length)
-        ChecksumAgg(exprs(0)).toAggregateExpression()
-      },
-      "built-in")
+    FunctionArity.registerOnce(spark, "checksum_agg") { exprs =>
+      if (exprs.length != 1) throw FunctionArity
+        .wrongNumArgs("checksum_agg", expected = 1, actual = exprs.length)
+      ChecksumAgg(exprs(0)).toAggregateExpression()
+    }
 }

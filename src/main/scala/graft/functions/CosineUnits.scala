@@ -94,19 +94,31 @@ case class CosineUnits(left: Expression, right: Expression)
 object CosineUnits {
   /** Idempotently register `cosine_units` for SQL/expr use in a session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_units", exprs => {
-        if (exprs.length != 2) throw FunctionArity.wrongNumArgs(
-          "cosine_units", expected = 2, actual = exprs.length)
-        CosineUnits(exprs(0), exprs(1))
-      }, "built-in")
+    FunctionArity.registerOnce(spark, "cosine_units") { exprs =>
+      if (exprs.length != 2) throw FunctionArity.wrongNumArgs(
+        "cosine_units", expected = 2, actual = exprs.length)
+      CosineUnits(exprs(0), exprs(1))
+    }
 }
 
 /** Shared wrong-arity analysis error for every function registration
   * path (imperative AND [[graft.GraftExtensions]] builders) — indexing
   * `exprs(1)` on a short list or a bare `require` would surface as a raw
-  * runtime exception instead of the analyzer's own message. */
+  * runtime exception instead of the analyzer's own message — and the
+  * imperative path's check-before-register. */
 private[graft] object FunctionArity {
+  /** Register `name` unless the session already has it (from
+    * [[graft.GraftExtensions]] or an earlier call): re-registering would
+    * only swap in an identical builder and log a "replaced a previously
+    * registered function" warning. */
+  def registerOnce(spark: SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
+
   def wrongNumArgs(name: String, expected: Int, actual: Int)
       : org.apache.spark.sql.AnalysisException =
     new org.apache.spark.sql.AnalysisException(

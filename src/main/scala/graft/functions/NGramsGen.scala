@@ -113,10 +113,9 @@ object NGramsGen {
     * contract): library operators that use `ngrams_gen` from SQL call
     * this first so they work in any session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams_gen", exprs => {
-        if (exprs.length != 2) throw FunctionArity.wrongNumArgs(
-          "ngrams_gen", expected = 2, actual = exprs.length)
-        NGramsGen(exprs(0), exprs(1))
-      }, "built-in")
+    FunctionArity.registerOnce(spark, "ngrams_gen") { exprs =>
+      if (exprs.length != 2) throw FunctionArity.wrongNumArgs(
+        "ngrams_gen", expected = 2, actual = exprs.length)
+      NGramsGen(exprs(0), exprs(1))
+    }
 }

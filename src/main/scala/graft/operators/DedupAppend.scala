@@ -60,7 +60,10 @@ object DedupAppend {
       if (!exists(spark, path)) inBatch
       else {
         val existingKeys = spark.read.parquet(path).select(keys.map(col): _*)
+        // a using-join puts the keys first: keep the batch's column order,
+        // or the table's files disagree on it
         inBatch.join(existingKeys, keys, "left_anti")
+          .select(inBatch.columns.toSeq.map(col): _*)
       }
     val writer = fresh.write.mode("append")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)

@@ -28,9 +28,19 @@ import org.apache.spark.sql.types._
   *     This is the property the directory-swap operators could not give
   *     (their readers race the rename window); here old versions stay
   *     readable until vacuum ages them out (time travel).
-  *   - WRITERS serialize on the table [[Lease]]; the commit marker
-  *     additionally refuses a lost-update at the commit point itself, so
-  *     even a lease-bypassing writer cannot silently clobber a version.
+  *   - ONE COMMIT PATH ([[commit]]): every writer takes the table
+  *     [[Lease]], resolves the table [[Head]] from ONE listing of
+  *     `_snapshots/` (versions, checkpoints, schema, stats columns and the
+  *     folds it needs, each read at most once), checks a txn replay, runs
+  *     its own body against that head, drops an empty batch's attempt
+  *     dirs as a true no-op, and commits through [[commitDelta]], whose
+  *     checkpoint roll is decided from the same head. A commutative
+  *     commit that loses its slot rebases on a fresh head. Maintenance
+  *     ops (stage/publish/abandon, schema evolution, checkpoint, vacuum)
+  *     share the lease-and-head half ([[leased]]). The marker refuses a
+  *     lost update at the commit point itself with LIVE file-system
+  *     checks, so even a lease-bypassing writer cannot silently clobber
+  *     a version.
   *
   * Row-level operations are COPY-ON-WRITE at file granularity: delete and
   * update rewrite only the files that contain matching rows and carry
@@ -130,19 +140,6 @@ object SnapshotStore {
   private val FormatVersion = 2
 
   private def snapDir(root: Path) = new Path(root, "_snapshots")
-  private def formatPath(root: Path) = new Path(snapDir(root), "format")
-
-  private def requireFormat(fs: FileSystem, root: Path): Unit = {
-    val p = formatPath(root)
-    if (!fs.exists(p)) throw new java.io.IOException(
-      s"snapshot table at $root has no _snapshots/format marker — a " +
-        "pre-delta-manifest legacy layout (or foreign directory); refusing " +
-        "to read it as an empty table. Re-create the table with this version.")
-    val v = readSmall(fs, p).trim.toIntOption.getOrElse(Int.MaxValue)
-    if (v > FormatVersion) throw new java.io.IOException(
-      s"snapshot table at $root is format $v; this reader supports <= " +
-        s"$FormatVersion — upgrade the reader, not the table")
-  }
   private def manifestDir(root: Path, v: Long) = new Path(snapDir(root), s"v$v")
   private def markerPath(root: Path, v: Long) = new Path(snapDir(root), s"commit-$v")
   private def ckptDir(root: Path, v: Long) = new Path(snapDir(root), s"ckpt-$v")
@@ -170,56 +167,123 @@ object SnapshotStore {
     finally out.close()
   }
 
+  // ---- the table head (one listing per operation) --------------------------
+
+  /** THE HEAD: one operation's view of the table, parsed from ONE listing
+    * of `_snapshots/`. Every operation resolves it once (a writer once per
+    * commit attempt — a rebase resolves a fresh one) and answers from it:
+    *   - committed versions (existence of the commit marker IS the commit
+    *     — a manifest dir without its marker is a crashed committer's
+    *     garbage or a write-audit-publish staging, invisible here),
+    *     checkpoint versions, `v<N>` segment dirs and schema files;
+    *   - the `format` check, the table schema (the HIGHEST-numbered schema
+    *     file: `schema` = the creation schema, `schema-<k>` = the k-th
+    *     evolution, each a fail-if-exists file, so a crash mid-evolution
+    *     leaves the previous schema authoritative) and the stats columns,
+    *     each read at most once;
+    *   - each version's fold, computed at most once.
+    * The head never answers whether a version slot is FREE: the commit
+    * point's exists/rename/create-no-overwrite checks stay live
+    * ([[commitDelta]]), so a head that went stale under a lease-bypassing
+    * writer loses cleanly there. */
+  private final class Head(val path: String, val root: Path, val fs: FileSystem) {
+    val names: Seq[String] =
+      try fs.listStatus(snapDir(root)).iterator.map(_.getPath.getName).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    private def numbered(prefix: String): Seq[Long] =
+      names.filter(_.startsWith(prefix))
+        .flatMap(_.stripPrefix(prefix).toLongOption).sorted
+    val versions: Seq[Long] = numbered("commit-")
+    val ckpts: Seq[Long] = numbered("ckpt-")
+    val segments: Set[Long] = numbered("v").toSet
+    private val committed = versions.toSet
+    def isCommitted(v: Long): Boolean = committed.contains(v)
+
+    def cur: Long = {
+      require(versions.nonEmpty, s"no committed snapshot at $path")
+      versions.last
+    }
+    /** The version slot the next commit against this head takes. */
+    def next: Long = versions.lastOption.getOrElse(0L) + 1
+
+    val schemaFiles: Seq[(Int, String)] = names.flatMap {
+      case "schema" => Some(0 -> "schema")
+      case n if n.startsWith("schema-") =>
+        n.stripPrefix("schema-").toIntOption.map(_ -> n)
+      case _ => None
+    }.sortBy(_._1)
+    lazy val schema: StructType = {
+      if (schemaFiles.isEmpty)
+        throw new java.io.FileNotFoundException(s"no snapshot table schema at $path")
+      StructType.fromDDL(readSmall(fs, new Path(snapDir(root), schemaFiles.last._2)))
+    }
+    lazy val statsCols: Seq[String] =
+      if (!names.contains("statscols")) Nil
+      else readSmall(fs, new Path(snapDir(root), "statscols"))
+        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+
+    private lazy val formatChecked: Unit = {
+      if (!names.contains("format")) throw new java.io.IOException(
+        s"snapshot table at $root has no _snapshots/format marker — a " +
+          "pre-delta-manifest legacy layout (or foreign directory); refusing " +
+          "to read it as an empty table. Re-create the table with this version.")
+      val v = readSmall(fs, new Path(snapDir(root), "format")).trim.toIntOption
+        .getOrElse(Int.MaxValue)
+      if (v > FormatVersion) throw new java.io.IOException(
+        s"snapshot table at $root is format $v; this reader supports <= " +
+          s"$FormatVersion — upgrade the reader, not the table")
+    }
+
+    /** The segments whose fold is version `v`'s live set: the newest
+      * checkpoint at or below `v` (if any) plus every delta after it. */
+    def segmentDirs(v: Long): Seq[Path] = {
+      formatChecked // every fold resolves through here
+      val c = ckpts.filter(_ <= v).lastOption.getOrElse(0L)
+      (if (c > 0) Seq(ckptDir(root, c)) else Nil) ++ ((c + 1) to v).map(manifestDir(root, _))
+    }
+
+    private val folds = scala.collection.mutable.Map.empty[Long, Seq[ManifestRow]]
+    /** The fold of a committed version (refuses an uncommitted one). */
+    def fold(v: Long): Seq[ManifestRow] = folds.getOrElseUpdate(v, {
+      require(isCommitted(v), s"version $v not committed at $path")
+      foldRows(segmentDirs(v).flatMap(readSegment(this, _)))
+    })
+    /** (data entries, tombstone entries) of version `v`. */
+    def live(v: Long): (Seq[FileEntry], Seq[FileEntry]) = split(fold(v))
+    /** The newest batch id lineage `txnId` committed, as of the head. */
+    def txnMark(txnId: String): Option[Long] =
+      if (versions.isEmpty) None
+      else fold(cur).filter(r => r.action == "txn" && r.kind == s"txn:$txnId")
+        .map(_.rows).maxOption
+  }
+
+  private def headOf(spark: SparkSession, path: String): Head = {
+    val root = new Path(path)
+    new Head(path, root, fsOf(spark, root))
+  }
+
   // ---- version resolution (reader side, lock-free) ------------------------
 
-  /** Committed versions, ascending (existence of the commit marker IS the
-    * commit — a manifest dir without its marker is a crashed committer's
-    * garbage and invisible here). */
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val sd = snapDir(root)
-    if (!fs.exists(sd)) return Nil
-    fs.listStatus(sd).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("commit-"))
-      .map(_.stripPrefix("commit-").toLong).toSeq.sorted
-  }
+  /** Committed versions, ascending. */
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    headOf(spark, path).versions
 
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed snapshot at $path")
-    vs.last
-  }
-
-  private def ckptVersions(fs: FileSystem, root: Path): Seq[Long] = {
-    val sd = snapDir(root)
-    if (!fs.exists(sd)) Nil
-    else fs.listStatus(sd).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("ckpt-"))
-      .flatMap(_.stripPrefix("ckpt-").toLongOption).toSeq.sorted
-  }
+  def currentVersion(spark: SparkSession, path: String): Long =
+    headOf(spark, path).cur
 
   /** Parsed key=value fields of version `v`'s commit marker body. */
-  private def markerFields(fs: FileSystem, root: Path, v: Long): Map[String, String] =
-    readSmall(fs, markerPath(root, v)).split("\\s+").iterator
+  private def markerFields(h: Head, v: Long): Map[String, String] =
+    readSmall(h.fs, markerPath(h.root, v)).split("\\s+").iterator
       .flatMap(t => t.split("=", 2) match {
         case Array(k, value) => Some(k -> value); case _ => None
       }).toMap
 
-  /** The segments whose fold is version `v`'s live set: the newest
-    * checkpoint at or below `v` (if any) plus every delta after it. */
-  private def segmentDirs(fs: FileSystem, root: Path, v: Long): Seq[Path] = {
-    requireFormat(fs, root) // every fold resolves through here
-    val c = ckptVersions(fs, root).filter(_ <= v).lastOption.getOrElse(0L)
-    (if (c > 0) Seq(ckptDir(root, c)) else Nil) ++ ((c + 1) to v).map(manifestDir(root, _))
-  }
-
   /** One segment's rows; a missing segment refuses as a corrupt table. */
-  private def readSegment(fs: FileSystem, root: Path, dir: Path): Seq[ManifestRow] =
-    try ManifestCodec.read(fs, dir)
+  private def readSegment(h: Head, dir: Path): Seq[ManifestRow] =
+    try ManifestCodec.read(h.fs, dir)
     catch { case _: java.io.FileNotFoundException =>
       throw new IllegalArgumentException(
-        s"requirement failed: manifest segment missing at $root: ${dir.getName} — " +
+        s"requirement failed: manifest segment missing at ${h.root}: ${dir.getName} — " +
           "corrupt table (a delta was deleted without a covering checkpoint)")
     }
 
@@ -228,25 +292,14 @@ object SnapshotStore {
     * checkpoint of the fold carries ONE txn row per lineage, not one per
     * batch). Driver memory: the rows read, i.e. the checkpoint's rows plus
     * the deltas after it — at most [[CheckpointEvery]] of them while the
-    * automatic roll keeps up; the same list [[liveSplit]] collects. */
+    * automatic roll keeps up. Folding a fold with later rows equals
+    * folding all of their segments, so a commit's checkpoint roll folds
+    * its head's fold with its own delta instead of re-reading segments. */
   private def foldRows(rows: Seq[ManifestRow]): Seq[ManifestRow] = {
     val removed = rows.iterator.filter(_.action == "remove").map(_.path).toSet
     val latestTxn = rows.filter(_.action == "txn").groupBy(_.kind).values
       .map(_.maxBy(_.rows)).toSeq.sortBy(_.kind)
     rows.filter(r => r.action == "add" && !removed.contains(r.path)) ++ latestTxn
-  }
-
-  /** Version `v`'s fold, read from its segments by [[ManifestCodec]]. */
-  private def foldAt(fs: FileSystem, root: Path, v: Long): Seq[ManifestRow] =
-    foldRows(segmentDirs(fs, root, v).flatMap(readSegment(fs, root, _)))
-
-  /** The fold of a committed version (refuses an uncommitted one). */
-  private def committedFold(spark: SparkSession, path: String,
-                            v: Long): Seq[ManifestRow] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    require(fs.exists(markerPath(root, v)), s"version $v not committed at $path")
-    foldAt(fs, root, v)
   }
 
   private def fileEntries(rows: Seq[ManifestRow], kind: String): Seq[FileEntry] =
@@ -257,64 +310,34 @@ object SnapshotStore {
   private def split(rows: Seq[ManifestRow]): (Seq[FileEntry], Seq[FileEntry]) =
     (fileEntries(rows, "data"), fileEntries(rows, "tombstone"))
 
-  /** The newest batch id lineage `txnId` committed, within a fold. */
-  private def txnMark(rows: Seq[ManifestRow], txnId: String): Option[Long] =
-    rows.filter(r => r.action == "txn" && r.kind == s"txn:$txnId")
-      .map(_.rows).maxOption
-
   /** The newest batch id writer lineage `txnId` has committed to this
     * table, read from the manifest fold (the txn rows commit ATOMICALLY
     * with their batch's files — see [[txnRow]]). None = no batch yet. */
-  def lastTxn(spark: SparkSession, path: String, txnId: String): Option[Long] = {
-    val vs = versions(spark, path)
-    if (vs.isEmpty) None
-    else txnMark(committedFold(spark, path, vs.last), txnId)
-  }
+  def lastTxn(spark: SparkSession, path: String, txnId: String): Option[Long] =
+    headOf(spark, path).txnMark(txnId)
 
   /** The manifest of version `v`: DATA file list with stats,
     * root-relative, folded on the driver (bounded by the version's live
     * file count plus the deltas since its checkpoint). */
   def entries(spark: SparkSession, path: String, v: Long): Seq[FileEntry] =
-    fileEntries(committedFold(spark, path, v), "data")
+    headOf(spark, path).live(v)._1
 
   /** Live row-tombstone files of version `v` (merge-on-read deletes). */
   def tombstoneEntries(spark: SparkSession, path: String,
                        v: Long): Seq[FileEntry] =
-    fileEntries(committedFold(spark, path, v), "tombstone")
+    headOf(spark, path).live(v)._2
 
-  /** ONE fold, split (data entries, tombstone entries) — the write paths
-    * and the read planners use this so an op folds each version once. */
+  /** ONE fold, split (data entries, tombstone entries) — for the read
+    * planners outside this object. */
   private[graft] def liveSplit(spark: SparkSession, path: String,
                                v: Long): (Seq[FileEntry], Seq[FileEntry]) =
-    split(committedFold(spark, path, v))
-
-  /** The table schema is the HIGHEST-numbered schema file (`schema` = the
-    * creation schema, `schema-<k>` = the k-th evolution). Each evolution
-    * is a new fail-if-exists file — never an overwrite of the previous
-    * one — so a crash mid-evolution leaves the old schema intact and the
-    * history readable. */
-  private def schemaFiles(fs: FileSystem, root: Path): Seq[(Int, Path)] = {
-    val sd = snapDir(root)
-    fs.listStatus(sd).iterator.map(_.getPath).flatMap { p =>
-      p.getName match {
-        case "schema" => Some(0 -> p)
-        case n if n.startsWith("schema-") =>
-          n.stripPrefix("schema-").toIntOption.map(_ -> p)
-        case _ => None
-      }
-    }.toSeq.sortBy(_._1)
-  }
-
-  private def tableSchema(fs: FileSystem, root: Path): StructType =
-    StructType.fromDDL(readSmall(fs, schemaFiles(fs, root).last._2))
+    headOf(spark, path).live(v)
 
   /** The table's current schema (latest evolution) — the read surface the
     * format provider ([[graft.sources.v2.SnapshotSource]]) resolves
     * against. */
-  def schemaOf(spark: SparkSession, path: String): StructType = {
-    val root = new Path(path)
-    tableSchema(fsOf(spark, root), root)
-  }
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    headOf(spark, path).schema
 
   /** Schema evolution: ADD COLUMN, zero-rewrite. No data file is touched
     * — files written before the evolution simply lack the column, and
@@ -327,38 +350,25 @@ object SnapshotStore {
     * previous schema authoritative. At 100 TB this is the point: adding
     * a column costs one small file, not a table rewrite. */
   def evolveAddColumn(spark: SparkSession, path: String,
-                      colName: String, ddlType: String): Unit = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot schema evolution") {
-      val cur = tableSchema(fs, root)
-      require(!cur.fieldNames.contains(colName),
+                      colName: String, ddlType: String): Unit =
+    leased(spark, path, "snapshot schema evolution") { h =>
+      require(!h.schema.fieldNames.contains(colName),
         s"column $colName already exists in table at $path")
-      val next = StructType(cur.fields :+
+      val next = StructType(h.schema.fields :+
         StructField(colName, org.apache.spark.sql.catalyst.parser.CatalystSqlParser
           .parseDataType(ddlType), nullable = true))
-      val k = schemaFiles(fs, root).last._1 + 1
-      val out = fs.create(new Path(snapDir(root), s"schema-$k"), false)
-      try out.write(next.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeSmall(h.fs, new Path(snapDir(h.root), s"schema-${h.schemaFiles.last._1 + 1}"),
+        next.toDDL, overwrite = false)
     }
-  }
-
-  private def statsCols(fs: FileSystem, root: Path): Seq[String] = {
-    val p = new Path(snapDir(root), "statscols")
-    if (!fs.exists(p)) Nil
-    else readSmall(fs, p).split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
 
   /** Table history (DESCRIBE HISTORY): one row per committed version with
     * the operation recorded in its commit marker and its parent version —
     * the audit trail of the maintenance lifecycle, read lock-free from the
     * markers alone (manifest-sized driver work, no data I/O). */
   def history(spark: SparkSession, path: String): DataFrame = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val rows = versions(spark, path).map { v =>
-      val fields = markerFields(fs, root, v)
+    val h = headOf(spark, path)
+    val rows = h.versions.map { v =>
+      val fields = markerFields(h, v)
       (v, fields.getOrElse("op", "unknown"),
         fields.get("parent").flatMap(_.toLongOption).getOrElse(v - 1))
     }
@@ -372,12 +382,10 @@ object SnapshotStore {
     * I/O. Refuses if every committed version is later than `tsMillis`. */
   def versionAsOfTimestamp(spark: SparkSession, path: String,
                            tsMillis: Long): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed snapshot at $path")
-    val at = vs.filter { v =>
-      markerFields(fs, root, v).get("ts").flatMap(_.toLongOption)
+    val h = headOf(spark, path)
+    require(h.versions.nonEmpty, s"no committed snapshot at $path")
+    val at = h.versions.filter { v =>
+      markerFields(h, v).get("ts").flatMap(_.toLongOption)
         .forall(_ <= tsMillis) // a marker without ts (pre-upgrade) matches
     }
     require(at.nonEmpty,
@@ -392,19 +400,21 @@ object SnapshotStore {
     * stay on the plain scan fast path, targeted files anti-join their
     * rows against the tombstones. */
   def readVersion(spark: SparkSession, path: String, v: Long): DataFrame = {
-    val root = new Path(path)
-    readFold(spark, root, fsOf(spark, root), committedFold(spark, path, v))
+    val h = headOf(spark, path)
+    readFold(spark, h, h.fold(v))
   }
 
   /** Read a fold's live rows (tombstones resolved). */
-  private def readFold(spark: SparkSession, root: Path, fs: FileSystem,
+  private def readFold(spark: SparkSession, h: Head,
                        rows: Seq[ManifestRow]): DataFrame = {
     val (es, tombs) = split(rows)
-    readFilesResolved(spark, root, fs, es, tombs, tableSchema(fs, root))
+    readFilesResolved(spark, h, es, tombs)
   }
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    readVersion(spark, path, currentVersion(spark, path))
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val h = headOf(spark, path)
+    readFold(spark, h, h.fold(h.cur))
+  }
 
   /** The PLANNER-INTEGRATED read: a DataFrame whose scan resolves its
     * files through [[graft.plans.SnapshotFileIndex]], so any plain
@@ -414,21 +424,18 @@ object SnapshotStore {
     * This is the read a query layer should hand out by default; [[read]]
     * remains the dependency-light explicit-file-list form. */
   def readRelation(spark: SparkSession, path: String): DataFrame = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val v = currentVersion(spark, path)
-    // one fold for tombstone check + file list
-    val (es, tombs) = liveSplit(spark, path, v)
+    val h = headOf(spark, path)
+    val v = h.cur
+    val (es, tombs) = h.live(v)
     require(tombs.isEmpty,
       s"readRelation: version $v at $path carries ${tombs.size} live row-" +
         "tombstone file(s) (merge-on-read deletes) which a pure file scan " +
         "cannot apply — read via SnapshotStore.read, or compact the table")
-    val idx = new graft.plans.SnapshotFileIndex(
-      fs.makeQualified(root), es, tableSchema(fs, root))
+    val idx = new graft.plans.SnapshotFileIndex(h.fs.makeQualified(h.root), es, h.schema)
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       location = idx,
       partitionSchema = StructType(Nil),
-      dataSchema = tableSchema(fs, root),
+      dataSchema = h.schema,
       bucketSpec = None,
       fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
       options = Map.empty)(
@@ -480,14 +487,8 @@ object SnapshotStore {
   /** Read just `es`'s files of the current table (the scan half of a
     * zone-map-pruned range query; callers re-apply the exact predicate). */
   def readFiles(spark: SparkSession, path: String,
-                es: Seq[FileEntry]): DataFrame = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    if (es.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tableSchema(fs, root))
-    else spark.read.schema(tableSchema(fs, root))
-      .parquet(es.map(e => new Path(root, e.path).toString): _*)
-  }
+                es: Seq[FileEntry]): DataFrame =
+    readFilesResolved(spark, headOf(spark, path), es, Nil)
 
   // ---- merge-on-read row tombstones -----------------------------------------
 
@@ -511,13 +512,17 @@ object SnapshotStore {
   /** `df`'s rows plus a root-relative source-file column, computed
     * DISTRIBUTEDLY from the scan's `_metadata.file_path` via
     * [[relPathExpr]] (same spelling as the driver-side [[relOf]]). */
-  private def withRelFile(root: Path, fs: FileSystem, df: DataFrame): DataFrame = {
-    val rootPath = fs.makeQualified(root).toUri.getPath
+  private def withRelFile(h: Head, df: DataFrame): DataFrame = {
+    val rootPath = h.fs.makeQualified(h.root).toUri.getPath
     df.withColumn(TombFileCol, relPathExpr(col("_metadata.file_path"), rootPath))
   }
 
   private def tombSchema(schema: StructType): StructType =
     StructType(StructField(TombFileCol, StringType, nullable = true) +: schema.fields)
+
+  private def parquetAt(spark: SparkSession, h: Head, schema: StructType,
+                        es: Seq[FileEntry]): DataFrame =
+    spark.read.schema(schema).parquet(es.map(e => new Path(h.root, e.path).toString): _*)
 
   /** Every LIVE row of `es` with its source file: the raw scan anti-joined
     * (null-safe, full row + source file) against the tombstone rows. The
@@ -525,17 +530,15 @@ object SnapshotStore {
     * its row IN ITS FILE (exactly the pred-delete multiset semantics,
     * since all copies match the pred equally), while an identical row
     * appended later lives in a NEW file and is untouched. */
-  private def resolvedWithFile(spark: SparkSession, root: Path, fs: FileSystem,
-                               es: Seq[FileEntry], tombs: Seq[FileEntry],
-                               schema: StructType): DataFrame = {
-    val base = withRelFile(root, fs, spark.read.schema(schema)
-      .parquet(es.map(e => new Path(root, e.path).toString): _*))
+  private def resolvedWithFile(spark: SparkSession, h: Head,
+                               es: Seq[FileEntry], tombs: Seq[FileEntry]): DataFrame = {
+    val schema = h.schema
+    val base = withRelFile(h, parquetAt(spark, h, schema, es))
     if (tombs.isEmpty) base
     else {
       val cols = schema.fieldNames.toSeq
       val l = base.alias("l")
-      val r = spark.read.schema(tombSchema(schema))
-        .parquet(tombs.map(t => new Path(root, t.path).toString): _*).alias("r")
+      val r = parquetAt(spark, h, tombSchema(schema), tombs).alias("r")
       val cond = (col(s"l.$TombFileCol") <=> col(s"r.$TombFileCol")) &&
         cols.map(c => col(s"l.$c") <=> col(s"r.$c")).reduce(_ && _)
       l.join(r, cond, "left_anti")
@@ -547,16 +550,13 @@ object SnapshotStore {
     * targets read on the plain scan fast path (zero overhead — the
     * common case); only targeted files pay the row-level anti-join. With
     * no tombstones this IS [[readFiles]]. */
-  private def readFilesResolved(spark: SparkSession, root: Path, fs: FileSystem,
-                                es: Seq[FileEntry], tombs: Seq[FileEntry],
-                                schema: StructType): DataFrame = {
+  private def readFilesResolved(spark: SparkSession, h: Head,
+                                es: Seq[FileEntry], tombs: Seq[FileEntry]): DataFrame = {
+    val schema = h.schema
     if (es.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    if (tombs.isEmpty)
-      return spark.read.schema(schema)
-        .parquet(es.map(e => new Path(root, e.path).toString): _*)
-    val tombDf = spark.read.schema(tombSchema(schema))
-      .parquet(tombs.map(t => new Path(root, t.path).toString): _*)
+    if (tombs.isEmpty) return parquetAt(spark, h, schema, es)
+    val tombDf = parquetAt(spark, h, tombSchema(schema), tombs)
     // files ever targeted: bounded by past MoR deletes' touch sets —
     // metadata-sized, the final prune of this read's planning
     val targeted = tombDf.select(col(TombFileCol)).distinct()
@@ -565,13 +565,16 @@ object SnapshotStore {
     val cleanDf =
       if (clean.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(schema)
-        .parquet(clean.map(e => new Path(root, e.path).toString): _*)
+      else parquetAt(spark, h, schema, clean)
     if (dirty.isEmpty) cleanDf
     else cleanDf.unionByName(
-      resolvedWithFile(spark, root, fs, dirty, tombs, schema)
+      resolvedWithFile(spark, h, dirty, tombs)
         .select(schema.fieldNames.toSeq.map(col): _*))
   }
+
+  /** The files a [[RangeHint]] leaves as candidates (all without one). */
+  private def hinted(es: Seq[FileEntry], hint: Option[RangeHint]): Seq[FileEntry] =
+    hint.fold(es)(r => pruned(es, r.col, r.lo, r.hi))
 
   /** MERGE-ON-READ DELETE: write the matched rows as ONE tombstone file
     * (each row tagged with its source data file) and commit a delta that
@@ -587,32 +590,19 @@ object SnapshotStore {
     * this path writes one small file. Matched rows are resolved against
     * existing tombstones first, so re-deleting is a true no-op. */
   def deleteWhereMoR(spark: SparkSession, path: String, pred: Column,
-                     hint: Option[RangeHint] = None): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot mor delete") {
-      val cur = currentVersion(spark, path)
-      val (es, tombs) = liveSplit(spark, path, cur)
-      val schema = tableSchema(fs, root)
-      val candidates = hint match {
-        case Some(h) => pruned(es, h.col, h.lo, h.hi)
-        case None => es
-      }
-      if (candidates.isEmpty) cur
+                     hint: Option[RangeHint] = None): Long =
+    commit(spark, path, "snapshot mor delete") { h =>
+      val (es, tombs) = h.live(h.cur)
+      val candidates = hinted(es, hint)
+      if (candidates.isEmpty) NoOp
       else {
-        val matched = resolvedWithFile(spark, root, fs, candidates, tombs, schema)
+        val matched = resolvedWithFile(spark, h, candidates, tombs)
           .filter(pred <=> lit(true))
-          .select(col(TombFileCol) +: schema.fieldNames.toSeq.map(col): _*)
-        val v = cur + 1
-        val (dir, tombEs) = writeData(spark, root, fs, v, matched, Nil)
-        if (tombEs.isEmpty) { // nothing matched: a true no-op
-          fs.delete(dir, true)
-          cur
-        } else commitDelta(root, fs, v,
-          tombEs.map(addRow(_, kind = "tombstone")), Nil, "delete_mor")
+          .select(col(TombFileCol) +: h.schema.fieldNames.toSeq.map(col): _*)
+        val (dir, tombEs) = writeData(spark, h, matched, Nil)
+        Delta("delete_mor", tombEs.map(addRow(_, kind = "tombstone")), dirs = Seq(dir))
       }
     }
-  }
 
   /** MERGE-ON-READ UPDATE: the matched rows' OLD images commit as ONE
     * tombstone file (each tagged with its source data file — exactly the
@@ -628,24 +618,18 @@ object SnapshotStore {
     * invariant by construction (every tombstoned row re-lands updated). */
   def updateWhereMoR(spark: SparkSession, path: String, pred: Column,
                      set: Map[String, Column],
-                     hint: Option[RangeHint] = None): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot mor update") {
-      val cur = currentVersion(spark, path)
-      val schema = tableSchema(fs, root)
+                     hint: Option[RangeHint] = None): Long =
+    commit(spark, path, "snapshot mor update") { h =>
+      val schema = h.schema
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"update of unknown column $c"))
-      val (es, tombs) = liveSplit(spark, path, cur)
-      val candidates = hint match {
-        case Some(h) => pruned(es, h.col, h.lo, h.hi)
-        case None => es
-      }
-      if (candidates.isEmpty) cur
+      val (es, tombs) = h.live(h.cur)
+      val candidates = hinted(es, hint)
+      if (candidates.isEmpty) NoOp
       else {
         // resolved against EXISTING tombstones: already-dead rows are
         // neither re-tombstoned nor resurrected as updated copies
-        val matched = resolvedWithFile(spark, root, fs, candidates, tombs, schema)
+        val matched = resolvedWithFile(spark, h, candidates, tombs)
           .filter(pred <=> lit(true))
           .localCheckpoint(true) // read twice: old images + new images
         val oldImages = matched
@@ -656,20 +640,13 @@ object SnapshotStore {
             case None => col(c)
           }
         }: _*)
-        val v = cur + 1
-        val (tombDir, tombEs) = writeData(spark, root, fs, v, oldImages, Nil)
-        if (tombEs.isEmpty) { // nothing matched: a true no-op
-          fs.delete(tombDir, true)
-          cur
-        } else {
-          val (_, newEs) = writeData(spark, root, fs, v, newImages, statsCols(fs, root))
-          commitDelta(root, fs, v,
-            tombEs.map(addRow(_, kind = "tombstone")) ++ newEs.map(addRow(_)),
-            Nil, "update_mor")
-        }
+        val (tombDir, tombEs) = writeData(spark, h, oldImages, Nil)
+        // nothing matched: no new images are written either
+        if (tombEs.isEmpty) Delta("update_mor", Nil, dirs = Seq(tombDir))
+        else Delta("update_mor", tombEs.map(addRow(_, kind = "tombstone")) ++
+          writeData(spark, h, newImages, h.statsCols)._2.map(addRow(_)))
       }
     }
-  }
 
   /** MERGE-ON-READ MERGE (upsert): the matched keys' current rows commit
     * as ONE tombstone file and the whole batch (updates + inserts) as
@@ -685,41 +662,29 @@ object SnapshotStore {
                keys: Seq[String], tieBreak: Seq[String],
                hint: Option[RangeHint] = None,
                owner: Option[String] = None,
-               verifyHint: Boolean = false): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot mor merge", owner) {
-      val cur = currentVersion(spark, path)
-      val schema = tableSchema(fs, root)
+               verifyHint: Boolean = false): Long =
+    commit(spark, path, "snapshot mor merge", owner) { h =>
+      val schema = h.schema
       requireSchemaMatch(batch, schema, "merge", path)
-      val (es, tombs) = liveSplit(spark, path, cur)
+      val (es, tombs) = h.live(h.cur)
       val one = DedupAppend.survivors(
         batch.select(schema.fieldNames.toSeq.map(col): _*), keys, tieBreak)
         .localCheckpoint(true) // read 2-3×: matched probe, data write, hint audit
-      val candidates = hint match {
-        case Some(h) => pruned(es, h.col, h.lo, h.hi)
-        case None => es
-      }
+      val candidates = hinted(es, hint)
       if (verifyHint && hint.nonEmpty)
-        auditHint(spark, root, fs, path, es, candidates, one, keys, hint.get)
+        auditHint(spark, h, es, candidates, one, keys, hint.get)
       val matchedOld =
         if (candidates.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tombSchema(schema))
-        else resolvedWithFile(spark, root, fs, candidates, tombs, schema)
+        else resolvedWithFile(spark, h, candidates, tombs)
           .join(one.select(keys.map(col): _*), keys, "left_semi")
           .select(col(TombFileCol) +: schema.fieldNames.toSeq.map(col): _*)
-      val v = cur + 1
-      val (tombDir, tombEs) = writeData(spark, root, fs, v, matchedOld, Nil)
-      if (tombEs.isEmpty) fs.delete(tombDir, true)
-      val (dataDir, newEs) = writeData(spark, root, fs, v, one, statsCols(fs, root))
-      if (newEs.isEmpty && tombEs.isEmpty) { // empty batch: true no-op
-        fs.delete(dataDir, true)
-        cur
-      } else commitDelta(root, fs, v,
-        tombEs.map(addRow(_, kind = "tombstone")) ++ newEs.map(addRow(_)),
-        Nil, "merge_mor")
+      val (tombDir, tombEs) = writeData(spark, h, matchedOld, Nil)
+      if (tombEs.isEmpty) h.fs.delete(tombDir, true)
+      val (dataDir, newEs) = writeData(spark, h, one, h.statsCols)
+      Delta("merge_mor", tombEs.map(addRow(_, kind = "tombstone")) ++ newEs.map(addRow(_)),
+        dirs = Seq(dataDir))
     }
-  }
 
   /** The `verifyHint` audit shared by [[merge]]/[[mergeMoR]]: a
     * [[RangeHint]] is a caller PROMISE that no batch key already present
@@ -731,21 +696,20 @@ object SnapshotStore {
     * never the rewrite I/O — so it is the cheap way to qualify a hint on
     * a sample before trusting it in production. A truthful hint prunes
     * identically with or without the audit (law in SnapshotStoreSpec). */
-  private def auditHint(spark: SparkSession, root: Path, fs: FileSystem,
-                        path: String, es: Seq[FileEntry],
+  private def auditHint(spark: SparkSession, h: Head, es: Seq[FileEntry],
                         candidates: Seq[FileEntry], one: DataFrame,
                         keys: Seq[String], hint: RangeHint): Unit = {
     val candSet = candidates.map(_.path).toSet
     val outside = es.filterNot(e => candSet.contains(e.path))
     if (outside.isEmpty) return
-    val hits = readFiles(spark, path, outside)
+    val hits = readFilesResolved(spark, h, outside, Nil)
       .select(keys.map(col): _*)
       .join(one.select(keys.map(col): _*), keys, "left_semi")
       .limit(1).count()
     require(hits == 0L,
       s"merge verifyHint: RangeHint(${hint.col}, [${hint.lo}, ${hint.hi}]) is " +
         s"a LIE — a batch key already exists in a file the hint pruned away " +
-        s"at $path; an unverified merge would have silently duplicated it. " +
+        s"at ${h.path}; an unverified merge would have silently duplicated it. " +
         "Widen the hint (or drop it).")
   }
 
@@ -846,23 +810,23 @@ object SnapshotStore {
     }
   }
 
-  /** Write `df`'s rows as version `v`'s data files, under a directory
-    * UNIQUE TO THIS ATTEMPT (`data/c<v>-<uuid>`). The uniqueness is a
-    * correctness property, not hygiene: a write-audit-publish audit holds
-    * no lease, so a concurrent writer may also be staging bytes for the
-    * same version slot — with a shared `data/c<v>` its overwrite would
+  /** Write `df`'s rows as the head's next version's data files, under a
+    * directory UNIQUE TO THIS ATTEMPT (`data/c<v>-<uuid>`). The uniqueness
+    * is a correctness property, not hygiene: a write-audit-publish audit
+    * holds no lease, so a concurrent writer may also be staging bytes for
+    * the same version slot — with a shared `data/c<v>` its overwrite would
     * destroy the audited files BEFORE its own commit refuses, and publish
     * would then commit a manifest referencing deleted data. Per-attempt
     * dirs mean no writer can ever touch another attempt's bytes; a losing
     * or crashed attempt leaves only unreferenced garbage for [[vacuum]].
     * Returns (the attempt dir — for no-op cleanup, never shared) and the
-    * new files' manifest entries. */
-  private def writeData(spark: SparkSession, root: Path, fs: FileSystem, v: Long,
-                        df: DataFrame, cols: Seq[String]): (Path, Seq[FileEntry]) = {
-    val dir = new Path(root,
-      s"data/c$v-${java.util.UUID.randomUUID().toString.take(8)}")
+    * new files' manifest entries, with stats on `cols`. */
+  private def writeData(spark: SparkSession, h: Head, df: DataFrame,
+                        cols: Seq[String]): (Path, Seq[FileEntry]) = {
+    val dir = new Path(h.root,
+      s"data/c${h.next}-${java.util.UUID.randomUUID().toString.take(8)}")
     df.write.mode("overwrite").parquet(dir.toString)
-    (dir, newEntries(spark, root, fs, dir, df.schema, cols))
+    (dir, newEntries(spark, h.root, h.fs, dir, df.schema, cols))
   }
 
   /** Raised at the commit point when version `v`'s slot is taken.
@@ -882,57 +846,76 @@ object SnapshotStore {
     * production. */
   @volatile private[graft] var commitFence: () => Unit = () => ()
 
-  /** The atomic commit of one DELTA segment: the driver writes the
-    * add/remove rows ([[ManifestCodec]] — no Spark job) to a tmp sibling,
-    * renames it to `v<N>`, then creates the fail-if-exists marker. The
-    * marker is the ONLY commit point — a conflicting committer loses
-    * cleanly and its segment/data garbage awaits vacuum; the table is
-    * never ambiguous. Cost is O(this commit's churn): the previous
-    * version's file list is never read, collected, or rewritten here.
-    * The marker body records op, parent, add/remove counts (what the
-    * change feed classifies commits by, without reading a segment) and
-    * the commit instant (timestamp time travel). */
-  private def commitDelta(root: Path, fs: FileSystem,
-                          v: Long, adds: Seq[ManifestRow],
-                          removePaths: Seq[String], op: String): Long = {
-    commitFence()
-    val tmp = new Path(snapDir(root), s"tmp-$v-${java.util.UUID.randomUUID()}")
-    ManifestCodec.write(fs, tmp, adds ++ removePaths.map(removeRow))
-    val dst = manifestDir(root, v)
+  /** Put version `v`'s delta segment in place WITHOUT its marker: the
+    * driver writes the rows ([[ManifestCodec]] — no Spark job) to a tmp
+    * sibling and renames it to `v<N>`, refusing with
+    * [[CommitConflictException]] (tmp deleted) when the slot is already
+    * committed or staged. These checks are live FS calls, never answered
+    * from a head. [[commitDelta]] then marks it; [[stageAppend]] leaves
+    * it as a write-audit-publish reservation. */
+  private def placeSegment(h: Head, v: Long, rows: Seq[ManifestRow]): Path = {
+    val fs = h.fs
+    val tmp = new Path(snapDir(h.root), s"tmp-$v-${java.util.UUID.randomUUID()}")
+    ManifestCodec.write(fs, tmp, rows)
+    val dst = manifestDir(h.root, v)
     def conflict(committed: Boolean): Nothing = {
       fs.delete(tmp, true)
       throw new CommitConflictException(
-        s"snapshot commit conflict at $root: version $v already " +
+        s"snapshot commit conflict at ${h.root}: version $v already " +
           s"${if (committed) "committed" else "staged"} " +
           "(lost update refused — retry from the new current version)",
         committed)
     }
-    if (fs.exists(markerPath(root, v))) conflict(true)
+    if (fs.exists(markerPath(h.root, v))) conflict(true)
     if (fs.exists(dst)) conflict(false)
-    if (!fs.rename(tmp, dst)) conflict(fs.exists(markerPath(root, v)))
+    if (!fs.rename(tmp, dst)) conflict(fs.exists(markerPath(h.root, v)))
+    dst
+  }
+
+  /** A commit marker's body: op, parent, add/remove counts (what the
+    * change feed classifies commits by, without reading a segment) and
+    * the commit instant (timestamp time travel). */
+  private def markerBody(v: Long, op: String, adds: Int, removes: Int): Array[Byte] =
+    (s"op=$op parent=${v - 1} adds=$adds removes=$removes " +
+      s"ts=${System.currentTimeMillis()}").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The atomic commit of one DELTA segment at the head's next version:
+    * [[placeSegment]], then the fail-if-exists marker. The marker is the
+    * ONLY commit point — a conflicting committer loses cleanly and its
+    * segment/data garbage awaits vacuum; the table is never ambiguous.
+    * Cost is O(this commit's churn): the previous version's file list is
+    * never read, collected, or rewritten here. */
+  private def commitDelta(h: Head, adds: Seq[ManifestRow],
+                          removePaths: Seq[String], op: String): Long = {
+    commitFence()
+    val v = h.next
+    val rows = adds ++ removePaths.map(removeRow)
+    val dst = placeSegment(h, v, rows)
     val out =
-      try fs.create(markerPath(root, v), false)
+      try h.fs.create(markerPath(h.root, v), false)
       catch { case scala.util.control.NonFatal(_) =>
-        fs.delete(dst, true); conflict(true) }
-    try out.write(
-      (s"op=$op parent=${v - 1} adds=${adds.size} removes=${removePaths.size} " +
-        s"ts=${System.currentTimeMillis()}")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        h.fs.delete(dst, true)
+        throw new CommitConflictException(
+          s"snapshot commit conflict at ${h.root}: version $v already committed " +
+            "(lost update refused — retry from the new current version)", true)
+      }
+    try out.write(markerBody(v, op, adds.size, removePaths.size))
     finally out.close()
-    // roll a checkpoint once enough deltas accumulated (amortized
-    // 1/CheckpointEvery per commit; no listing below that many versions;
-    // best-effort — the commit marker is already down, so a failure here
-    // must not fail the commit: it leaves a longer fold, never a wrong one;
-    // vacuum's own checkpoint call, by contrast, surfaces failures — it
-    // deletes covered deltas)
+    // roll a checkpoint once enough deltas accumulated past the head's
+    // newest one (amortized 1/CheckpointEvery per commit; the new fold is
+    // the head's fold plus this delta, no re-read; best-effort — the
+    // commit marker is already down, so a failure here must not fail the
+    // commit: it leaves a longer fold, never a wrong one; vacuum's own
+    // checkpoint call, by contrast, surfaces failures — it deletes
+    // covered deltas)
     if (v >= CheckpointEvery &&
-        v - ckptVersions(fs, root).filter(_ <= v).lastOption.getOrElse(0L) >= CheckpointEvery)
-      try writeCheckpoint(root, fs, v)
+        v - h.ckpts.filter(_ <= v).lastOption.getOrElse(0L) >= CheckpointEvery)
+      try writeCheckpoint(h, v, foldRows(h.fold(h.cur) ++ rows))
       catch { case scala.util.control.NonFatal(_) => () }
     v
   }
 
-  /** Materialize version `v`'s fold as checkpoint `ckpt-<v>` (tmp +
+  /** Materialize version `v`'s fold `rows` as checkpoint `ckpt-<v>` (tmp +
     * rename; LOSING A RENAME RACE to another checkpointer is benign — the
     * checkpoint exists either way — but any other rename failure SURFACES
     * as an IOException: callers that go on to delete the deltas the
@@ -940,56 +923,120 @@ object SnapshotStore {
     * missing checkpoint, or kept versions lose their covering segment).
     * Every read of `v` or later then starts from this segment instead of
     * replaying the full delta history. */
-  private def writeCheckpoint(root: Path, fs: FileSystem, v: Long): Unit = {
-    val tmp = new Path(snapDir(root), s"tmpckpt-$v-${java.util.UUID.randomUUID()}")
+  private def writeCheckpoint(h: Head, v: Long, rows: Seq[ManifestRow]): Unit = {
+    val tmp = new Path(snapDir(h.root), s"tmpckpt-$v-${java.util.UUID.randomUUID()}")
     // one parquet file: a checkpoint is manifest-sized (≈50 MB / 10⁶ files
     // at 100 TB), not data-sized, so the next fold reads one footer
-    ManifestCodec.write(fs, tmp, foldAt(fs, root, v))
-    if (!fs.rename(tmp, ckptDir(root, v))) {
-      fs.delete(tmp, true)
-      if (!fs.exists(ckptDir(root, v))) throw new java.io.IOException(
-        s"snapshot checkpoint rename failed at $root for ckpt-$v " +
+    ManifestCodec.write(h.fs, tmp, rows)
+    if (!h.fs.rename(tmp, ckptDir(h.root, v))) {
+      h.fs.delete(tmp, true)
+      if (!h.fs.exists(ckptDir(h.root, v))) throw new java.io.IOException(
+        s"snapshot checkpoint rename failed at ${h.root} for ckpt-$v " +
           "(and no concurrent checkpointer won the slot)")
     }
   }
 
   /** Explicit maintenance form of the checkpoint roll (the auto roll
     * fires every [[CheckpointEvery]] commits). */
-  def checkpointManifest(spark: SparkSession, path: String): Unit = {
+  def checkpointManifest(spark: SparkSession, path: String): Unit =
+    leased(spark, path, "snapshot manifest checkpoint") { h =>
+      val v = h.cur
+      if (!h.ckpts.contains(v)) writeCheckpoint(h, v, h.fold(v))
+    }
+
+  // ---- the commit path (every writer serializes on the table Lease) --------
+
+  /** Every writer's entry: the table [[Lease]] (`owner`: a streaming
+    * maintainer's checkpoint location, so a crashed lineage's restart
+    * re-acquires its own stale lease), then the head, resolved once. */
+  private def leased[T](spark: SparkSession, path: String, what: String,
+                        owner: Option[String] = None)(body: Head => T): T = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot manifest checkpoint") {
-      val v = currentVersion(spark, path)
-      if (!fs.exists(ckptDir(root, v))) writeCheckpoint(root, fs, v)
-    }
+    Lease.withLease(fs, root, what, owner)(body(new Head(path, root, fs)))
   }
 
-  // ---- write operations (all serialize on the table Lease) -----------------
+  /** What one commit attempt's body hands [[commit]]: the delta segment's
+    * add rows and removed paths, and the attempt dirs its writes made. An
+    * empty delta is a TRUE no-op — its dirs are deleted and the head's
+    * version returned, never an empty version — unless `always` (create,
+    * overwrite and compaction commit even when empty). */
+  private final case class Delta(op: String, adds: Seq[ManifestRow],
+                                 removes: Seq[String] = Nil,
+                                 dirs: Seq[Path] = Nil, always: Boolean = false)
+  private val NoOp = Delta("noop", Nil)
+
+  /** THE COMMIT PATH. lease → head → the head's slot check (`create`
+    * needs an empty table, every other writer a committed one) → the
+    * txn-replay check → `body` (the op's own work against the head) →
+    * empty-delta no-op cleanup → [[commitDelta]] (with the txn row, when
+    * `txn`) and its checkpoint roll.
+    *
+    * `txn = Some((lineageId, batchId))` makes the commit TRANSACTIONALLY
+    * IDEMPOTENT per lineage: a [[txnRow]] commits in the same atomic
+    * segment as the files, and a replay whose batchId is at or below the
+    * head's recorded mark returns the current version without running
+    * `body` — the exactly-once contract a streaming sink needs across the
+    * crash-between-commit-and-checkpoint window.
+    *
+    * `rebase` is for COMMUTATIVE commits (append, dedup-append): on
+    * losing the version slot to another COMMITTED writer, `body` runs
+    * again against a fresh head (bounded attempts) — the Delta-style
+    * rebase, safe because an append's content is independent of the head
+    * it lands on (dedup-append re-derives its anti-join inside `body`).
+    * Non-commutative operations (delete/update/merge/compact) never
+    * rebase: their rewrite was computed against a specific head, so the
+    * refusal stands. A STAGED (marker-less) slot never rebases either —
+    * it is a write-audit-publish reservation. */
+  private def commit(spark: SparkSession, path: String, what: String,
+                     owner: Option[String] = None,
+                     txn: Option[(String, Long)] = None,
+                     rebase: Boolean = false, create: Boolean = false)(
+                     body: Head => Delta): Long =
+    leased(spark, path, what, owner) { h0 =>
+      if (create) require(h0.versions.isEmpty, s"snapshot table already exists at $path")
+      else require(h0.versions.nonEmpty, s"no committed snapshot at $path")
+      val txnRows = txn.map { case (id, b) => txnRow(id, b) }.toSeq
+      def attempt(h: Head, n: Int): Long = {
+        val d = body(h)
+        if (!d.always && d.adds.isEmpty && d.removes.isEmpty) {
+          d.dirs.foreach(h.fs.delete(_, true))
+          h.cur
+        } else
+          try commitDelta(h, d.adds ++ txnRows, d.removes, d.op)
+          catch {
+            case c: CommitConflictException
+                if rebase && c.committedWinner && n < 3 =>
+              attempt(headOf(spark, path), n + 1) // 4 attempts in all
+          }
+      }
+      if (txn.exists { case (id, b) => h0.txnMark(id).exists(_ >= b) }) h0.cur
+      else attempt(h0, 0)
+    }
+
+  // ---- write operations -----------------------------------------------------
 
   /** Create the table as version 1. `clusterBy` range-partitions the rows
     * across `numFiles` files sorted within each — the layout that makes the
     * zone map TIGHT on those columns (disjoint per-file ranges), so range
-    * scans and ranged deletes open O(range/table) files, not all of them. */
+    * scans and ranged deletes open O(range/table) files, not all of them.
+    * `owner`: a streaming bootstrap's crash-replay re-acquires its own
+    * stale lease (create is safely re-runnable until its commit marker
+    * lands — a dead attempt's per-attempt data dir is unreferenced
+    * garbage for vacuum; the marker is the only commit point). */
   def create(spark: SparkSession, df: DataFrame, path: String,
              statsColumns: Seq[String] = Nil, clusterBy: Seq[String] = Nil,
              numFiles: Int = 0, owner: Option[String] = None,
              txn: Option[(String, Long)] = None): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
     statsColumns.foreach(c => require(
       statsEncoder(df.schema(c).dataType).isDefined,
       s"stats column $c: unsupported type ${df.schema(c).dataType}"))
-    // owner: a streaming bootstrap's crash-replay re-acquires its own
-    // stale lease (create is safely re-runnable until its commit marker
-    // lands — a dead attempt's per-attempt data dir is unreferenced
-    // garbage for vacuum; the marker is the only commit point)
-    Lease.withLease(fs, root, "snapshot create", owner) {
-      require(versions(spark, path).isEmpty, s"snapshot table already exists at $path")
-      fs.mkdirs(snapDir(root))
-      writeSmall(fs, formatPath(root), FormatVersion.toString, overwrite = true)
-      writeSmall(fs, new Path(snapDir(root), "schema"), df.schema.toDDL, overwrite = true)
-      writeSmall(fs, new Path(snapDir(root), "statscols"),
-        statsColumns.mkString("\n"), overwrite = true)
+    commit(spark, path, "snapshot create", owner, txn, create = true) { h =>
+      val sd = snapDir(h.root)
+      h.fs.mkdirs(sd)
+      writeSmall(h.fs, new Path(sd, "format"), FormatVersion.toString, overwrite = true)
+      writeSmall(h.fs, new Path(sd, "schema"), df.schema.toDDL, overwrite = true)
+      writeSmall(h.fs, new Path(sd, "statscols"), statsColumns.mkString("\n"), overwrite = true)
       val shaped =
         if (clusterBy.nonEmpty && numFiles > 0)
           df.repartitionByRange(numFiles, clusterBy.map(col): _*)
@@ -1001,9 +1048,8 @@ object SnapshotStore {
       // with no data file: no write job, no zero-row part for vacuum
       val adds =
         if (isEmptyLocal(df)) Nil
-        else writeData(spark, root, fs, 1L, shaped, statsColumns)._2.map(addRow(_))
-      commitDelta(root, fs, 1L, adds ++ txn.map { case (id, b) => txnRow(id, b) }.toSeq,
-        Nil, "create")
+        else writeData(spark, h, shaped, statsColumns)._2.map(addRow(_))
+      Delta("create", adds, always = true)
     }
   }
 
@@ -1029,67 +1075,21 @@ object SnapshotStore {
         s"${schema.toDDL} at $path (names AND types, order-insensitive)")
   }
 
-  /** Bounded optimistic retries for COMMUTATIVE commits (append,
-    * dedup-append): on losing the version slot to another COMMITTED
-    * writer, `body(attempt)` re-resolves the new head and re-commits —
-    * the Delta-style rebase, here trivially safe because an append's
-    * content is independent of the head it lands on (dedup-append
-    * re-derives its anti-join against the new head inside `body`).
-    * Non-commutative operations (delete/update/merge/compact) never come
-    * here: their rewrite was computed against a specific head, so the
-    * refusal stands. A STAGED (marker-less) slot never rebases either —
-    * it is a write-audit-publish reservation. */
-  private def withCommitRebase(what: String)(body: Int => Long): Long = {
-    val maxAttempts = 4
-    var attempt = 0
-    while (true) {
-      try return body(attempt)
-      catch {
-        case c: CommitConflictException
-            if c.committedWinner && attempt < maxAttempts - 1 =>
-          attempt += 1 // rebase onto the new head and retry
-      }
-    }
-    sys.error(s"$what: unreachable")
-  }
-
   /** Multiset append: ONE delta segment naming only the new files; every
     * current file carries forward implicitly (the fold), so the commit
     * never reads, collects, or rewrites the table's file list — O(batch)
     * at any table size. On losing the commit slot to another committed
     * writer, the already-written files re-commit against the new head
-    * (append is commutative; the staged bytes are head-independent).
-    * `txn = Some((lineageId, batchId))` makes the append TRANSACTIONALLY
-    * IDEMPOTENT per lineage: a [[txnRow]] commits in the same atomic
-    * segment as the files, and a replay whose batchId is at or below the
-    * recorded mark returns the current version without writing — the
-    * exactly-once contract a streaming sink needs across the
-    * crash-between-commit-and-checkpoint window. */
+    * (append is commutative; the staged bytes are head-independent, and
+    * the data dir keeps the FIRST attempt's slot number — cosmetic only,
+    * paths are opaque). `txn`: see [[commit]]. */
   def append(spark: SparkSession, df: DataFrame, path: String,
              txn: Option[(String, Long)] = None): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot append") {
-      val cur0 = currentVersion(spark, path)
-      val replayed = txn.exists { case (id, b) =>
-        lastTxn(spark, path, id).exists(_ >= b)
-      }
-      if (replayed) cur0
-      else {
-        val (dataDir, newEs) =
-          writeData(spark, root, fs, cur0 + 1, df, statsCols(fs, root))
-        if (newEs.isEmpty) { // empty batch: a true no-op, not an empty version
-          fs.delete(dataDir, true)
-          cur0
-        } else withCommitRebase("snapshot append") { _ =>
-          // re-resolve per attempt; the data dir's name keeps the FIRST
-          // attempt's slot number — cosmetic only, paths are opaque
-          commitDelta(root, fs, currentVersion(spark, path) + 1,
-            newEs.map(addRow(_)) ++
-              txn.map { case (id, b) => txnRow(id, b) }.toSeq,
-            Nil, "append")
-        }
-      }
+    var written: Option[(Path, Seq[FileEntry])] = None
+    commit(spark, path, "snapshot append", txn = txn, rebase = true) { h =>
+      val (dir, es) = written.getOrElse(writeData(spark, h, df, h.statsCols))
+      written = Some((dir, es))
+      Delta("append", es.map(addRow(_)), dirs = Seq(dir))
     }
   }
 
@@ -1098,49 +1098,24 @@ object SnapshotStore {
     * order, then anti-join against the CURRENT VERSION's keys (column-pruned
     * scan). Re-delivered batches are no-ops; unlike [[DedupAppend]] the
     * commit is atomic, so a crash mid-append never leaves half a batch
-    * visible. */
+    * visible. The txn mark short-circuits a same-lineage replay BEFORE
+    * the key anti-join; the content-level idempotence stays as the
+    * cross-lineage (fresh-checkpoint) safety net. */
   def appendDedup(spark: SparkSession, df: DataFrame, path: String,
                   keys: Seq[String], tieBreak: Seq[String],
                   owner: Option[String] = None,
-                  txn: Option[(String, Long)] = None): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    // streaming maintainers pass their checkpoint location as `owner` so a
-    // crashed lineage's restart re-acquires its own stale lease; the
-    // replayed batch is already a version-preserving no-op below
-    Lease.withLease(fs, root, "snapshot dedup append", owner) {
-      // the txn mark ([[append]]) short-circuits a same-lineage replay
-      // BEFORE the key anti-join — the content-level idempotence below
-      // stays as the cross-lineage (fresh-checkpoint) safety net
-      val curT = currentVersion(spark, path)
-      val foldT = committedFold(spark, path, curT)
-      val replayed = txn.exists { case (id, b) => txnMark(foldT, id).exists(_ >= b) }
-      if (replayed) curT
-      else withCommitRebase("snapshot dedup append") { attempt =>
-        // each attempt re-derives the anti-join against the CURRENT head:
-        // a rebase after losing the slot must re-check its keys against
-        // whatever the winning commit added, or a key that just landed
-        // would be silently duplicated — so unlike plain append, the
-        // rebase re-filters and re-writes (the lost attempt's data dir is
-        // vacuum garbage)
-        val cur = currentVersion(spark, path)
-        // the head's fold is the one read above unless a rebase moved it
-        val rows = if (cur == curT) foldT else committedFold(spark, path, cur)
-        val inBatch = DedupAppend.survivors(df, keys, tieBreak)
-        val fresh = inBatch.join(
-          readFold(spark, root, fs, rows).select(keys.map(col): _*), keys, "left_anti")
-        val v = cur + 1
-        val (dataDir, newEs) = writeData(spark, root, fs, v, fresh, statsCols(fs, root))
-        if (newEs.isEmpty) { // fully re-delivered batch: idempotent no-op
-          fs.delete(dataDir, true)
-          cur
-        } else commitDelta(root, fs, v,
-          newEs.map(addRow(_)) ++
-            txn.map { case (id, b) => txnRow(id, b) }.toSeq,
-          Nil, "append_dedup")
-      }
+                  txn: Option[(String, Long)] = None): Long =
+    commit(spark, path, "snapshot dedup append", owner, txn, rebase = true) { h =>
+      // each attempt re-derives the anti-join against ITS head: a rebase
+      // after losing the slot must re-check its keys against whatever the
+      // winning commit added, or a key that just landed would be silently
+      // duplicated — so unlike plain append, the rebase re-filters and
+      // re-writes (the lost attempt's data dir is vacuum garbage)
+      val fresh = DedupAppend.survivors(df, keys, tieBreak).join(
+        readFold(spark, h, h.fold(h.cur)).select(keys.map(col): _*), keys, "left_anti")
+      val (dir, es) = writeData(spark, h, fresh, h.statsCols)
+      Delta("append_dedup", es.map(addRow(_)), dirs = Seq(dir))
     }
-  }
 
   /** Replace the table's contents in ONE atomic commit (the format API's
     * SaveMode.Overwrite): the delta removes every current data and
@@ -1149,44 +1124,29 @@ object SnapshotStore {
     * [[vacuum]] ages it out; a crash leaves the previous version live.
     * The batch schema must match the table's (an overwrite is a content
     * replacement, not an evolution — [[evolveAddColumn]] is that). */
-  def overwrite(spark: SparkSession, df: DataFrame, path: String): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot overwrite") {
-      val cur = currentVersion(spark, path)
-      val schema = tableSchema(fs, root)
-      requireSchemaMatch(df, schema, "overwrite", path)
-      val removed = { val (es, tombs) = liveSplit(spark, path, cur)
-        es.map(_.path) ++ tombs.map(_.path) }
-      val v = cur + 1
-      commitDelta(root, fs, v,
-        writeData(spark, root, fs, v,
-          df.select(schema.fieldNames.toSeq.map(col): _*),
-          statsCols(fs, root))._2.map(addRow(_)),
-        removed, "overwrite")
+  def overwrite(spark: SparkSession, df: DataFrame, path: String): Long =
+    commit(spark, path, "snapshot overwrite") { h =>
+      requireSchemaMatch(df, h.schema, "overwrite", path)
+      val (es, tombs) = h.live(h.cur)
+      val (_, newEs) = writeData(spark, h,
+        df.select(h.schema.fieldNames.toSeq.map(col): _*), h.statsCols)
+      Delta("overwrite", newEs.map(addRow(_)), es.map(_.path) ++ tombs.map(_.path),
+        always = true)
     }
-  }
 
   /** Which current files contain rows matching `pred`: manifest-range
     * pre-prune (when hinted), then ONE distributed scan with the predicate
-    * pushed to the reader. Returns (touched, untouched-by-reference). */
-  private def splitTouched(spark: SparkSession, path: String, root: Path,
-                           es: Seq[FileEntry], pred: Column,
-                           hint: Option[RangeHint]): (Seq[FileEntry], Seq[FileEntry]) = {
-    val candidates = hint match {
-      case Some(h) => pruned(es, h.col, h.lo, h.hi)
-      case None => es
-    }
-    val candSet = candidates.map(_.path).toSet
-    val carried0 = es.filterNot(e => candSet.contains(e.path))
-    if (candidates.isEmpty) return (Nil, es)
-    val fs = fsOf(spark, root)
-    val touchedAbs = readFiles(spark, path, candidates)
+    * pushed to the reader. Returns the touched files; every other file
+    * carries by reference. */
+  private def touchedBy(spark: SparkSession, h: Head, es: Seq[FileEntry],
+                        pred: Column, hint: Option[RangeHint]): Seq[FileEntry] = {
+    val candidates = hinted(es, hint)
+    if (candidates.isEmpty) return Nil
+    val touchedAbs = readFilesResolved(spark, h, candidates, Nil)
       .filter(pred <=> lit(true))
       .select(col("_metadata.file_path")).distinct().collect()
-      .map(r => relOf(fs, root, r.getString(0))).toSet
-    val (touched, clean) = candidates.partition(e => touchedAbs.contains(e.path))
-    (touched, carried0 ++ clean)
+      .map(r => relOf(h.fs, h.root, r.getString(0))).toSet
+    candidates.filter(e => touchedAbs.contains(e.path))
   }
 
   /** Copy-on-write DELETE: rewrite only the files containing matching rows
@@ -1194,29 +1154,22 @@ object SnapshotStore {
     * carry every other file by reference. A predicate matching nothing
     * commits nothing and returns the current version unchanged. */
   def deleteWhere(spark: SparkSession, path: String, pred: Column,
-                  hint: Option[RangeHint] = None): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot delete") {
-      val cur = currentVersion(spark, path)
-      val (es, tombs) = liveSplit(spark, path, cur)
-      val (touched, _) = splitTouched(spark, path, root, es, pred, hint)
-      if (touched.isEmpty) cur
+                  hint: Option[RangeHint] = None): Long =
+    commit(spark, path, "snapshot delete") { h =>
+      val (es, tombs) = h.live(h.cur)
+      val touched = touchedBy(spark, h, es, pred, hint)
+      if (touched.isEmpty) NoOp
       else {
-        val v = cur + 1
         // rewrite from the RESOLVED rows: on a tombstoned table a raw
         // rewrite would resurrect dead rows into the fresh files
-        val kept = readFilesResolved(spark, root, fs, touched,
-          tombs, tableSchema(fs, root))
+        val kept = readFilesResolved(spark, h, touched, tombs)
           .filter(!(pred <=> lit(true)))
         // delta: the rewritten files in, the touched originals out — the
         // untouched majority is never even named
-        commitDelta(root, fs, v,
-          writeData(spark, root, fs, v, kept, statsCols(fs, root))._2.map(addRow(_)),
-          touched.map(_.path), "delete")
+        Delta("delete", writeData(spark, h, kept, h.statsCols)._2.map(addRow(_)),
+          touched.map(_.path))
       }
     }
-  }
 
   /** Copy-on-write UPDATE: each assigned column becomes
     * `CASE WHEN pred THEN expr ELSE old END` in the rewritten (touched)
@@ -1224,21 +1177,16 @@ object SnapshotStore {
     * are invariant by construction. */
   def updateWhere(spark: SparkSession, path: String, pred: Column,
                   set: Map[String, Column],
-                  hint: Option[RangeHint] = None): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot update") {
-      val cur = currentVersion(spark, path)
-      val schema = tableSchema(fs, root)
+                  hint: Option[RangeHint] = None): Long =
+    commit(spark, path, "snapshot update") { h =>
+      val schema = h.schema
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"update of unknown column $c"))
-      val (es, tombs) = liveSplit(spark, path, cur)
-      val (touched, _) = splitTouched(spark, path, root, es, pred, hint)
-      if (touched.isEmpty) cur
+      val (es, tombs) = h.live(h.cur)
+      val touched = touchedBy(spark, h, es, pred, hint)
+      if (touched.isEmpty) NoOp
       else {
-        val v = cur + 1
-        val updated = readFilesResolved(spark, root, fs, touched,
-          tombs, schema).select(
+        val updated = readFilesResolved(spark, h, touched, tombs).select(
           schema.fieldNames.toSeq.map { c =>
             set.get(c) match {
               case Some(e) =>
@@ -1246,12 +1194,10 @@ object SnapshotStore {
               case None => col(c)
             }
           }: _*)
-        commitDelta(root, fs, v,
-          writeData(spark, root, fs, v, updated, statsCols(fs, root))._2.map(addRow(_)),
-          touched.map(_.path), "update")
+        Delta("update", writeData(spark, h, updated, h.statsCols)._2.map(addRow(_)),
+          touched.map(_.path))
       }
     }
-  }
 
   /** MERGE (upsert): update matched keys to the batch's row, insert
     * unmatched keys — the reference's `ON CONFLICT DO NOTHING` upgraded to
@@ -1282,37 +1228,31 @@ object SnapshotStore {
             keys: Seq[String], tieBreak: Seq[String],
             hint: Option[RangeHint] = None,
             owner: Option[String] = None,
-            verifyHint: Boolean = false): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot merge", owner) {
-      val cur = currentVersion(spark, path)
-      val (es, tombs) = liveSplit(spark, path, cur)
-      val schema = tableSchema(fs, root)
+            verifyHint: Boolean = false): Long =
+    commit(spark, path, "snapshot merge", owner) { h =>
+      val (es, tombs) = h.live(h.cur)
+      val schema = h.schema
       requireSchemaMatch(batch, schema, "merge", path)
       val one = DedupAppend.survivors(
         batch.select(schema.fieldNames.toSeq.map(col): _*), keys, tieBreak)
         .localCheckpoint(true) // read 3×: touched-file probe, replace, anti
       // files holding matched keys: manifest pre-prune, then one scan
       // filtered by a semi join against the (typically small) batch keys
-      val candidates = hint match {
-        case Some(h) => pruned(es, h.col, h.lo, h.hi)
-        case None => es
-      }
+      val candidates = hinted(es, hint)
       if (verifyHint && hint.nonEmpty)
-        auditHint(spark, root, fs, path, es, candidates, one, keys, hint.get)
+        auditHint(spark, h, es, candidates, one, keys, hint.get)
       // no broadcast hint on the batch-key side: AQE picks broadcast when
       // the batch is actually small and falls back to a shuffled join when
       // it is not — a forced hint would OOM the driver on a large merge
       val touchedSet: Set[String] =
         if (candidates.isEmpty) Set.empty
-        else readFiles(spark, path, candidates)
+        else readFilesResolved(spark, h, candidates, Nil)
           // _metadata resolves only on the scan itself — materialize it
           // before the join or the hidden column is gone
           .select(col("_metadata.file_path").as("__fp") +: keys.map(col): _*)
           .join(one.select(keys.map(col): _*), keys, "left_semi")
           .select(col("__fp")).distinct().collect()
-          .map(r => relOf(fs, root, r.getString(0))).toSet
+          .map(r => relOf(h.fs, h.root, r.getString(0))).toSet
       val touched = candidates.filter(e => touchedSet.contains(e.path))
       // every matched key's row lives in a touched file BY CONSTRUCTION,
       // so the rewrite is simply: touched files' rows whose key is not in
@@ -1320,19 +1260,13 @@ object SnapshotStore {
       // inserted) — one anti-join on the key, nothing else
       val rewritten =
         if (touched.isEmpty) one
-        else readFilesResolved(spark, root, fs, touched, tombs, schema)
+        else readFilesResolved(spark, h, touched, tombs)
           .join(one.select(keys.map(col): _*), keys, "left_anti")
           .select(schema.fieldNames.toSeq.map(col): _*)
           .unionByName(one)
-      val v = cur + 1
-      val (dataDir, newEs) = writeData(spark, root, fs, v, rewritten, statsCols(fs, root))
-      if (newEs.isEmpty && touched.isEmpty) { // empty batch: true no-op
-        fs.delete(dataDir, true)
-        cur
-      } else commitDelta(root, fs, v, newEs.map(addRow(_)),
-        touched.map(_.path), "merge")
+      val (dataDir, newEs) = writeData(spark, h, rewritten, h.statsCols)
+      Delta("merge", newEs.map(addRow(_)), touched.map(_.path), dirs = Seq(dataDir))
     }
-  }
 
   /** Compaction on the snapshot substrate: rewrite the CURRENT file set to
     * ~`targetFileBytes` files as a new version (readers of old versions are
@@ -1353,18 +1287,15 @@ object SnapshotStore {
       "clusterBy and zOrderBy are mutually exclusive")
     require(zOrderBy.isEmpty || zOrderBy.size == 2,
       s"zOrderBy supports exactly two columns, got ${zOrderBy.size}")
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot compact") {
-      val cur = currentVersion(spark, path)
-      val (es, tombs) = liveSplit(spark, path, cur)
+    commit(spark, path, "snapshot compact") { h =>
+      val (es, tombs) = h.live(h.cur)
       val bytes = es.map(_.bytes).sum
       val nOut = math.min(Int.MaxValue.toLong,
         math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
       // the compaction read RESOLVES tombstones: the rewritten files carry
       // the net rows, and the delta below drops every tombstone — this is
       // what folds merge-on-read deletes back into a pure file table
-      val df = readFilesResolved(spark, root, fs, es, tombs, tableSchema(fs, root))
+      val df = readFilesResolved(spark, h, es, tombs)
       val shaped =
         if (zOrderBy.nonEmpty) {
           // VALUE-based normalization from the manifest's own global
@@ -1400,14 +1331,11 @@ object SnapshotStore {
           df.repartitionByRange(nOut, clusterBy.map(col): _*)
             .sortWithinPartitions(clusterBy.map(col): _*)
         else df.repartition(nOut)
-      val v = cur + 1
       // compaction's delta removes EVERY current file (data and any live
       // row tombstones — the rewrite read is tombstone-resolved, so the
       // new files carry the net rows and the tombstones fold away here)
-      commitDelta(root, fs, v,
-        writeData(spark, root, fs, v, shaped, statsCols(fs, root))._2.map(addRow(_)),
-        es.map(_.path) ++ tombs.map(_.path),
-        "compact")
+      Delta("compact", writeData(spark, h, shaped, h.statsCols)._2.map(addRow(_)),
+        es.map(_.path) ++ tombs.map(_.path), always = true)
     }
   }
 
@@ -1426,37 +1354,29 @@ object SnapshotStore {
     * version), so the audited bytes are exactly what publishes; publish
     * additionally re-checks the staged version is still current+1 as
     * belt-and-suspenders against an abandon+recommit interleave. */
-  def stageAppend(spark: SparkSession, df: DataFrame, path: String): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot stage") {
-      val cur = currentVersion(spark, path)
-      val v = cur + 1
-      val (dataDir, newEs) = writeData(spark, root, fs, v, df, statsCols(fs, root))
-      val tmp = new Path(snapDir(root), s"tmp-$v-${java.util.UUID.randomUUID()}")
-      ManifestCodec.write(fs, tmp, newEs.map(addRow(_)))
-      val dst = manifestDir(root, v)
-      if (fs.exists(dst) || fs.exists(markerPath(root, v)) || !fs.rename(tmp, dst)) {
-        fs.delete(tmp, true)
-        fs.delete(dataDir, true)
+  def stageAppend(spark: SparkSession, df: DataFrame, path: String): Long =
+    leased(spark, path, "snapshot stage") { h =>
+      val v = h.cur + 1
+      val (dataDir, newEs) = writeData(spark, h, df, h.statsCols)
+      try placeSegment(h, v, newEs.map(addRow(_)))
+      catch { case _: CommitConflictException =>
+        h.fs.delete(dataDir, true)
         throw new java.io.IOException(
-          s"snapshot stage conflict at $root: version $v already staged or committed")
+          s"snapshot stage conflict at ${h.root}: version $v already staged or committed")
       }
       v
     }
-  }
 
   /** Read a STAGED (unpublished) version — the audit's input: the
     * committed base's fold plus the staged delta segment. */
   def readStaged(spark: SparkSession, path: String, v: Long): DataFrame = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    require(fs.exists(manifestDir(root, v)) && !fs.exists(markerPath(root, v)),
+    val h = headOf(spark, path)
+    require(h.segments.contains(v) && !h.isCommitted(v),
       s"version $v at $path is not a staged (unpublished) version")
-    require(fs.exists(markerPath(root, v - 1)),
+    require(h.isCommitted(v - 1),
       s"staged version $v at $path has no committed base v${v - 1}")
-    readFold(spark, root, fs, foldRows(
-      (segmentDirs(fs, root, v - 1) :+ manifestDir(root, v)).flatMap(readSegment(fs, root, _))))
+    readFold(spark, h, foldRows(
+      (h.segmentDirs(v - 1) :+ manifestDir(h.root, v)).flatMap(readSegment(h, _))))
   }
 
   /** Publish a staged version: ONE marker create — the same atomic commit
@@ -1467,48 +1387,42 @@ object SnapshotStore {
     * that reclaimed staged bytes (per-attempt data dirs already make a
     * concurrent writer unable to TOUCH them; this catches an operator's
     * manual deletion or an errant vacuum of a foreign table copy). */
-  def publish(spark: SparkSession, path: String, v: Long): Long = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot publish") {
-      require(fs.exists(manifestDir(root, v)), s"no staged manifest v$v at $path")
-      val cur = currentVersion(spark, path)
+  def publish(spark: SparkSession, path: String, v: Long): Long =
+    leased(spark, path, "snapshot publish") { h =>
+      val fs = h.fs
+      require(h.segments.contains(v), s"no staged manifest v$v at $path")
+      val cur = h.cur
       if (cur != v - 1) throw new java.io.IOException(
         s"snapshot publish conflict at $path: staged v$v audited against v${v - 1} " +
           s"but current is v$cur — re-stage against the new current version")
-      val stagedAdds = ManifestCodec.read(fs, manifestDir(root, v)).filter(_.action == "add")
-      val missing = stagedAdds.filterNot(e => fs.exists(new Path(root, e.path)))
+      val stagedAdds = ManifestCodec.read(fs, manifestDir(h.root, v)).filter(_.action == "add")
+      val missing = stagedAdds.filterNot(e => fs.exists(new Path(h.root, e.path)))
       if (missing.nonEmpty) throw new java.io.IOException(
         s"snapshot publish refused at $path: staged v$v references " +
           s"${missing.size} missing data file(s) (e.g. ${missing.head.path}) — " +
           "the audited bytes are gone; abandon and re-stage")
       val out =
-        try fs.create(markerPath(root, v), false)
+        try fs.create(markerPath(h.root, v), false)
         catch {
           case scala.util.control.NonFatal(_) => throw new java.io.IOException(
             s"snapshot publish conflict at $path: version $v already committed")
         }
-      try out.write(
-        (s"op=publish parent=${v - 1} adds=${stagedAdds.size} removes=0 " +
-          s"ts=${System.currentTimeMillis()}")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(markerBody(v, "publish", stagedAdds.size, 0))
       finally out.close()
       v
     }
-  }
 
   /** Drop a staged version that failed its audit: manifest dir + every
     * per-attempt data dir written for that version slot (never any
     * committed version's files — the marker-absence check guards that,
     * and a racing committer for the same slot holds the lease too). */
-  def abandon(spark: SparkSession, path: String, v: Long): Unit = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot abandon") {
-      require(!fs.exists(markerPath(root, v)),
+  def abandon(spark: SparkSession, path: String, v: Long): Unit =
+    leased(spark, path, "snapshot abandon") { h =>
+      val fs = h.fs
+      require(!h.isCommitted(v),
         s"version $v at $path is committed — abandon refuses; use vacuum/delete")
-      fs.delete(manifestDir(root, v), true)
-      val dataDir = new Path(root, "data")
+      fs.delete(manifestDir(h.root, v), true)
+      val dataDir = new Path(h.root, "data")
       if (fs.exists(dataDir))
         fs.listStatus(dataDir).iterator
           .filter { s =>
@@ -1516,9 +1430,7 @@ object SnapshotStore {
             n == s"c$v" || n.startsWith(s"c$v-")
           }
           .foreach(s => fs.delete(s.getPath, true))
-      ()
     }
-  }
 
   /** Incremental change read: the NET row-level delta between two
     * committed versions, as (`change_type` ∈ insert|delete, row…). The
@@ -1551,24 +1463,21 @@ object SnapshotStore {
   def changesBetween(spark: SparkSession, path: String,
                      fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV, s"changesBetween: fromV $fromV > toV $toV")
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
+    val h = headOf(spark, path)
     var to = toV
-    while (to > fromV && markerOp(fs, root, to).contains("compact")) to -= 1
-    if (to > fromV)
-      changesBetweenSplits(spark, root, fs,
-        liveSplit(spark, path, fromV), liveSplit(spark, path, to))
+    while (to > fromV && markerOp(h, to).contains("compact")) to -= 1
+    if (to > fromV) changesBetweenSplits(spark, h, h.live(fromV), h.live(to))
     else {
-      require(fs.exists(markerPath(root, fromV)), s"version $fromV not committed at $path")
-      emptyChanges(spark, changeSchema(fs, root))
+      require(h.isCommitted(fromV), s"version $fromV not committed at $path")
+      emptyChanges(spark, changeSchema(h))
     }
   }
 
   /** The op a committed version's marker records; None when the marker
     * is missing or carries no op (callers then take the general path,
     * which refuses a missing version loudly). */
-  private def markerOp(fs: FileSystem, root: Path, v: Long): Option[String] =
-    try markerFields(fs, root, v).get("op")
+  private def markerOp(h: Head, v: Long): Option[String] =
+    try markerFields(h, v).get("op")
     catch { case _: java.io.FileNotFoundException => None }
 
   /** The table schema, refused when it collides with the change feed's
@@ -1576,8 +1485,8 @@ object SnapshotStore {
     * change_type too, and the general case additionally derives the
     * sign/net/replicate scratch columns): a colliding table schema must
     * refuse uniformly across commit shapes, never silently overwrite. */
-  private def changeSchema(fs: FileSystem, root: Path): StructType = {
-    val schema = tableSchema(fs, root)
+  private def changeSchema(h: Head): StructType = {
+    val schema = h.schema
     require(Seq("__chg_sign", "__chg_net", "__chg_rep", "change_type")
         .forall(c => !schema.fieldNames.contains(c)),
       s"changesBetween: table schema collides with reserved column names")
@@ -1592,11 +1501,10 @@ object SnapshotStore {
   /** [[changesBetween]] over PRE-COMPUTED manifest folds — the seam
     * multi-version consumers ([[changeFeedLegs]]) use so adjacent steps
     * share each boundary version's fold instead of paying it twice. */
-  private def changesBetweenSplits(spark: SparkSession, root: Path,
-                                   fs: FileSystem,
+  private def changesBetweenSplits(spark: SparkSession, h: Head,
                                    fromSplit: (Seq[FileEntry], Seq[FileEntry]),
                                    toSplit: (Seq[FileEntry], Seq[FileEntry])): DataFrame = {
-    val schema = changeSchema(fs, root)
+    val schema = changeSchema(h)
     val (fromEs, fromTombs) = fromSplit
     val (toEs, toTombs) = toSplit
     val fromPaths = fromEs.map(_.path).toSet
@@ -1608,8 +1516,7 @@ object SnapshotStore {
     val newTombs = toTombs.filterNot(t => fromTombPaths.contains(t.path))
     val retombed: Set[String] =
       if (newTombs.isEmpty) Set.empty
-      else spark.read.schema(tombSchema(schema))
-        .parquet(newTombs.map(t => new Path(root, t.path).toString): _*)
+      else parquetAt(spark, h, tombSchema(schema), newTombs)
         .select(col(TombFileCol)).distinct().collect().map(_.getString(0)).toSet
     def changed(es: Seq[FileEntry], otherPaths: Set[String]) =
       es.filter(e => !otherPaths.contains(e.path) || retombed.contains(e.path))
@@ -1617,8 +1524,8 @@ object SnapshotStore {
     // tombstones — carried-and-untombstoned files are never opened
     val beforeFiles = changed(fromEs, toPaths)
     val afterFiles = changed(toEs, fromPaths)
-    val before = readFilesResolved(spark, root, fs, beforeFiles, fromTombs, schema)
-    val after = readFilesResolved(spark, root, fs, afterFiles, toTombs, schema)
+    val before = readFilesResolved(spark, h, beforeFiles, fromTombs)
+    val after = readFilesResolved(spark, h, afterFiles, toTombs)
     // One-sided fast paths: when a side of the manifest diff names NO
     // files, the multiset difference degenerates (X ∖ ∅ = X, ∅ ∖ X = ∅)
     // — return the surviving side directly, zero exchanges. A pure APPEND
@@ -1692,18 +1599,17 @@ object SnapshotStore {
                      fromV: Long, toV: Long): Seq[DataFrame] = {
     require(1L <= fromV && fromV <= toV,
       s"changeFeedLegs: bad version range [$fromV, $toV]")
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val schema = tableSchema(fs, root)
+    val h = headOf(spark, path)
+    val schema = h.schema
     val appendOps = Set("create", "append", "append_dedup")
-    val markers = (fromV to toV).map(w => w -> markerFields(fs, root, w)).toMap
+    val markers = (fromV to toV).map(w => w -> markerFields(h, w)).toMap
     def pureAppend(v: Long): Boolean = {
       val f = markers(v)
       f.get("op").exists(appendOps.contains) && f.get("removes").contains("0") &&
         // vacuum may delete the oldest KEPT version's delta segment (its
         // fold rides the checkpoint): such a version must take the
         // fold-based diff step, never the segment-read run
-        fs.exists(manifestDir(root, v))
+        h.segments.contains(v)
     }
     // group the range into maximal append runs and single diff steps
     val groups = scala.collection.mutable.ArrayBuffer.empty[Either[Seq[Long], Long]]
@@ -1716,27 +1622,25 @@ object SnapshotStore {
       } else if (!markers(v).get("op").contains("compact")) groups += Right(v)
       v += 1
     }
-    // diff steps share boundary folds (step v needs v-1 and v; adjacent
-    // diff steps share the middle version's fold through this cache)
-    val splits = scala.collection.mutable.Map.empty[Long, (Seq[FileEntry], Seq[FileEntry])]
-    def splitOf(w: Long) = splits.getOrElseUpdate(w, liveSplit(spark, path, w))
+    // diff steps share boundary folds through the head (step v needs v-1
+    // and v; adjacent diff steps fold the middle version once)
     def emptyLeg: DataFrame =
       emptyChanges(spark, schema).withColumn("_commit_version", lit(fromV))
     if (groups.isEmpty) return Seq(emptyLeg)
     groups.toSeq.flatMap {
       case Right(1L) => // non-append v1 (e.g. publish): the full snapshot
-        val (es, tombs) = splitOf(1L)
-        Seq(readFilesResolved(spark, root, fs, es, tombs, schema)
+        val (es, tombs) = h.live(1L)
+        Seq(readFilesResolved(spark, h, es, tombs)
           .withColumn("change_type", lit("insert"))
           .withColumn("_commit_version", lit(1L)))
       case Right(w) =>
-        Seq(changesBetweenSplits(spark, root, fs, splitOf(w - 1), splitOf(w))
+        Seq(changesBetweenSplits(spark, h, h.live(w - 1), h.live(w))
           .withColumn("_commit_version", lit(w)))
       case Left(run) =>
         // every added data file of the run, tagged with the version of
         // the SEGMENT it was read from — driver reads, no job
         val adds: Seq[(Long, String)] = run.flatMap(w =>
-          readSegment(fs, root, manifestDir(root, w))
+          readSegment(h, manifestDir(h.root, w))
             .filter(r => r.action == "add" && r.kind == "data").map(r => (w, r.path)))
         val dirForm = "^data/c([0-9]+)(-[^/]*)?/[^/]+$".r
         if (adds.isEmpty) Seq(emptyLeg)
@@ -1746,7 +1650,7 @@ object SnapshotStore {
           // directory (data/c<v>-…) is the version, end-anchored so no
           // upstream path component can shadow it
           Seq(spark.read.schema(schema)
-            .parquet(adds.map { case (_, rel) => new Path(root, rel).toString }: _*)
+            .parquet(adds.map { case (_, rel) => new Path(h.root, rel).toString }: _*)
             .withColumn("change_type", lit("insert"))
             .withColumn("_commit_version",
               regexp_extract(input_file_name(),
@@ -1756,7 +1660,7 @@ object SnapshotStore {
           // scan leg per version, still no manifest folds)
           adds.groupBy(_._1).toSeq.sortBy(_._1).map { case (w, rels) =>
             spark.read.schema(schema)
-              .parquet(rels.map { case (_, rel) => new Path(root, rel).toString }: _*)
+              .parquet(rels.map { case (_, rel) => new Path(h.root, rel).toString }: _*)
               .withColumn("change_type", lit("insert"))
               .withColumn("_commit_version", lit(w))
           }
@@ -1777,10 +1681,9 @@ object SnapshotStore {
     * deleted, versions dropped). */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int): (Long, Long) = {
     require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    Lease.withLease(fs, root, "snapshot vacuum") {
-      val vs = versions(spark, path)
+    leased(spark, path, "snapshot vacuum") { h =>
+      val (root, fs) = (h.root, h.fs)
+      val vs = h.versions
       require(vs.nonEmpty, s"no committed snapshot at $path")
       val (dropped, kept) = vs.splitAt(math.max(0, vs.size - keepVersions))
       val oldest = kept.head
@@ -1792,23 +1695,22 @@ object SnapshotStore {
       //    checkpoint is physically down — a swallowed write failure here
       //    would otherwise compute `referenced` without the pre-window
       //    live files (data loss) and leave kept folds without a segment.
-      if (dropped.nonEmpty && !ckptVersions(fs, root).contains(oldest))
-        writeCheckpoint(root, fs, oldest)
+      if (dropped.nonEmpty && !h.ckpts.contains(oldest))
+        writeCheckpoint(h, oldest, h.fold(oldest))
       if (dropped.nonEmpty) require(fs.exists(ckptDir(root, oldest)),
         s"vacuum: checkpoint at oldest kept version $oldest missing at $root " +
           "— refusing to drop deltas/files without their covering checkpoint")
       // a marker-less manifest ABOVE the committed head is an in-flight
       // write-audit-publish staging: its files are protected (abandon is
       // the explicit cleanup), unlike tmp-* dirs which are always garbage
-      val sdList = fs.listStatus(snapDir(root)).iterator.map(_.getPath.getName).toSeq
-      val staged = sdList.filter(_.startsWith("v"))
-        .flatMap(n => n.stripPrefix("v").toLongOption)
-        .filter(v => v > vs.last && !fs.exists(markerPath(root, v)))
+      val staged = h.segments.filter(_ > vs.last).toSeq.sorted
       // 2. referenced = every path some kept version's fold can name: all
       //    add rows across the kept window's segments (the checkpoint
       //    covers everything older) plus staged deltas — one distributed
       //    pass, collect only the final path set
-      val c = ckptVersions(fs, root).filter(_ <= oldest).lastOption.getOrElse(0L)
+      val c =
+        if (dropped.nonEmpty) oldest // the checkpoint required above
+        else h.ckpts.filter(_ <= oldest).lastOption.getOrElse(0L)
       val keptSegs = (if (c > 0) Seq(ckptDir(root, c)) else Nil) ++
         ((c + 1) to vs.last).map(manifestDir(root, _)) ++
         staged.map(manifestDir(root, _))
@@ -1828,15 +1730,11 @@ object SnapshotStore {
       // checkpoint; stale checkpoints below it serve no kept fold
       if (dropped.nonEmpty) {
         fs.delete(manifestDir(root, oldest), true)
-        ckptVersions(fs, root).filter(_ < oldest)
-          .foreach(cv => fs.delete(ckptDir(root, cv), true))
+        h.ckpts.filter(_ < oldest).foreach(cv => fs.delete(ckptDir(root, cv), true))
       }
       // crashed committers/checkpointers: tmp dirs never referenced
-      val sd = snapDir(root)
-      fs.listStatus(sd).iterator.filter { s =>
-        val n = s.getPath.getName
-        n.startsWith("tmp-") || n.startsWith("tmpckpt-")
-      }.foreach(s => fs.delete(s.getPath, true))
+      h.names.filter(n => n.startsWith("tmp-") || n.startsWith("tmpckpt-"))
+        .foreach(n => fs.delete(new Path(snapDir(root), n), true))
       // DISTRIBUTED GC: the driver lists only the FIRST-LEVEL commit dirs
       // (O(commits in the table's history) — bounded, and itself pruned by
       // vacuum each run); executors list the files inside each dir; the

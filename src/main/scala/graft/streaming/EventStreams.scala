@@ -428,10 +428,9 @@ object EventStreams {
                                 checkpointDir: String, threshold: Double): Unit = {
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    // maxFilesPerTrigger is a writer option here, which the file source
-    // never reads: every file landed before the drain folds in one batch
-    Drain.batches(spark.readStream.schema(docSchema).json(landingDir),
-      checkpointDir, "maxFilesPerTrigger" -> "1") { (batch, _) =>
+    Drain.batches(spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1").json(landingDir),
+      checkpointDir) { (batch, _) =>
       val s = batch.sparkSession
       // consumed by the index fold and the probe: materialize once
       val newDocs = batch.localCheckpoint(true)
@@ -467,9 +466,9 @@ object EventStreams {
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
-    // a writer option, as in mineNearDupsStreamIndexed: not a slicing
-    Drain.batches(spark.readStream.schema(schema).parquet(landingDir),
-      checkpointDir, "maxFilesPerTrigger" -> "1") { (batch, _) =>
+    Drain.batches(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(landingDir),
+      checkpointDir) { (batch, _) =>
       val s = batch.sparkSession
       // consumed by seed-order scan + assignment (+ Lloyd iterations on
       // bootstrap): materialize once

@@ -46,6 +46,19 @@ class ParitySpec extends AnyFunSuite {
       .map(r => r.getAs[String]("flr_id") -> r.getAs[String]("class_type")).toMap
     assert(byKey.size == 7)
     assert(byKey("2025-05-29T19:46:00-FLR-001") == "M3.1") // batch A's version
+    // key not the first column: the anti-join must not move it to the
+    // front of the second batch's files (a using-join puts keys first,
+    // and a table read takes its schema from whichever footer it opens)
+    val keyLast = Files.createTempDirectory("graft_test_kl_").toString + "/t"
+    def reorder(df: org.apache.spark.sql.DataFrame) =
+      df.select((df.columns.filterNot(_ == "flr_id") :+ "flr_id").map(col): _*)
+    DedupAppend.append(spark, reorder(a), keyLast, Seq("flr_id"), Seq("class_type", "link"))
+    DedupAppend.append(spark, reorder(b), keyLast, Seq("flr_id"), Seq("class_type", "link"))
+    val parts = new java.io.File(keyLast).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(parts.size >= 2)
+    parts.foreach(p => assert(spark.read.parquet(p).columns.toSeq == reorder(a).columns.toSeq, p))
+    assert(spark.read.parquet(keyLast).count() == 7)
   }
 
   test("in-batch dedup picks deterministic survivor regardless of row order") {
